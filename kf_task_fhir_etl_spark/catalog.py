@@ -110,9 +110,8 @@ def cached_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the table therefore gets a fresh probe instead of a memoized DataFrame
     whose captured file listing points at deleted part files
     (FileNotFoundException until JVM restart — r06 review). The check is
-    INTERNAL so every caller inherits it; fingerprint-keyed rebuild callers
-    (q85/q115's ``run_pipeline(memo_key=...)``) need no extra threading.
-    Callers that need an unconditional fresh probe use ``load_table``."""
+    INTERNAL so every caller inherits it. Callers that need an
+    unconditional fresh probe use ``load_table``."""
     app = spark.sparkContext.applicationId
     key = (app, sf_dir, name)
     if not os.path.exists(table_path(sf_dir, name)):

@@ -21,8 +21,7 @@ a real FHIR server.
 
 from __future__ import annotations
 
-import itertools
-import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +42,6 @@ def cache_snapshot(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
 def build_resources(
     transformed: TransformResult,
     metadata: DataFrame | None = None,
-    parallelism: int = 8,
 ) -> dict[str, DataFrame]:
     """Run every applicable builder; returns {target_name: resource_df}
     in dependency order.
@@ -55,7 +53,7 @@ def build_resources(
     the win is real but bounded — measured ~0.9 s off q85's 9.2 s warm
     wall at sf0.1 for the 16-builder set. Results are re-ordered to
     ``transformed.targets`` so load-time referential integrity is
-    unaffected. ``parallelism=1`` restores sequential construction."""
+    unaffected."""
     # partial-presence wide tables lack cross-entity columns builders
     # reference unconditionally — pad them null (presence-sensitive
     # SEQUENCING columns excepted; see mappings.DYNAMIC_PRESENCE_COLUMNS).
@@ -78,23 +76,38 @@ def build_resources(
             return target, module.build(table, metadata=metadata)
         return target, module.build(table)
 
-    if parallelism > 1 and len(jobs) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=parallelism) as ex:
-            built = dict(ex.map(_build, jobs))
-    else:
-        built = dict(map(_build, jobs))
+    with ThreadPoolExecutor(max_workers=8) as ex:
+        built = dict(ex.map(_build, jobs))
     return {target: built[target] for target, _, _ in jobs}
+
+
+def _checkpoint_tables(transformed: TransformResult, overlap=lambda: None):
+    """Eagerly ``localCheckpoint`` every transform output, replacing
+    ``transformed.tables`` entries with the checkpointed frames — the Spark
+    analogue of the reference materializing the wide pandas frame in RAM
+    (``etl/ingest.py:485``). The FR and wide cascades are independent jobs,
+    so they materialize concurrently (the scheduler interleaves their
+    stages). Each materialization is a blocking py4j call executing
+    JVM-side (it releases the GIL), so ``overlap`` — a zero-argument
+    callable — runs on the calling thread meanwhile; its result is
+    returned."""
+    with ThreadPoolExecutor(max_workers=max(1, len(transformed.tables))) as ex:
+        futures = {
+            key: ex.submit(df.localCheckpoint, eager=True)
+            for key, df in transformed.tables.items()
+        }
+        result = overlap()
+        for key, fut in futures.items():
+            transformed.tables[key] = fut.result()
+    return result
 
 
 def build_resources_union(
     transformed: TransformResult,
     metadata: DataFrame | None = None,
-    checkpoint: bool = False,
 ) -> DataFrame:
     """Fused single-pass build: ONE select over ONE scan of the
-    (checkpointed) wide table emits every row-wise builder's
+    checkpointed wide table emits every row-wise builder's
     ``(target, resource_type, target_id, resource_json)`` struct — 13
     serialized resources per input row via an array of null-able elements
     + explode — followed by one dedupe shuffle on (target, target_id).
@@ -113,25 +126,20 @@ def build_resources_union(
     dependency-ordered load); use this when the consumer wants the union
     (bulk export, counting gates).
 
-    ``checkpoint=True`` folds the eager ``localCheckpoint`` of the transform
-    outputs INTO this call and OVERLAPS it with plan construction: the
-    materialization is a blocking py4j call executing JVM-side (it releases
-    the GIL), while the 13 fused builder ``plan()`` expressions are pure
-    ``F.col`` trees that never consult their DataFrame argument (pinned in
-    tests/test_builders.py) — so the main thread builds them concurrently
-    under the running cascade instead of after it (measured ~3 s of the q85
-    cold wall at sf0.1). The aggregating classic builders DO derive plans
-    from their input table, so they are constructed after the checkpoint
-    lands, against the truncated lineage. ``transformed.tables`` is mutated
-    to the checkpointed frames (same contract as ``run_pipeline``'s own
-    loop) so callers can manage the checkpoint lifecycle."""
+    The eager ``localCheckpoint`` of the transform outputs happens INSIDE
+    this call, OVERLAPPED with plan construction: the 13 fused builder
+    ``plan()`` expressions are pure ``F.col`` trees that never consult
+    their DataFrame argument (pinned in tests/test_builders.py) — so they
+    are built under the running cascade instead of after it (measured ~3 s
+    of the q85 cold wall at sf0.1). The aggregating classic builders DO
+    derive plans from their input table, so they are constructed after
+    the checkpoint lands, against the truncated lineage.
+    ``transformed.tables`` is mutated to the checkpointed frames (see
+    ``_checkpoint_tables``)."""
     from kf_task_fhir_etl_spark.builders.base import fused_element
 
     # applicability is decided on table PRESENCE alone; padding happens
-    # once per mode below (r06 review: the checkpoint path previously built
-    # pre-checkpoint pads here only to discard and rebuild every one of
-    # them post-checkpoint — pure wasted py4j expression construction on
-    # the exact path this function exists to optimize)
+    # once, after the checkpoint
     fused_jobs: list[tuple[str, object, str]] = []
     classic_jobs: list[tuple[str, object, str]] = []
     for target in transformed.targets:
@@ -143,15 +151,11 @@ def build_resources_union(
         else:
             classic_jobs.append((target, module, table_key))
 
-    def _element(job: tuple[str, object, str], padded_map: dict[str, DataFrame] | None):
-        target, module, table_key = job
+    def _element(job: tuple[str, object, str]):
+        target, module, _ = job
         # fused plan() expressions never consult their DataFrame argument
-        # (pinned via plan(None) in tests/test_builders.py), so the
-        # overlapped checkpoint path passes None instead of constructing a
-        # padded frame nobody reads
-        tid, resource, keep = module.plan(
-            None if padded_map is None else padded_map[table_key]
-        )
+        # (pinned via plan(None) in tests/test_builders.py)
+        tid, resource, keep = module.plan(None)
         return fused_element(target, module.API_PATH, tid, resource, keep)
 
     def _classic(job: tuple[str, object, str], padded_map: dict[str, DataFrame]) -> DataFrame:
@@ -166,32 +170,16 @@ def build_resources_union(
             F.lit(target).alias("target"), "resource_type", "target_id", "resource_json"
         )
 
-    # expression construction is py4j-round-trip-bound (same rationale and
-    # measured win as build_resources' pool); element order follows
-    # transformed.targets either way
-    from concurrent.futures import ThreadPoolExecutor
-
-    if checkpoint:
-        with ThreadPoolExecutor(max_workers=max(1, len(transformed.tables))) as ckex:
-            futures = {
-                key: ckex.submit(df.localCheckpoint, eager=True)
-                for key, df in transformed.tables.items()
-            }
-            # overlapped: pure-expression construction under the running jobs
-            elems = [_element(job, None) for job in fused_jobs]
-            for key, fut in futures.items():
-                transformed.tables[key] = fut.result()
-    # pad ONCE per table_key — against the truncated lineage when the
-    # branch above checkpointed — and share across the classic jobs AND
-    # the fused scan (two consumers of one table_key must not pad twice —
-    # construction cost is the measured bottleneck here). One shared block
-    # for both modes so padding/dispatch cannot drift between them (r06
-    # review, 11th pass).
+    elems = _checkpoint_tables(transformed, lambda: [_element(job) for job in fused_jobs])
+    # pad ONCE per table_key against the truncated lineage and share across
+    # the classic jobs AND the fused scan (two consumers of one table_key
+    # must not pad twice — construction cost is the measured bottleneck)
     pad_keys = {j[2] for j in classic_jobs} | {j[2] for j in fused_jobs}
     padded = {tk: pad_concepts(transformed.tables[tk]) for tk in pad_keys}
+    # classic construction is py4j-round-trip-bound (same rationale and
+    # measured win as build_resources' pool); order follows
+    # transformed.targets
     with ThreadPoolExecutor(max_workers=8) as ex:
-        if not checkpoint:
-            elems = list(ex.map(lambda j: _element(j, padded), fused_jobs))
         classic = list(ex.map(lambda j: _classic(j, padded), classic_jobs))
     fused = None
     if elems:
@@ -221,78 +209,8 @@ def build_resources_union(
     return fused
 
 
-# Constructed-pipeline memo: {(applicationId, group, version, single_pass):
-# (result, [checkpointed DataFrames], (seq_domain, seq))}. The seq is the
-# monotonic ticket ordering constructions (ADVICE r06: versions are opaque
-# tags, so without an order a stale-fingerprint build committing last could
-# transiently displace the fresh entry); its domain ("auto" | "user") keeps
-# default tickets and caller observation counters from being compared
-# (r07 review). See run_pipeline(memo_key=...).
-_PIPELINE_MEMO: dict[
-    tuple[str, str, str, bool], tuple[object, list[DataFrame], tuple[str, int]]
-] = {}
-
-# Monotonic construction tickets for the memo's ordering guard. Default
-# tickets order construction STARTS (allocated right after the miss check);
-# callers that observe their version/fingerprint earlier than they build
-# pass memo_seq explicitly to order by OBSERVATION instead.
-_BUILD_SEQ = itertools.count(1)
-
-# Superseded entries' checkpoint handles await release here, keyed by the
-# same (app, group, version, mode) memo key (see run_pipeline): releasing
-# blocks at the instant of supersede could fail a reader that was served
-# the old entry moments earlier and is still mid-collect (r06 review
-# finding) — an entry is released only when ITS OWN group is superseded
-# AGAIN, so a reader must span two regenerations of one group to lose its
-# blocks (the documented caller contract), and concurrent sweeps of OTHER
-# groups (q115's two-study thread pool) can never drain a grace window
-# they don't own. _MEMO_LOCK orders the pop/retire pairs across threads;
-# retained storage stays bounded at one superseded construction per group.
-_MEMO_LOCK = threading.Lock()
-_RETIRED_CHECKPOINTS: dict[tuple[str, str, str, bool], list[DataFrame]] = {}
-
-# Stale-build parks live in their OWN dict (r07 review, second pass): a
-# stale build parking under its (app, group, version, mode) key must never
-# pop a _RETIRED_CHECKPOINTS entry — that key space holds DISPLACED
-# resident entries whose grace window protects readers served moments
-# before a supersede, and version strings collide exactly in the
-# straggler-commits-last scenario the ordering guard exists for.
-# Each key maps to a list of (handles, survived_one_event) generations so
-# stale callers get the SAME ≥-one-full-generation grace displaced entries
-# get (r07 review, fifth pass — the first cut released a predecessor park
-# at the very next same-key park or supersede, which a concurrent racer
-# could trigger before the first caller ran any action): a same-key
-# re-park appends and releases only beyond TWO resident generations, and
-# a genuine group supersede releases parks that already survived one
-# supersede while merely marking the rest. Bounds: ≤2 constructions per
-# distinct stale key AND ≤4 generations per (app, group, mode) across
-# keys — without the group-wide cap, a backlog of K distinct stale
-# versions (data regenerated K times while a build queue backed up)
-# would pin K full constructions simultaneously (r07 review, ninth
-# pass); when the cap binds, the OLDEST generation group-wide is
-# released even if its per-key grace has not elapsed — bounded memory
-# wins over grace in a stale-build storm, and the failure stays loud
-# (a released construction's re-execution raises). Entries carry a
-# monotonic park stamp for that group-wide age order; all parks drop
-# with their app.
-_STALE_PARKS: dict[
-    tuple[str, str, str, bool], list[tuple[list[DataFrame], bool, int]]
-] = {}
-_STALE_PARK_STAMP = itertools.count(1)
-_STALE_PARKS_GROUP_CAP = 4
-
-# Monotone count of memo re-serves (run_pipeline hit path + the
-# memoized_pipeline probe). bench.py reads it around each query's repeat
-# runs to DETECT memoization instead of maintaining a hardcoded name set —
-# a set the next memo_key adopter would silently not be in, re-blending
-# the cold/warm accounting r05 verdict #5 banned (r06 review).
+# bench.py reads this to detect memoized gates; nothing memoizes, so it stays 0.
 MEMO_HIT_COUNT = 0
-
-
-def _count_memo_hit() -> None:
-    global MEMO_HIT_COUNT
-    with _MEMO_LOCK:
-        MEMO_HIT_COUNT += 1
 
 
 def release_checkpoints(dfs: list[DataFrame], blocking: bool = True) -> None:
@@ -300,19 +218,17 @@ def release_checkpoints(dfs: list[DataFrame], blocking: bool = True) -> None:
     ``localCheckpoint``ed DataFrames. ``del`` alone only drops the Python
     reference — block release would wait on Python GC plus Spark's
     ContextCleaner (r05 ADVICE) — whereas unpersisting the LogicalRDD's
-    underlying RDD frees the blocks (and makes the evicted frames fail
-    loudly if ever re-executed, which superseded memo entries never should
-    be). BLOCKING unpersist: the non-blocking form returns before the
-    BlockManager removal lands, so 'blocks are gone when this returns' —
-    the contract the release-then-assert callers and the pinned test rely
-    on — would only be eventually true (r06 review). This runs on the
-    rare supersede path, never per-query. ``blocking=False`` is for
-    superseded ITERATION state (operators/graph.py's per-round vectors)
-    where nothing synchronizes on the removal. This is the ONE audited
-    home of the py4j LogicalRDD reach-through (r06 review: hand-rolled
-    copies would silently degrade independently on a Spark upgrade); it
-    degrades to the GC path on any reflection failure rather than
-    breaking eviction."""
+    underlying RDD frees the blocks (and makes the released frames fail
+    loudly if ever re-executed). BLOCKING unpersist: the non-blocking form
+    returns before the BlockManager removal lands, so 'blocks are gone
+    when this returns' — the contract the release-then-assert callers and
+    the pinned test rely on — would only be eventually true (r06 review).
+    ``blocking=False`` is for superseded ITERATION state
+    (operators/graph.py's per-round vectors) where nothing synchronizes on
+    the removal. This is the ONE audited home of the py4j LogicalRDD
+    reach-through (r06 review: hand-rolled copies would silently degrade
+    independently on a Spark upgrade); it degrades to the GC path on any
+    reflection failure rather than breaking eviction."""
     for df in dfs:
         try:
             df._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
@@ -320,368 +236,30 @@ def release_checkpoints(dfs: list[DataFrame], blocking: bool = True) -> None:
             pass  # deferred to GC + ContextCleaner
 
 
-def memoized_pipeline(
-    spark, memo_key: tuple[str, str], single_pass: bool = False
-):
-    """Stat-only memo probe: the result ``run_pipeline(memo_key=...)``
-    would re-serve for ``(group, version, mode)``, or None. Resident-driver
-    callers check this FIRST — a warm hit then skips endpoint-table plan
-    construction entirely (q85 builds ~15 table selects/joins just to
-    reach run_pipeline's own hit check, which never reads them; r06
-    review). The caller owns key correctness exactly as for run_pipeline."""
-    group, version = memo_key
-    key = (spark.sparkContext.applicationId, group, version, single_pass)
-    with _MEMO_LOCK:
-        hit = _PIPELINE_MEMO.get(key)
-    if hit is None:
-        return None
-    _count_memo_hit()
-    # dict mode serves a SHALLOW COPY: the memo must not share a mutable
-    # dict with callers — out.pop('Patient') on a served result would
-    # silently poison every later hit for this key (r06 review). The
-    # DataFrames inside are immutable plans; sharing them is the point.
-    return dict(hit[0]) if isinstance(hit[0], dict) else hit[0]
-
-
 def run_pipeline(
     endpoint_tables: dict[str, DataFrame],
     metadata: DataFrame | None = None,
-    cache_wide: bool = False,
-    checkpoint_wide: bool = True,
     single_pass: bool = False,
-    memo_key: tuple[str, str] | None = None,
-    memo_seq: int | None = None,
 ):
-    """extract(already-loaded tables) → transform → build.
+    """extract(already-loaded tables) → transform → checkpoint → build.
 
-    ``single_pass=True`` returns ONE unioned DataFrame via
-    ``build_resources_union`` (fused scan) instead of the per-target dict
-    — the mode for union consumers (bulk export, q85).
+    One straight path, as the reference's ``Ingest`` runs once per study:
+    ``transform_study``, then an eager ``localCheckpoint`` of the transform
+    outputs (``_checkpoint_tables``), then the builders. The checkpoint
+    truncates the 12-join cascade out of every builder's logical plan, so
+    Catalyst analyzes/optimizes the cascade ONCE instead of 16× (measured
+    at sf0.01: downstream optimize+execute of the 16-builder union drops
+    10.4 s → 0.4 s for a one-time ~2.5 s materialization; end-to-end
+    ~18 s → ~9 s) — one wide-table materialization versus sixteen
+    re-executions of the join cascade, strictly fewer shuffles.
 
-    ``checkpoint_wide`` (default ON): eagerly ``localCheckpoint`` the
-    transform outputs before the 16 builders consume them — the Spark
-    analogue of the reference materializing the wide pandas frame in RAM
-    (``etl/ingest.py:485``). This truncates the 12-join cascade out of
-    every builder's logical plan, so Catalyst analyzes/optimizes the
-    cascade ONCE instead of 16× (measured at sf0.01: downstream
-    optimize+execute of the 16-builder union drops 10.4 s → 0.4 s for a
-    one-time ~2.5 s materialization; end-to-end ~18 s → ~9 s). At scale
-    the trade is the same one the reference already makes: one wide-table
-    materialization versus sixteen re-executions of the join cascade —
-    strictly fewer shuffles. Set False to keep the pipeline fully lazy
-    (e.g. when only one builder's output will ever be consumed and the
-    optimizer's column pruning makes its single cascade pass cheap).
-
-    ``cache_wide``: legacy knob — ``.cache()`` the transform outputs
-    without truncating lineage. Superseded by ``checkpoint_wide`` (cache
-    keeps the full cascade in every builder's analyzed plan, so it saved
-    recomputation but not the dominant plan-construction cost; measured
-    it *added* 3 s at sf0.01).
-
-    ``memo_key=(group, version)`` opts into the resident-driver steady
-    state (VERDICT r05 #1 — previously a gate-level memo unreachable by
-    product callers): the constructed pipeline (checkpointed wide tables +
-    built plans) is memoized per (applicationId, group, version, mode) and
-    re-served to later calls, which then pay only distributed re-execution
-    — exactly how a resident ETL driver serves consumers from a study
-    snapshot it constructed once. The CALLER owns key correctness: the key
-    must capture every input that shapes the plan (source data identity —
-    e.g. ``catalog.content_fingerprint`` — plus metadata identity). A new
-    ``version`` under the same ``group`` supersedes the old entry; its
-    checkpointed blocks are explicitly released (``release_checkpoints``)
-    only when THAT group is superseded again — immediate release could
-    fail a reader that was served the old entry moments earlier and is
-    still executing it, so superseded handles park per-group in
-    ``_RETIRED_CHECKPOINTS`` for one same-group regeneration of grace
-    (readers spanning two regenerations of one group must re-request).
-    Entries from dead applications are dropped (their py4j plan references
-    are unusable). Memoization requires ``checkpoint_wide`` (a memo over
-    un-truncated lineage would re-execute the cascade anyway).
-
-    Ordering guard (ADVICE r06 — closes the prior residual): versions are
-    opaque tags, so constructions carry a monotonic ``build_seq`` ticket
-    and an OLDER construction can never displace a NEWER resident entry.
-    A build that loses this comparison (e.g. a stale-fingerprint build
-    committing after the fresh one during an in-place data regeneration)
-    still returns its own constructed result to its own caller — it asked
-    for that version — but does NOT enter the memo; its checkpoint blocks
-    park in the stale-park dict (separate from displaced-entry
-    retirements, whose keys a straggler's version string can collide
-    with) with ONE full generation of grace: release happens on the
-    SECOND same-key stale retry, or at the first genuine group supersede
-    AFTER the park has survived one (up to two parked constructions per
-    stale key in the interim — size BlockManager headroom accordingly).
-    Hard bound: at most ``_STALE_PARKS_GROUP_CAP`` (=4) parked
-    constructions per (group, mode) across ALL stale keys — beyond that
-    the OLDEST park by event stamp is released regardless of whether its
-    caller's terminal action has run. Under a stale-build storm (≥5
-    concurrent stale builds of one group) a slow caller can therefore see
-    its checkpoint blocks unpersisted mid-use; the failure is loud
-    (re-execution of a released localCheckpoint raises). Resident drivers
-    that regenerate data under live readers should pace rebuilds so no
-    more than 4 stale constructions of a group are in flight at once.
-    By default tickets are
-    allocated when construction starts (after the miss check), which
-    covers the started-first/committed-last inversion; a caller whose
-    version observation happens well before its build (read fingerprint,
-    queue work, build later) passes ``memo_seq`` — any monotonic
-    observation counter — to order by observation instead. Tickets carry
-    their domain: default tickets and caller-supplied ones are
-    INCOMPARABLE counters, so a group must use one domain consistently —
-    mixing raises rather than silently marking every default-ticket
-    build of the group stale forever (r07 review)."""
-    if memo_key is not None and not (checkpoint_wide and not cache_wide):
-        raise ValueError("memo_key requires checkpoint_wide=True (and not cache_wide)")
-    if memo_seq is not None and memo_key is None:
-        # always a caller bug: the observation ticket would be silently
-        # discarded — no memoization, no ordering guard (r07 review,
-        # fourth pass; same contract as the memo_key/checkpoint_wide check)
-        raise ValueError("memo_seq requires memo_key")
-    spark = next(iter(endpoint_tables.values())).sparkSession if endpoint_tables else None
-    full_key = None
-    if memo_key is not None and spark is not None:
-        group, version = memo_key
-        app = spark.sparkContext.applicationId
-        full_key = (app, group, version, single_pass)
-        # one hit path: memoized_pipeline owns key assembly, locking, and
-        # hit accounting (r06 review: an inline duplicate had already
-        # drifted on lock discipline)
-        hit_result = memoized_pipeline(spark, memo_key, single_pass)
-        if hit_result is not None:
-            return hit_result
-    # construction ticket: allocated AFTER the miss check so a hit never
-    # burns one, BEFORE construction so commit order cannot reorder starts.
-    # The ticket carries its DOMAIN ("user" = caller's observation counter,
-    # "auto" = _BUILD_SEQ): the two counters are incomparable — one
-    # time.monotonic_ns()-scale user ticket would otherwise mark every
-    # later default-ticket build of the group permanently stale, silently
-    # rebuilding forever (r07 review) — so mixing domains within one group
-    # raises instead of comparing garbage.
-    if full_key is not None:
-        my_seq = (
-            ("user", memo_seq) if memo_seq is not None else ("auto", next(_BUILD_SEQ))
-        )
-        # fail-FAST domain pre-check (r07 review, eighth pass): the clash
-        # is knowable now, before seconds of construction are spent and
-        # thrown away at the commit-time check — which stays as the
-        # race-safe backstop (another thread can insert the first entry
-        # of the other domain between here and commit)
-        with _MEMO_LOCK:
-            for k, v in _PIPELINE_MEMO.items():
-                # k == full_key is skipped to mirror the commit-time loop
-                # (r07 ADVICE): a re-request of the SAME resident
-                # (group, version, mode) is served from the memo at commit
-                # regardless of ticket domain, so raising here would make
-                # the outcome depend on timing, not on the call
-                if (
-                    k[0] == full_key[0]
-                    and (k[1], k[3]) == (full_key[1], full_key[3])
-                    and k != full_key
-                    and v[2][0] != my_seq[0]
-                ):
-                    raise ValueError(
-                        f"run_pipeline: memo group {full_key[1]!r} mixes "
-                        f"{v[2][0]!r}-domain and {my_seq[0]!r}-domain build "
-                        "tickets — pass memo_seq for ALL builds of a group "
-                        "or for none (the counters are incomparable)"
-                    )
-    else:
-        my_seq = ("auto", 0)
-
+    Returns the per-target dict from ``build_resources`` (the
+    dependency-ordered load). ``single_pass=True`` returns ONE unioned
+    DataFrame via ``build_resources_union`` (fused scan, checkpoint
+    overlapped with plan construction) — the mode for union consumers
+    (bulk export, q85)."""
     transformed = transform_study(endpoint_tables)
-    if cache_wide:
-        for key, df in transformed.tables.items():
-            transformed.tables[key] = df.cache()
-        out = (
-            build_resources_union(transformed, metadata=metadata)
-            if single_pass
-            else build_resources(transformed, metadata=metadata)
-        )
-    elif single_pass and checkpoint_wide:
-        # checkpoint + construction overlapped inside the union build
-        out = build_resources_union(transformed, metadata=metadata, checkpoint=True)
-    else:
-        if checkpoint_wide:
-            # FR and wide cascades are independent jobs — materialize them
-            # concurrently (the scheduler interleaves their stages)
-            from concurrent.futures import ThreadPoolExecutor
-
-            keys = list(transformed.tables)
-            with ThreadPoolExecutor(max_workers=max(1, len(keys))) as ex:
-                cks = list(
-                    ex.map(
-                        lambda k: transformed.tables[k].localCheckpoint(eager=True), keys
-                    )
-                )
-            transformed.tables.update(zip(keys, cks))
-        out = (
-            build_resources_union(transformed, metadata=metadata)
-            if single_pass
-            else build_resources(transformed, metadata=metadata)
-        )
-
-    if full_key is not None:
-        app, group = full_key[0], full_key[1]
-        # evict: superseded versions of this (app, group, mode) and every
-        # entry of dead applications. Block release is DEFERRED per group
-        # (_RETIRED_CHECKPOINTS, see its comment): a reader served the old
-        # entry just before this supersede may still be executing it, and
-        # unpersisting under its running job would fail a legitimately-
-        # served plan — so this supersede releases only the PREVIOUS
-        # retirement of this same group and parks the newly superseded
-        # handles in its place. Readers that span TWO regenerations of one
-        # memoized group must re-request; that residual contract is on the
-        # caller, same as the single-writer store sinks.
-        to_release: list[list[DataFrame]] = []
-        ck_handles = [df for df in transformed.tables.values()] if checkpoint_wide else []
-        with _MEMO_LOCK:
-            # sweep + insert under ONE lock hold: sweeping before inserting
-            # in separate critical sections would let two concurrent builds
-            # of the same group (different versions, straddling a data
-            # regeneration) each sweep before the other inserted — both
-            # entries then stay resident for the application lifetime,
-            # breaking the one-superseded-construction-per-group bound
-            # (r06 review)
-            parked_now: set[tuple[str, str, str, bool]] = set()
-            # ordering guard (ADVICE r06): if a SAME-(group, mode) entry
-            # with a newer (or equal — caller-supplied observation ticket
-            # ties break toward the resident) build_seq is already
-            # resident, THIS construction is the stale one. It must not
-            # displace anything or enter the memo: serve its own caller,
-            # park its blocks in the group's retirement list (released on
-            # the group's next supersede, the displaced-entry lifecycle).
-            i_am_stale = False
-            domain_clash: str | None = None
-            for k, v in _PIPELINE_MEMO.items():
-                if (
-                    k[0] != app
-                    or (k[1], k[3]) != (group, full_key[3])
-                    or k == full_key
-                ):
-                    continue
-                if v[2][0] != my_seq[0]:
-                    domain_clash = v[2][0]
-                    break
-                if v[2][1] >= my_seq[1]:
-                    i_am_stale = True
-            if domain_clash is not None:
-                # raise OUTSIDE the lock, after releasing this build's own
-                # checkpoints — the construction was never served to
-                # anyone, and raising with the wide frames still pinned
-                # would leak one construction per retry (r07 review,
-                # second pass)
-                entry = None
-            elif i_am_stale:
-                # Park in _STALE_PARKS, never _RETIRED_CHECKPOINTS: the
-                # retirement dict's same-shaped key may hold the just-
-                # DISPLACED resident entry's grace-window handles (a
-                # straggler build shares its version string with the entry
-                # it lost to), and popping those would fail a reader
-                # served moments before the supersede (r07 review, second
-                # pass). Generational bound: release only beyond two
-                # resident same-key parks, so a park always survives at
-                # least one subsequent event (fifth pass — a concurrent
-                # same-key racer must not free the construction another
-                # thread is about to hand its caller).
-                gens = _STALE_PARKS.setdefault(full_key, [])
-                gens.append((ck_handles, False, next(_STALE_PARK_STAMP)))
-                while len(gens) > 2:
-                    to_release.append(gens.pop(0)[0])
-                # group-wide cap across distinct stale keys (ninth pass):
-                # release the oldest-stamped generation until ≤ cap
-                group_keys = [
-                    sk
-                    for sk in _STALE_PARKS
-                    if sk[0] == app and (sk[1], sk[3]) == (group, full_key[3])
-                ]
-                while (
-                    sum(len(_STALE_PARKS[sk]) for sk in group_keys)
-                    > _STALE_PARKS_GROUP_CAP
-                ):
-                    oldest_key = min(
-                        (sk for sk in group_keys if _STALE_PARKS[sk]),
-                        key=lambda sk: _STALE_PARKS[sk][0][2],
-                    )
-                    to_release.append(_STALE_PARKS[oldest_key].pop(0)[0])
-                    if not _STALE_PARKS[oldest_key]:
-                        _STALE_PARKS.pop(oldest_key)
-                        group_keys.remove(oldest_key)
-                entry = None
-            else:
-                for k in list(_PIPELINE_MEMO):
-                    if k[0] != app:
-                        _PIPELINE_MEMO.pop(k, None)  # dead app: blocks died with its JVM
-                    elif (k[1], k[3]) == (group, full_key[3]) and k != full_key:
-                        stale = _PIPELINE_MEMO.pop(k, None)
-                        if stale is not None:
-                            _RETIRED_CHECKPOINTS[k] = stale[1]
-                            parked_now.add(k)
-                # drop dead apps' retirements (their blocks died with the
-                # JVM), then drain this group's retirements from PREVIOUS
-                # supersedes — but ONLY if this sweep actually displaced an
-                # entry: a caller racing the same (group, version) as the
-                # winner parks nothing, and letting it drain would release
-                # the retirement the winner parked moments earlier,
-                # collapsing the grace window after ONE supersede instead
-                # of two (r06 review, sixth pass). Entries parked by THIS
-                # sweep keep their grace window either way.
-                for rk in list(_RETIRED_CHECKPOINTS):
-                    if rk[0] != app:
-                        _RETIRED_CHECKPOINTS.pop(rk, None)
-                    elif (
-                        parked_now
-                        and (rk[1], rk[3]) == (group, full_key[3])
-                        and rk not in parked_now
-                    ):
-                        prev = _RETIRED_CHECKPOINTS.pop(rk, None)
-                        if prev is not None:
-                            to_release.append(prev)
-                # a genuine supersede two-phases the group's STALE parks:
-                # parks that already survived one supersede release now,
-                # the rest are merely marked — so a stale caller served
-                # milliseconds before this supersede keeps its blocks for
-                # one full generation, the displaced-entry grace standard
-                # (r07 review, fifth pass). Dead apps' parks go with
-                # their JVM.
-                for sk in list(_STALE_PARKS):
-                    if sk[0] != app:
-                        _STALE_PARKS.pop(sk, None)
-                    elif parked_now and (sk[1], sk[3]) == (group, full_key[3]):
-                        kept: list[tuple[list[DataFrame], bool, int]] = []
-                        for handles_gen, survived, stamp in _STALE_PARKS[sk]:
-                            if survived:
-                                to_release.append(handles_gen)
-                            else:
-                                kept.append((handles_gen, True, stamp))
-                        if kept:
-                            _STALE_PARKS[sk] = kept
-                        else:
-                            _STALE_PARKS.pop(sk, None)
-                # store a SHALLOW COPY of dict results: the memo must never
-                # share a mutable dict with any caller — including the
-                # builder itself (r06 review; see memoized_pipeline)
-                stored = dict(out) if isinstance(out, dict) else out
-                entry = _PIPELINE_MEMO.setdefault(full_key, (stored, ck_handles, my_seq))
-        for handles in to_release:
-            release_checkpoints(handles)
-        if domain_clash is not None:
-            release_checkpoints(ck_handles)  # never served; free before raising
-            raise ValueError(
-                f"run_pipeline: memo group {group!r} mixes "
-                f"{domain_clash!r}-domain and {my_seq[0]!r}-domain build "
-                "tickets — pass memo_seq for ALL builds of a group or for "
-                "none (the counters are incomparable)"
-            )
-        if entry is None:
-            # stale build: out is this construction's own fresh object,
-            # shared with no memo entry — hand it to the caller un-copied
-            return out
-        if entry[1] is not ck_handles:
-            # two threads raced the same key (handles lists are unique per
-            # construction): serve the winner's plans and release the
-            # duplicate construction's checkpoint blocks (safe immediately
-            # — this construction was never served to anyone)
-            release_checkpoints(ck_handles)
-            won = entry[0]
-            return dict(won) if isinstance(won, dict) else won
-    return out
+    if single_pass:
+        return build_resources_union(transformed, metadata=metadata)
+    _checkpoint_tables(transformed)
+    return build_resources(transformed, metadata=metadata)

@@ -19,8 +19,6 @@ values can never contain those substrings).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,16 +26,6 @@ from kf_task_fhir_etl_spark.builders import patient as patient_builder
 from kf_task_fhir_etl_spark.catalog import cached_table, load_table
 from kf_task_fhir_etl_spark.plans.transform import transform_study
 from kf_task_fhir_etl_spark.queries import register
-
-# Observation tickets for the memo ordering guard (run_pipeline's
-# memo_seq): drawn AT THE MOMENT a gate reads its content fingerprint, so
-# versions are ordered by OBSERVATION, not by when construction reaches
-# run_pipeline — the observe-then-build gap here is ~0.9 s of endpoint-
-# table plan construction (SCALE.md), wide enough for an in-place data
-# regeneration to invert commit order (r07 review, eighth pass; the exact
-# inversion run_pipeline's docstring routes to memo_seq). One shared
-# counter is monotonic for every group it serves.
-_MEMO_OBS_SEQ = itertools.count(1)
 
 # deterministic attribute derivations (mirrored in the SQL oracles)
 _RACE_BY_SEGMENT = {
@@ -1055,26 +1043,9 @@ def q85_fhir_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     1:1 per participant so the wide fan-out stays linear (the combinatorial
     multi-child explosion is the documented reason the narrow path exists;
     this gate proves the wide ORCHESTRATION, the per-builder bytes are
-    q24/q30/q74-q84). Construction is memoized through
-    ``etl.run_pipeline(memo_key=...)`` (r06: the memo moved from this gate
-    into the product API so every caller gets the resident-driver steady
-    state): first call per (session, data fingerprint) pays full
-    construction — the cold run, reported separately by bench.py —
-    subsequent calls re-execute only the distributed work (fused scan,
-    dedupe, aggregate) against the live checkpoint. The correctness gate is
-    valid either way (same plan cold or warm); eviction + block release
-    live in etl.py where all memo policy now resides."""
-    from kf_task_fhir_etl_spark.catalog import cached_table, content_fingerprint
-    from kf_task_fhir_etl_spark.etl import memoized_pipeline, run_pipeline
-
-    fingerprint = content_fingerprint(sf_dir, ["customer", "supplier", "nation", "region"])
-    obs_seq = next(_MEMO_OBS_SEQ)  # observation ticket, taken WITH the fingerprint
-    # warm path: a stat-only probe BEFORE any endpoint-table construction —
-    # run_pipeline's own hit check sits after the caller has already built
-    # ~15 table plans it would never read (r06 review)
-    hit = memoized_pipeline(spark, (f"q85:{sf_dir}", fingerprint), single_pass=True)
-    if hit is not None:
-        return _q85_counts(hit)
+    q24/q30/q74-q84). Every call constructs the pipeline afresh, as the
+    reference's per-study ``Ingest`` does."""
+    from kf_task_fhir_etl_spark.etl import run_pipeline
 
     customer = cached_table(spark, sf_dir, "customer")
     supplier = cached_table(spark, sf_dir, "supplier")
@@ -1158,18 +1129,7 @@ def q85_fhir_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fused one-scan build (etl.build_resources_union); per-builder
     # bytes stay gated by q74-q84, fused ≡ classic pinned in
     # tests/test_builders.py::test_single_pass_union_equals_classic_dict
-    out = run_pipeline(
-        tables,
-        single_pass=True,
-        memo_key=(f"q85:{sf_dir}", fingerprint),
-        memo_seq=obs_seq,
-    )
-    return _q85_counts(out)
-
-
-def _q85_counts(out: DataFrame) -> DataFrame:
-    """q85's gate aggregation — one shared tail for the cold and memoized
-    branches so the output shape cannot diverge between them."""
+    out = run_pipeline(tables, single_pass=True)
     return (
         out.groupBy(F.col("target").alias("resource_type"))
         .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("target_id").alias("n_ids"))
@@ -2392,36 +2352,18 @@ def q115_multi_study_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     other, and distinct-target-id counts must equal emitted counts. The
     thread-pool ≡ sequential equivalence itself is pinned in
     tests/test_transform.py; this gate proves it end-to-end under the
-    driver's oracle. Each study's constructed pipeline is memoized through
-    ``etl.run_pipeline(memo_key=...)`` (r06) — repeat calls re-serve both
-    studies' checkpointed plans, the same steady state q85 models."""
+    driver's oracle. Every call constructs both studies afresh."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from kf_task_fhir_etl_spark.catalog import content_fingerprint
-    from kf_task_fhir_etl_spark.etl import memoized_pipeline, run_pipeline
+    from kf_task_fhir_etl_spark.etl import run_pipeline
 
-    fingerprint = content_fingerprint(sf_dir, ["customer", "nation", "region"])
-    obs_seq = next(_MEMO_OBS_SEQ)  # observation ticket, taken WITH the fingerprint
     c = F.col("c_custkey")
     key_of = F.split(F.col("kf_id"), "_").getItem(1).cast("long")
-
-    # base endpoint plans are built lazily, once, and ONLY on a memo miss —
-    # warm invocations must not pay table construction just to reach a hit
-    # (r06 review); the lock serializes the two cold study threads
-    import threading
-
-    _shared: dict[str, object] = {}
-    _shared_lock = threading.Lock()
-
-    def shared_tables():
-        with _shared_lock:
-            if "base" not in _shared:
-                _shared["base"] = _endpoint_tables(spark, sf_dir)
-                _shared["customer"] = cached_table(spark, sf_dir, "customer")
-        return _shared["base"], _shared["customer"]
+    # base endpoint plans are shared by both studies: built once, up front
+    base = _endpoint_tables(spark, sf_dir)
+    customer = cached_table(spark, sf_dir, "customer")
 
     def study_tables(parity: int) -> dict[str, DataFrame]:
-        base, customer = shared_tables()
         t = {
             "studies": base["studies"],
             "participants": base["participants"].filter(key_of % 2 == parity),
@@ -2451,15 +2393,8 @@ def q115_multi_study_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return t
 
-    def run_study(p: int):
-        key = (f"q115:{sf_dir}:study{p}", fingerprint)
-        hit = memoized_pipeline(spark, key)
-        if hit is not None:
-            return hit
-        return run_pipeline(study_tables(p), memo_key=key, memo_seq=obs_seq)
-
     with ThreadPoolExecutor(max_workers=2) as ex:
-        out_a, out_b = ex.map(run_study, (0, 1))
+        out_a, out_b = ex.map(lambda p: run_pipeline(study_tables(p)), (0, 1))
 
     union = None
     for study, out in (("A", out_a), ("B", out_b)):

@@ -355,31 +355,17 @@ def q08_resource_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Every entry keeps BOTH a queries() and an oracle_sql() registration either
 # way; nothing is retired.
 #
-# r13 composition (exactly 50; OPTIMIZATION round 2 of 2).
-#
-# THE TWELVE r12 WAIVER RETIREES LEAD (VERDICT r12 What's-wrong #1 / Next
-# #1 — the self-granted staleness waivers are retired through the window,
-# and tests/test_staleness_guard.py's WAIVERS dict is cleared): q102/q125/
-# q139/q143/q150/q153/q158/q63/q72/q11/q12/q142, in the VERDICT's order —
-# every operator the r12 optimization round touched outside its window
-# (lazy per-round checkpoints, the dangling fast path, the struct-min
-# argmax, the staged-watermark meta) now gets its driver-oracle proof,
-# q143's restructured SSSP merge first among equals. Next q154/q157/q159
-# re-prove: this round's optimization work touches the incremental-graph
-# delta operators again (and the dedup widen below reaches q154/q159
-# through connected_components' callers). Changed code THIS round:
-# (1) CPU-dense byte-small stages are widened to core parallelism
-# (operators/parallelism.py; guide §2.5) in the MinHash signature build,
-# the verify tokenization, and the LSH band table's explicit partition
-# count -> q11/q12/q63/q72/q142 re-prove (already leading as retirees).
-# The remaining 35 slots take the next-oldest debt in last round's
-# _CHECK_LAST order: the r09-vintage block (q56/q121/q123/q133/q134/
-# q138/q137/q148/q100/q101/q106/q108/q119/q124/q127/q23/q31/q32/q57/
-# q70/q89/q90/q96/q97/q98/q99) and the first nine r10-vintage entries
-# (q24/q30/q25/q26/q27/q33/q34/q35/q64). Every entry displaced from the
-# r12 window carries a FRESH r12 proof (CORRECTNESS_r12: 50/50) and moves
-# to the TAIL of _CHECK_LAST (newest-proof-last, so future rotation keeps
-# draining oldest debt first). Window composition is MACHINE-CHECKED:
+# Current composition (exactly 50): the pipeline-memo deletion rewrote
+# etl.py and removed imports from etl.py and fhir_queries.py, which the
+# staleness guard counts as a change to every symbol of both modules. That
+# dirties 47 entries: every fhir_queries gate, and every gate that reaches
+# etl (release_checkpoints) — the graph, incremental-graph, dedup, sketch,
+# funnel, bloom and streaming top-k operators. All 47 lead the window;
+# the last three slots take the oldest debt at the head of _CHECK_LAST
+# (q149/q144/q146). The 25 entries displaced from the r13 window carry
+# fresh r13 proofs (CORRECTNESS_r13: 50/50) and move to the TAIL of
+# _CHECK_LAST (newest-proof-last, so future rotation keeps draining oldest
+# debt first). Window composition is MACHINE-CHECKED:
 # tests/test_staleness_guard.py diffs the tree against the previous round
 # boundary, maps changed symbols to registry entries, and fails if an
 # affected entry is rotated to the tail without a waiver.
@@ -390,42 +376,19 @@ _CHECK_FIRST = [
     "q139_kcore_peeling",
     "q143_weighted_sssp",
     "q150_personalized_pagerank",
-    "q153_streaming_pattern_spans_ooo",
-    "q158_streaming_funnel_ooo",
     "q63_dup_clusters",
     "q72_canonical_docs",
-    "q11_minhash_lsh_candidates",
-    "q12_minhash_verified_pairs",
     "q142_incremental_dedup",
     "q154_incremental_components",
     "q157_incremental_sssp",
     "q159_incremental_components_forest",
-    "q56_regional_revenue_chain",
-    "q121_count_min_sketch",
     "q123_cms_heavy_hitters",
-    "q133_incremental_view_maintenance",
     "q134_event_funnel",
     "q138_negated_funnel",
-    "q137_pattern_spans",
-    "q148_minmax_ivm",
-    "q100_corpus_build_pipeline",
-    "q101_scd2_history",
-    "q106_kmv_distinct",
-    "q108_grouping_sets",
-    "q119_dynamic_partition_pruning",
     "q124_narrow_multi_target",
-    "q127_compact_small_files",
     "q23_fhir_transform_cascade",
     "q31_fhir_drs_document_reference",
     "q32_fhir_family_relationship",
-    "q57_approx_sketches",
-    "q70_incremental_rollup",
-    "q89_quality_filter_funnel",
-    "q90_contamination_screen",
-    "q96_streaming_dedup",
-    "q97_shuffle_shards",
-    "q98_span_dedup",
-    "q99_percentile_quality_filter",
     "q24_fhir_patient_resources",
     "q30_fhir_vital_status_json",
     "q25_fhir_disease_narrow",
@@ -433,12 +396,6 @@ _CHECK_FIRST = [
     "q27_fhir_specimen_narrow",
     "q33_fhir_research_study",
     "q64_fhir_drs_metadata_hashes",
-    # matcher-core micro-opts (streaming/patterns.py) touch these two in
-    # addition to the q153/q158 retirees above -> re-prove in-window
-    "q145_streaming_pattern_spans",
-    "q147_streaming_funnel",
-]
-_CHECK_LAST = [
     "q65_fhir_specimen_bodysite_dispatch",
     "q74_fhir_proband_status_json",
     "q75_fhir_family_json",
@@ -451,9 +408,21 @@ _CHECK_LAST = [
     "q82_fhir_reference_entities_json",
     "q83_fhir_specimen_json",
     "q84_fhir_drs_json",
+    "q126_tdigest_quantiles",
+    "q85_fhir_full_pipeline",
+    "q115_multi_study_pipeline",
+    "q129_bloom_join_pruning",
+    "q131_triangle_count",
+    "q135_set_similarity_join",
+    "q140_bfs_distances",
+    "q151_streaming_topk",
+    "q34_fhir_proband_status",
+    "q35_fhir_histopathology",
     "q149_topk_ivm",
     "q144_join_view_ivm",
     "q146_distinct_count_ivm",
+]
+_CHECK_LAST = [
     "q110_importance_sample",
     "q111_budget_select",
     "q03_normalize_dedup",
@@ -481,7 +450,6 @@ _CHECK_LAST = [
     "q105_fuzzy_match",
     "q112_stream_static_join",
     "q130_zorder_clustering",
-    "q126_tdigest_quantiles",
     "q132_expectations_suite",
     "q02_outer_join_cascade",
     "q05_sentinel_filter",
@@ -522,19 +490,12 @@ _CHECK_LAST = [
     "q68_rolling_fingerprints",
     "q69_stratified_sample",
     "q73_salted_skew_join",
-    "q85_fhir_full_pipeline",
     "q95_bucketed_colocated_join",
-    "q115_multi_study_pipeline",
     "q116_weighted_sample",
     "q122_profile_approx",
-    "q129_bloom_join_pruning",
-    "q131_triangle_count",
-    "q135_set_similarity_join",
-    "q140_bfs_distances",
     "q141_value_runs",
     "q128_streaming_cdc_apply",
     "q155_partitioned_cdc_apply",
-    "q151_streaming_topk",
     "q152_streaming_join_agg_view",
     "q156_streaming_distinct_view",
     "q160_cdc_tombstone_retention",
@@ -550,8 +511,31 @@ _CHECK_LAST = [
     "q21_window_agg",
     "q22_sessionization",
     "q38_corpus_prep_pipeline",
-    "q34_fhir_proband_status",
-    "q35_fhir_histopathology",
+    "q153_streaming_pattern_spans_ooo",
+    "q158_streaming_funnel_ooo",
+    "q11_minhash_lsh_candidates",
+    "q12_minhash_verified_pairs",
+    "q56_regional_revenue_chain",
+    "q121_count_min_sketch",
+    "q133_incremental_view_maintenance",
+    "q137_pattern_spans",
+    "q148_minmax_ivm",
+    "q100_corpus_build_pipeline",
+    "q101_scd2_history",
+    "q106_kmv_distinct",
+    "q108_grouping_sets",
+    "q119_dynamic_partition_pruning",
+    "q127_compact_small_files",
+    "q57_approx_sketches",
+    "q70_incremental_rollup",
+    "q89_quality_filter_funnel",
+    "q90_contamination_screen",
+    "q96_streaming_dedup",
+    "q97_shuffle_shards",
+    "q98_span_dedup",
+    "q99_percentile_quality_filter",
+    "q145_streaming_pattern_spans",
+    "q147_streaming_funnel",
 ]
 
 

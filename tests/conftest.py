@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import pytest
@@ -31,9 +32,8 @@ from kf_task_fhir_etl_spark.session import get_spark
 # ~2.5 s/test baseline for files outside the top-60); unknown files fall
 # back to test-count × 2.5
 _SHARD_WEIGHTS = {
-    "test_new_ops_r09.py": 372, "test_pipeline_memo.py": 225,
-    "test_builders.py": 225, "test_new_ops_r10.py": 240,
-    "test_new_ops_r12.py": 172, "test_new_ops_r11.py": 163,
+    "test_new_ops_r09.py": 372, "test_builders.py": 225,
+    "test_new_ops_r10.py": 240, "test_new_ops_r12.py": 172, "test_new_ops_r11.py": 163,
     "test_new_ops_r06.py": 139, "test_corpus.py": 132,
     "test_new_ops_r08.py": 115, "test_properties.py": 106,
     "test_operators.py": 95, "test_new_ops_r07.py": 68,
@@ -41,6 +41,26 @@ _SHARD_WEIGHTS = {
     "test_narrow.py": 39, "test_sources_sinks.py": 28,
     "test_oracle_parity.py": 25, "test_transform.py": 23,
 }
+
+
+_COUNT = re.compile(r"(\d+) (passed|failed|errors?|skipped)\b")
+
+
+def summarize_shards(outputs: list[str]) -> str:
+    """One pytest-style verdict ("1 failed, 9 passed, 2 skipped, 1 error")
+    over the shards' outputs, read from each shard's final summary line —
+    errors and skips included, so a shard that errored at collection or
+    skipped tests cannot hide behind a bare "N passed"."""
+    totals = {"failed": 0, "passed": 0, "skipped": 0, "error": 0}
+    for text in outputs:
+        lines = [ln for ln in text.splitlines() if _COUNT.search(ln)]
+        for n, kind in _COUNT.findall(lines[-1]) if lines else ():
+            totals["error" if kind.startswith("error") else kind] += int(n)
+    return ", ".join(
+        f"{n} {kind}{'s' if kind == 'error' and n > 1 else ''}"
+        for kind, n in totals.items()
+        if n or kind == "passed"
+    )
 
 
 def _is_whole_suite_invocation(config) -> bool:
@@ -64,7 +84,6 @@ def pytest_cmdline_main(config):
     if not _is_whole_suite_invocation(config):
         return None
     import glob
-    import re
     import subprocess
     import tempfile
     import time
@@ -129,7 +148,7 @@ def pytest_cmdline_main(config):
                 if p.poll() is None:
                     p.terminate()
             break
-    passed = failed = 0
+    outputs = []
     for p, out, i in procs:
         p.wait()
         worst = max(worst, p.returncode)
@@ -138,12 +157,9 @@ def pytest_cmdline_main(config):
         out.close()
         tail = "\n".join(text.splitlines()[-30:])
         sys.stdout.write(f"\n---- shard {i + 1}/{len(procs)} (exit {p.returncode}) ----\n{tail}\n")
-        mp = re.search(r"(\d+) passed", text)
-        mf = re.search(r"(\d+) failed", text)
-        passed += int(mp.group(1)) if mp else 0
-        failed += int(mf.group(1)) if mf else 0
+        outputs.append(text)
     dur = time.time() - t0
-    verdict = f"{failed} failed, {passed} passed" if failed else f"{passed} passed"
+    verdict = summarize_shards(outputs)
     sys.stdout.write(
         f"\n============ {verdict} in {dur:.2f}s ({len(procs)} shards) ============\n"
     )

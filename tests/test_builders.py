@@ -257,10 +257,9 @@ def test_single_pass_union_equals_classic_dict(spark):
 
 
 def test_fused_plan_builders_ignore_their_dataframe_arg(spark):
-    """The overlapped checkpoint path (etl.build_resources_union(checkpoint=
-    True)) constructs the 13 fused ``plan()`` expressions CONCURRENTLY with
-    the wide-table materialization, against the pre-checkpoint frames — which
-    is only sound because every fused builder's ``plan()`` is a pure
+    """The fused build (etl.build_resources_union) constructs the 13 fused
+    ``plan()`` expressions CONCURRENTLY with the wide-table
+    materialization, against the pre-checkpoint frames — which is only sound because every fused builder's ``plan()`` is a pure
     ``F.col`` expression tree that never consults its DataFrame argument.
     Pin that contract in its crispest form: ``plan(None)`` must succeed and
     the produced expressions must resolve against a wide table the builder

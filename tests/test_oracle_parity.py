@@ -46,21 +46,24 @@ def test_query_matches_oracle(name, spark, duck_smoke, request):
     else:
         sdf = fn(spark, SF_SMOKE)
         duck = duck_smoke
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    spark_cols = sdf.columns
 
     oracle = q.oracle_sql().get(name)
     if oracle is None:
         # driver falls back to rows-only check
-        assert len(spark_rows) >= 0
+        assert len(sdf.collect()) >= 0
         return
+    _assert_matches_oracle(name, sdf, duck, oracle)
 
+
+def _assert_matches_oracle(label, sdf, duck, oracle):
+    spark_rows = [tuple(r) for r in sdf.collect()]
+    spark_cols = sdf.columns
     res = duck.execute(oracle)
     duck_cols = [d[0] for d in res.description]
     duck_rows = [tuple(r) for r in res.fetchall()]
 
-    assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column mismatch"
-    assert len(spark_rows) == len(duck_rows), f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
+    assert sorted(spark_cols) == sorted(duck_cols), f"{label}: column mismatch"
+    assert len(spark_rows) == len(duck_rows), f"{label}: row count {len(spark_rows)} vs {len(duck_rows)}"
 
     # align column order by name before value compare (driver sorts by name)
     s_idx = [spark_cols.index(c) for c in sorted(spark_cols)]
@@ -68,7 +71,18 @@ def test_query_matches_oracle(name, spark, duck_smoke, request):
     s_vals = normalize_rows([tuple(r[i] for i in s_idx) for r in spark_rows])
     d_vals = normalize_rows([tuple(r[i] for i in d_idx) for r in duck_rows])
     mismatches = [(a, b) for a, b in zip(s_vals, d_vals) if a != b]
-    assert not mismatches, f"{name}: first value mismatches: {mismatches[:3]}"
+    assert not mismatches, f"{label}: first value mismatches: {mismatches[:3]}"
+
+
+def test_fhir_pipelines_repeat_calls_match_oracle(spark, duck_smoke):
+    """bench.py runs every gate three times in one session. Each repeat of
+    the two ``etl.run_pipeline`` gates rebuilds the pipeline from scratch
+    (new transform, new checkpoints, new builder plans), so a repeat must
+    still match the oracle exactly as the first call does."""
+    for name in ("q85_fhir_full_pipeline", "q115_multi_study_pipeline"):
+        for call in (1, 2):
+            sdf = q.queries()[name](spark, SF_SMOKE)
+            _assert_matches_oracle(f"{name} call {call}", sdf, duck_smoke, q.oracle_sql()[name])
 
 
 # ---------------------------------------------------------------------------
@@ -101,20 +115,5 @@ def duck_big():
 
 @pytest.mark.parametrize("name", ["q83_fhir_specimen_json", "q84_fhir_drs_json"])
 def test_big_builders_match_oracle_at_sf01(name, spark, duck_big):
-    fn = q.queries()[name]
-    sdf = fn(spark, SF_BIG)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    res = duck_big.execute(q.oracle_sql()[name])
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = [tuple(r) for r in res.fetchall()]
-
-    assert sorted(spark_cols) == sorted(duck_cols)
-    assert len(spark_rows) == len(duck_rows)
-    s_idx = [spark_cols.index(c) for c in sorted(spark_cols)]
-    d_idx = [duck_cols.index(c) for c in sorted(duck_cols)]
-    s_vals = normalize_rows([tuple(r[i] for i in s_idx) for r in spark_rows])
-    d_vals = normalize_rows([tuple(r[i] for i in d_idx) for r in duck_rows])
-    mismatches = [(a, b) for a, b in zip(s_vals, d_vals) if a != b]
-    assert not mismatches, f"{name}@sf0.1: first mismatches: {mismatches[:2]}"
+    sdf = q.queries()[name](spark, SF_BIG)
+    _assert_matches_oracle(f"{name}@sf0.1", sdf, duck_big, q.oracle_sql()[name])
