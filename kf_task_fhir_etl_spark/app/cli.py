@@ -11,9 +11,12 @@ load ends swapped for engine-mode equivalents:
   the S1/S2 scan path), the snapshot reads a directory of endpoint parquet
   tables (``studies.parquet``, ``participants.parquet``, …) and applies the
   S3 descendant fan-out (``sources.lineage.descendant_snapshot``) per study.
-- **load**: keyed idempotent parquet MERGE per target
-  (``sources.sinks.keyed_parquet_upsert``), or the S8 FHIR REST upsert when
-  ``--fhir-url`` is given (reference ``kf_api_fhir_service.py:37-94``).
+- **load**: with ``--out``, one keyed idempotent parquet MERGE per study:
+  the fused build (``run_pipeline(..., single_pass=True)``) is merged on
+  ``(target, target_id)`` into ``<out>/<study>/<target>/`` in one scan and
+  one write (``sources.sinks.keyed_parquet_upsert``); with ``--fhir-url``,
+  the S8 FHIR REST upsert per target in dependency order (reference
+  ``kf_api_fhir_service.py:37-94``).
 """
 
 from __future__ import annotations
@@ -66,7 +69,7 @@ def fhir_etl(kf_study_ids: tuple[str, ...], source_dir: str, out_dir: str | None
         raise click.UsageError("one of --out or --fhir-url is required")
 
     from kf_task_fhir_etl_spark.etl import run_pipeline
-    from kf_task_fhir_etl_spark.plans.transform import ALL_TARGETS
+    from kf_task_fhir_etl_spark.plans.transform import applicable_targets
     from kf_task_fhir_etl_spark.session import get_spark
     from kf_task_fhir_etl_spark.sources.lineage import descendant_snapshot
     from kf_task_fhir_etl_spark.sources.sinks import (
@@ -86,19 +89,24 @@ def fhir_etl(kf_study_ids: tuple[str, ...], source_dir: str, out_dir: str | None
     for kf_study_id in kf_study_ids:
         click.echo(f"⏳ {kf_study_id}")
         snapshot = descendant_snapshot(tables, kf_study_id, strict=True)
-        resources = run_pipeline(snapshot)
-        ordered = [t for t in ALL_TARGETS if t in resources]
-
         if fhir_url is not None:
-            def write(target: str, df) -> None:
-                fhir_upsert_sink(df, fhir_url, default_submit)
+            resources = run_pipeline(snapshot)
+            written = load_all(
+                resources,
+                applicable_targets(snapshot),
+                lambda target, df: fhir_upsert_sink(df, fhir_url, default_submit),
+            )
         else:
-            def write(target: str, df) -> None:
-                keyed_parquet_upsert(
-                    spark, df, os.path.join(out_dir, kf_study_id, target), "target_id"
-                )
-
-        written = load_all(resources, ordered, write)
+            study_out = os.path.join(out_dir, kf_study_id)
+            union = run_pipeline(snapshot, single_pass=True)
+            keyed_parquet_upsert(spark, union, study_out, ["target", "target_id"])
+            written = applicable_targets(snapshot)
+            # partitionBy writes no directory for a target that built no
+            # rows; it still gets its readable, empty table
+            empty = union.drop("target").limit(0)
+            for target in written:
+                if not os.path.isdir(os.path.join(study_out, target)):
+                    keyed_parquet_upsert(spark, empty, os.path.join(study_out, target), "target_id")
         click.echo(f"✅ {kf_study_id}: {', '.join(written)}")
 
 

@@ -31,14 +31,6 @@ from kf_task_fhir_etl_spark.plans.mappings import pad_concepts
 from kf_task_fhir_etl_spark.plans.transform import TransformResult, transform_study
 
 
-def cache_snapshot(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """S5 — cache the per-study snapshot between extract and transform
-    (reference holds it in RAM, ``etl/ingest.py:94-95``; here a deliberate
-    knob: each endpoint table feeds several joins/builders, so caching avoids
-    re-scanning the source per consumer)."""
-    return {name: df.cache() for name, df in tables.items()}
-
-
 def build_resources(
     transformed: TransformResult,
     metadata: DataFrame | None = None,

@@ -10,9 +10,9 @@ declarative Spark plan:
   biospecimen-diagnoses joined before it (reference ``etl/ingest.py:381-395``);
 - ``family-relationships`` stays its OWN output table, normalized separately
   (reference ``etl/ingest.py:256-258``);
-- the set of entity-builder targets accumulates per present table and is
-  emitted in the fixed dependency order of ``all_targets``
-  (reference ``target_api_plugins/kf_api_fhir_service.py:115-132``,
+- the entity-builder targets follow from table presence alone
+  (``applicable_targets``) and are emitted in the fixed dependency order of
+  ``all_targets`` (reference ``target_api_plugins/kf_api_fhir_service.py:115-132``,
   subset-preserving filter at ``etl/ingest.py:487-489``).
 
 Scale notes (100 TB): full-outer joins cannot broadcast (both sides emit
@@ -59,6 +59,38 @@ ALL_TARGETS = (
     "DRSDocumentReference",
 )
 
+# The endpoint tables whose presence makes each target applicable: the
+# transform adds a target when it joins its table (reference
+# ``etl/ingest.py:137-476``); Histopathology needs the composite J8 key.
+TARGET_ENDPOINTS = {
+    "Practitioner": ("investigators",),
+    "Organization": ("investigators",),
+    "PractitionerRole": ("investigators",),
+    "Patient": ("participants",),
+    "ProbandStatus": ("participants",),
+    "FamilyRelationship": ("family-relationships",),
+    "Family": ("families",),
+    "ResearchStudy": ("studies",),
+    "ResearchSubject": ("participants",),
+    "Disease": ("diagnoses",),
+    "Phenotype": ("phenotypes",),
+    "VitalStatus": ("outcomes",),
+    "SequencingCenter": ("biospecimens",),
+    "Specimen": ("biospecimens",),
+    "Histopathology": ("biospecimens", "biospecimen-diagnoses"),
+    "DRSDocumentReference": ("genomic-files",),
+}
+
+
+def applicable_targets(endpoint_tables: dict[str, DataFrame | None]) -> list[str]:
+    """The targets a study's tables can build, in dependency order. Decided
+    on table presence, not content: a present but empty table still makes
+    its targets applicable (they build zero rows)."""
+    return [
+        t for t in ALL_TARGETS
+        if all(endpoint_tables.get(e) is not None for e in TARGET_ENDPOINTS[t])
+    ]
+
 
 @dataclass
 class TransformResult:
@@ -104,7 +136,6 @@ def transform_study(endpoint_tables: dict[str, DataFrame]) -> TransformResult:
     ``sequencing-experiments``).
     """
     result = TransformResult()
-    targets: set[str] = set()
 
     def get(endpoint: str) -> DataFrame | None:
         df = endpoint_tables.get(endpoint)
@@ -115,13 +146,10 @@ def transform_study(endpoint_tables: dict[str, DataFrame]) -> TransformResult:
     # J1: studies ⟗ investigators (1-row dims; full outer cannot broadcast —
     # AQE keeps these early exchanges tiny)
     studies = get("studies")
-    if studies is not None:
-        targets.add("ResearchStudy")
 
     investigators = get("investigators")
     if investigators is not None:
         merged = _outer(studies, investigators, ["INVESTIGATOR|TARGET_SERVICE_ID"])
-        targets.update(["Practitioner", "Organization", "PractitionerRole"])
 
     # J2: ⟗ participants on STUDY|TARGET_SERVICE_ID
     participants = get("participants")
@@ -129,39 +157,33 @@ def transform_study(endpoint_tables: dict[str, DataFrame]) -> TransformResult:
         merged = _outer(
             merged if merged is not None else studies, participants, ["STUDY|TARGET_SERVICE_ID"]
         )
-        targets.update(["Patient", "ProbandStatus", "ResearchSubject"])
 
     # J3: ⟗ families on FAMILY|TARGET_SERVICE_ID
     families = get("families")
     if families is not None:
         merged = _outer(merged, families, ["FAMILY|TARGET_SERVICE_ID"])
-        targets.add("Family")
 
     # family-relationships: separate output table, NOT merged
     # (reference etl/ingest.py:256-258)
     family_relationships = get("family-relationships")
     if family_relationships is not None:
         result.tables["family_relationship"] = normalize(family_relationships)
-        targets.add("FamilyRelationship")
 
     # J4: ⟗ diagnoses on PARTICIPANT|TARGET_SERVICE_ID (1-to-many fan-out)
     diagnoses = get("diagnoses")
     if diagnoses is not None:
         merged = _outer(merged, diagnoses, ["PARTICIPANT|TARGET_SERVICE_ID"])
-        targets.add("Disease")
 
     # J5: ⟗ phenotypes — fan-out × fan-out cross product per participant,
     # reproduced faithfully (reference etl/ingest.py:305-310)
     phenotypes = get("phenotypes")
     if phenotypes is not None:
         merged = _outer(merged, phenotypes, ["PARTICIPANT|TARGET_SERVICE_ID"])
-        targets.add("Phenotype")
 
     # J6: ⟗ outcomes
     outcomes = get("outcomes")
     if outcomes is not None:
         merged = _outer(merged, outcomes, ["PARTICIPANT|TARGET_SERVICE_ID"])
-        targets.add("VitalStatus")
 
     # J7: ⟗ biospecimen-diagnoses on DIAGNOSIS|TARGET_SERVICE_ID
     biospecimen_diagnoses = get("biospecimen-diagnoses")
@@ -172,10 +194,8 @@ def transform_study(endpoint_tables: dict[str, DataFrame]) -> TransformResult:
     biospecimens = get("biospecimens")
     if biospecimens is not None:
         on = ["PARTICIPANT|TARGET_SERVICE_ID"]
-        targets.update(["SequencingCenter", "Specimen"])
         if biospecimen_diagnoses is not None:
             on.append("BIOSPECIMEN|TARGET_SERVICE_ID")
-            targets.add("Histopathology")
         merged = _outer(merged, biospecimens, on)
 
     # J9: ⟗ biospecimen-genomic-files on BIOSPECIMEN|TARGET_SERVICE_ID
@@ -187,7 +207,6 @@ def transform_study(endpoint_tables: dict[str, DataFrame]) -> TransformResult:
     genomic_files = get("genomic-files")
     if genomic_files is not None:
         merged = _outer(merged, genomic_files, ["GENOMIC_FILE|TARGET_SERVICE_ID"])
-        targets.add("DRSDocumentReference")
 
     # J11: ⟗ sequencing-experiment-genomic-files
     seq_exp_gf = get("sequencing-experiment-genomic-files")
@@ -209,5 +228,5 @@ def transform_study(endpoint_tables: dict[str, DataFrame]) -> TransformResult:
     if merged is not None:
         # clean_up_df parity: stringify + trim + dedupe (reference etl/ingest.py:485)
         result.tables[DEFAULT_KEY] = normalize(merged)
-    result.targets = [t for t in ALL_TARGETS if t in targets]
+    result.targets = applicable_targets(endpoint_tables)
     return result

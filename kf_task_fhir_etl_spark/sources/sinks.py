@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,26 +62,101 @@ def fhir_upsert_sink(resources: DataFrame, host: str, submit_factory: Callable[[
     resources.foreachPartition(write_partition)
 
 
-def keyed_parquet_upsert(spark: SparkSession, df: DataFrame, path: str, key: str) -> None:
+def _recover(live: str) -> None:
+    """Finish or undo an interrupted publish of ``live``: a ``live.old``
+    without ``live`` (stopped between the two renames) is moved back; one
+    beside ``live`` (stopped before the delete) is dropped."""
+    old = live + ".old"
+    if os.path.exists(old):
+        if os.path.exists(live):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, live)
+
+
+def _publish(new: str, live: str) -> None:
+    """Swap a fully written table in by rename: live aside, new in, old
+    deleted."""
+    old = live + ".old"
+    if os.path.exists(live):
+        os.rename(live, old)
+        os.rename(new, live)
+        shutil.rmtree(old)
+    else:
+        os.rename(new, live)
+
+
+def keyed_parquet_upsert(spark: SparkSession, df: DataFrame, path: str, key: str | list[str]) -> None:
     """Idempotent keyed MERGE into a parquet table (engine mode; Delta's
     MERGE INTO without the Delta jar): existing rows not matched by the new
-    keys survive, matched keys are replaced, new keys append. Two scans + one
-    write; at scale this is the classic copy-on-write upsert — partition the
-    table (e.g. by study) so only touched partitions rewrite."""
-    if os.path.exists(path):
-        current = spark.read.parquet(path)
-        merged = current.join(df.select(key).distinct(), on=[key], how="left_anti").unionByName(df)
-    else:
-        merged = df
-    # materialize before overwrite (can't read and overwrite the same files lazily)
-    staging = path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    final = spark.read.parquet(staging)
-    final.write.mode("overwrite").parquet(path)
-    # clean staging
-    import shutil
+    keys survive, matched keys are replaced, new keys append.
 
+    ``key`` is a column name, or ``[part, name]``: ``part`` then splits the
+    table into plain subdirectories ``path/<value>/`` holding the rows
+    without that column, and keys match within their own partition only
+    (the CLI's ``["target", "target_id"]`` keeps one table per target).
+    Partition values must be plain directory names (no ``.``, ``/``, ``=``).
+
+    One scan of the current rows (explicit schema; the partition value is
+    the directory name), one write of the merged rows to ``path.staging``,
+    then each written partition (or the table, for a plain key) is
+    published by rename: live aside, new in, old deleted. A partition with
+    no rows in the merge is left as it is. If the publish fails, every
+    table stays readable at its old or new version: the renames are undone
+    at once, and a process killed between them is repaired on the next
+    call, which also discards any leftover staging directory."""
+    if isinstance(key, str):
+        part, keys = None, [key]
+    else:
+        part, _ = key
+        keys = list(key)
+    path = path.rstrip("/")
+    staging = path + ".staging"
+    current = None
+    if part:
+        os.makedirs(path, exist_ok=True)
+        for name in os.listdir(path):
+            if name.endswith(".old"):
+                _recover(os.path.join(path, name[: -len(".old")]))
+        dirs = sorted(
+            os.path.join(path, d) for d in os.listdir(path)
+            if "." not in d and os.path.isdir(os.path.join(path, d))
+        )
+        if dirs:
+            current = (
+                spark.read.schema(df.drop(part).schema)
+                .parquet(*dirs)
+                .withColumn(part, F.element_at(F.split(F.col("_metadata.file_path"), "/"), -2))
+            )
+    else:
+        _recover(path)
+        if os.path.exists(path):
+            current = spark.read.schema(df.schema).parquet(path)
     shutil.rmtree(staging, ignore_errors=True)
+    merged = df if current is None else (
+        current.join(df.select(*keys), on=keys, how="left_anti").unionByName(df)
+    )
+
+    writer = merged.write.mode("overwrite")
+    if part:
+        writer.partitionBy(part).parquet(staging)
+        prefix = part + "="
+        moves = [
+            (os.path.join(staging, n), os.path.join(path, n[len(prefix):]))
+            for n in sorted(os.listdir(staging)) if n.startswith(prefix)
+        ]
+    else:
+        writer.parquet(staging)
+        moves = [(staging, path)]
+    try:
+        for new, live in moves:
+            _publish(new, live)
+    except BaseException:
+        for _, live in moves:
+            _recover(live)
+        raise
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def load_all(

@@ -19,11 +19,12 @@ three epoch files through ``foreachBatch``).
 
 Scale shape: the per-batch reduction is one window over the BATCH (batch-
 sized); the merge shuffles (store + batch winners) on the key — the store
-is table-sized, so this is copy-on-write maintenance exactly like
-``keyed_parquet_upsert``, made crash-safe/replay-guarded by the versioned
-store (new version written to a fresh directory, distributed end-to-end —
-``collect_store=False``). Partition the store by a stable key prefix at
-real scale so only touched partitions rewrite (``buckets=``).
+is table-sized, so this is copy-on-write maintenance like
+``keyed_parquet_upsert`` (which is crash-safe by a rename publish but keeps
+no versions); here the versioned store makes it crash-safe and
+replay-guarded (new version written to a fresh directory, distributed
+end-to-end — ``collect_store=False``). Partition the store by a stable key
+prefix at real scale so only touched partitions rewrite (``buckets=``).
 
 Tombstone RETENTION (r11 — VERDICT r10 Next #5, closing the last named
 gap): tombstones exist to beat out-of-order late changes, so they can be

@@ -1,8 +1,9 @@
 """E1 — CLI smoke: ``fhir-etl SD_00000001 --source DIR --out DIR`` runs the
-snapshot → pipeline → ordered-load path end-to-end (reference
-``app/cli.py:11-29``). Invoked in-process via click's CliRunner (a subprocess
-would pay a second 20 s SparkSession; the surface under test — argument
-parsing, snapshot wiring, sink calls — is identical)."""
+snapshot → fused pipeline → keyed-merge load path end-to-end (reference
+``app/cli.py:11-29``), and its sink matches the classic per-target dict.
+Invoked in-process via click's CliRunner (a subprocess would pay a second
+20 s SparkSession; the surface under test — argument parsing, snapshot
+wiring, sink calls — is identical)."""
 
 from __future__ import annotations
 
@@ -10,56 +11,110 @@ import json
 import os
 
 from click.testing import CliRunner
+from pyspark.sql import functions as F
 
 from tests.fixtures import endpoint_tables
 
+STUDY = "SD_00000001"
+
+
+def _write_source(tables, path) -> str:
+    path.mkdir()
+    for endpoint, df in tables.items():
+        df.write.parquet(str(path / f"{endpoint}.parquet"))
+    return str(path)
+
+
+def _run_cli(source: str, out) -> str:
+    from kf_task_fhir_etl_spark.app.cli import cli
+
+    result = CliRunner().invoke(cli, ["fhir-etl", STUDY, "--source", source, "--out", str(out)])
+    assert result.exit_code == 0, result.output
+    return result.output
+
+
+def _assert_sink_equals_classic(spark, source: str, out) -> dict:
+    """Every ``<study>/<target>`` table equals ``run_pipeline(snapshot)[target]``
+    row for row, with byte-identical ``resource_json``. Returns the rows."""
+    from kf_task_fhir_etl_spark.etl import run_pipeline
+    from kf_task_fhir_etl_spark.sources.lineage import descendant_snapshot
+
+    tables = {
+        f[: -len(".parquet")]: spark.read.parquet(os.path.join(source, f)) for f in os.listdir(source)
+    }
+    classic = run_pipeline(descendant_snapshot(tables, STUDY, strict=True))
+    study_out = out / STUDY
+    assert sorted(os.listdir(study_out)) == sorted(classic)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("resource_type", "target_id", "resource_json").collect())
+
+    got = {}
+    for target, df in classic.items():
+        sink = spark.read.parquet(str(study_out / target))
+        assert set(sink.columns) == {"resource_type", "target_id", "resource_json"}
+        got[target] = rows(sink)
+        assert got[target] == rows(df), target
+    return got
+
 
 def test_cli_fhir_etl_end_to_end(spark, tmp_path):
-    from kf_task_fhir_etl_spark.app.cli import cli
+    """Load, then reload after an ``external_id`` edit: both times every
+    target table equals the classic dict path's rows (the edited resources
+    replace their keys; nothing duplicates)."""
     from kf_task_fhir_etl_spark.plans.transform import ALL_TARGETS
 
-    source = tmp_path / "source"
-    source.mkdir()
-    for endpoint, df in endpoint_tables(spark).items():
-        df.write.parquet(str(source / f"{endpoint}.parquet"))
+    tables = endpoint_tables(spark)
+    source = _write_source(tables, tmp_path / "source")
     out = tmp_path / "out"
+    output = _run_cli(source, out)
 
-    runner = CliRunner()
-    result = runner.invoke(
-        cli, ["fhir-etl", "SD_00000001", "--source", str(source), "--out", str(out)]
-    )
-    assert result.exit_code == 0, result.output
-
-    study_out = out / "SD_00000001"
-    written = sorted(os.listdir(study_out))
+    written = sorted(os.listdir(out / STUDY))
     assert "Patient" in written and "ResearchStudy" in written
-    # load order is the fixed dependency order, echoed by the CLI
-    echoed = result.output.split("SD_00000001: ")[-1].strip().split(", ")
+    # targets are echoed in the fixed dependency order
+    echoed = output.split(f"{STUDY}: ")[-1].strip().split(", ")
     assert echoed == [t for t in ALL_TARGETS if t in echoed]
+    loaded = _assert_sink_equals_classic(spark, source, out)
+    assert loaded["Patient"]
+    assert all(json.loads(r[2])["resourceType"] == "Patient" for r in loaded["Patient"])
 
-    patients = spark.read.parquet(str(study_out / "Patient"))
-    rows = patients.collect()
-    assert rows and set(patients.columns) == {"resource_type", "target_id", "resource_json"}
-    assert all(json.loads(r["resource_json"])["resourceType"] == "Patient" for r in rows)
-
-    # idempotent re-run: the keyed MERGE sink replaces, never duplicates
-    result2 = runner.invoke(
-        cli, ["fhir-etl", "SD_00000001", "--source", str(source), "--out", str(out)]
+    edited = dict(tables)
+    edited["participants"] = tables["participants"].withColumn(
+        "external_id",
+        F.when(F.col("kf_id") == "PT_00000001", F.lit("p1-edited")).otherwise(F.col("external_id")),
     )
-    assert result2.exit_code == 0, result2.output
-    assert spark.read.parquet(str(study_out / "Patient")).count() == len(rows)
+    edited_source = _write_source(edited, tmp_path / "source_edited")
+    _run_cli(edited_source, out)
+    reloaded = _assert_sink_equals_classic(spark, edited_source, out)
+    assert len(reloaded["Patient"]) == len(loaded["Patient"])
+    assert sum("p1-edited" in r[2] for r in reloaded["Patient"]) == 1
+
+
+def test_cli_zero_row_target_keeps_empty_table(spark, tmp_path):
+    """An applicable target that builds no rows (an empty ``outcomes``
+    table makes VitalStatus applicable) still gets a readable, empty
+    ``<study>/VitalStatus`` table and is echoed, on load and on reload."""
+    tables = dict(endpoint_tables(spark))
+    tables["outcomes"] = tables["outcomes"].limit(0)
+    source = _write_source(tables, tmp_path / "source")
+    out = tmp_path / "out"
+    output = _run_cli(source, out)
+    got = _assert_sink_equals_classic(spark, source, out)
+    assert got["VitalStatus"] == [] and got["Patient"]
+    assert "VitalStatus" in output.split(f"{STUDY}: ")[-1].strip().split(", ")
+
+    output = _run_cli(source, out)
+    assert "VitalStatus" in output.split(f"{STUDY}: ")[-1].strip().split(", ")
+    assert spark.read.parquet(str(out / STUDY / "VitalStatus")).count() == 0
 
 
 def test_cli_unknown_study_fails(spark, tmp_path):
     from kf_task_fhir_etl_spark.app.cli import cli
 
-    source = tmp_path / "source"
-    source.mkdir()
-    for endpoint, df in endpoint_tables(spark).items():
-        df.write.parquet(str(source / f"{endpoint}.parquet"))
-
+    source = _write_source(endpoint_tables(spark), tmp_path / "source")
     result = CliRunner().invoke(
-        cli, ["fhir-etl", "SD_MISSING", "--source", str(source), "--out", str(tmp_path / "o")]
+        cli, ["fhir-etl", "SD_MISSING", "--source", source, "--out", str(tmp_path / "o")]
     )
     assert result.exit_code != 0
     assert "SD_MISSING not found" in str(result.exception)
+

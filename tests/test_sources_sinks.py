@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -164,6 +165,13 @@ def test_fhir_upsert_sink_put_else_post(spark, tmp_path):
     assert all(c["path"] == "Patient" for c in calls)
 
 
+def _partitions(spark, path: str) -> dict[str, set[tuple]]:
+    return {
+        d: {tuple(r) for r in spark.read.parquet(os.path.join(path, d)).select("k", "v").collect()}
+        for d in sorted(os.listdir(path))
+    }
+
+
 def test_keyed_parquet_upsert_merges(spark, tmp_path):
     path = str(tmp_path / "resources.parquet")
     v1 = spark.createDataFrame([("a", 1), ("b", 1)], "k string, v int")
@@ -172,6 +180,60 @@ def test_keyed_parquet_upsert_merges(spark, tmp_path):
     sinks.keyed_parquet_upsert(spark, v2, path, "k")
     got = {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()}
     assert got == {("a", 1), ("b", 2), ("c", 2)}
+
+    # list key: "p" partitions the table into plain path/<p>/ directories
+    # holding (k, v); keys match within their own partition only
+    path = str(tmp_path / "study")
+    schema = "p string, k string, v int"
+    v1 = spark.createDataFrame([("A", "a", 1), ("A", "b", 1), ("B", "b", 1)], schema)
+    sinks.keyed_parquet_upsert(spark, v1, path, ["p", "k"])
+    v2 = spark.createDataFrame([("A", "b", 2), ("B", "c", 2)], schema)
+    sinks.keyed_parquet_upsert(spark, v2, path, ["p", "k"])
+    assert set(spark.read.parquet(os.path.join(path, "A")).columns) == {"k", "v"}
+    assert _partitions(spark, path) == {
+        "A": {("a", 1), ("b", 2)},  # "a" is not in the batch and survives
+        "B": {("b", 1), ("c", 2)},  # A's "b" does not replace B's "b"
+    }
+    assert not os.path.exists(path + ".staging")
+
+
+def test_keyed_parquet_upsert_publish_is_crash_safe(spark, tmp_path, monkeypatch):
+    """Fault injection into the rename-based publish: a rename that fails
+    mid-publish leaves every partition readable (the failed one at its
+    previous rows), and a rerun after a killed process — a ``B.old``
+    without ``B``, an ``A.old`` beside ``A`` and a leftover staging
+    directory with a stale partition — repairs them, discards the staging
+    and converges to the merged result."""
+    path = str(tmp_path / "study")
+    schema = "p string, k string, v int"
+    v1 = spark.createDataFrame([("A", "a", 1), ("B", "a", 1)], schema)
+    v2 = spark.createDataFrame([("A", "a", 2), ("B", "a", 2)], schema)
+    sinks.keyed_parquet_upsert(spark, v1, path, ["p", "k"])
+
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if src.endswith("p=B"):  # the new B moving in, after the live B moved aside
+            raise OSError("injected rename failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        sinks.keyed_parquet_upsert(spark, v2, path, ["p", "k"])
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert _partitions(spark, path) == {"A": {("a", 2)}, "B": {("a", 1)}}
+    assert not os.path.exists(path + ".staging")
+
+    # the state a killed process leaves behind
+    os.rename(os.path.join(path, "B"), os.path.join(path, "B.old"))
+    shutil.copytree(os.path.join(path, "A"), os.path.join(path, "A.old"))
+    stale = spark.createDataFrame([("a", 9)], "k string, v int")
+    stale.write.parquet(os.path.join(path + ".staging", "p=C"))  # must not be published
+    sinks.keyed_parquet_upsert(spark, v2, path, ["p", "k"])
+    assert _partitions(spark, path) == {"A": {("a", 2)}, "B": {("a", 2)}}
+    assert not os.path.exists(path + ".staging")
+    sinks.keyed_parquet_upsert(spark, v2, path, ["p", "k"])  # idempotent
+    assert _partitions(spark, path) == {"A": {("a", 2)}, "B": {("a", 2)}}
 
 
 def test_load_all_dependency_order(spark):
