@@ -3187,9 +3187,10 @@ def q140_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distances over the order-sampled co-purchase
     graph (operators/graph.py::bfs_distances), sources = graph nodes with
     l_partkey % 97 = 0. The Spark side runs level-synchronous frontier
-    expansion to the EMPTY-frontier fixpoint (per round: one node-key
-    join + one left-anti vs the visited set; per-round checkpoints
-    released — the k_core/pagerank discipline); the oracle unrolls 12
+    expansion to the EMPTY-frontier fixpoint (the sssp_distances
+    relaxation over unit weights — per round one node-key relax join +
+    min-aggregate and one lazy full-outer merge checkpoint probed by one
+    action; superseded rounds released); the oracle unrolls 12
     min-relaxation rounds as MATERIALIZED CTEs (true eccentricity is 5
     at sf0.01 / 7 at sf0.1, measured; extra rounds are provably no-ops).
     Unreachable nodes are absent on BOTH sides."""
@@ -3203,11 +3204,12 @@ def q140_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_partkey")
     )
     # checkpoint the dominant self-join ONCE: it otherwise appears 4x
-    # (twice under the nodes union, twice under symmetrize) across the
-    # two eager checkpoint jobs inside bfs_distances (r08 review, fifth
-    # pass — the gate-side twin of the oracle's MATERIALIZED p fix).
-    # Released right after the call: bfs consumed it eagerly (its own e/
-    # visited checkpoints), so the returned frame no longer reads it.
+    # (twice under the nodes union, twice under the edge symmetrization)
+    # across bfs_distances' staged edge and source checkpoints (r08
+    # review, fifth pass — the gate-side twin of the oracle's
+    # MATERIALIZED p fix). Released right after the call: bfs ran every
+    # round before returning (its own edge/state checkpoints), so the
+    # returned frame no longer reads it.
     pairs = _copurchase_pairs(li).localCheckpoint(eager=True)
     nodes = (
         pairs.select(F.col("src").alias("node"))
@@ -3435,8 +3437,8 @@ def q143_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # checkpoint the dominant self-join ONCE (the q140 rationale: it
     # otherwise appears under both the weighted-edge build and the
-    # source-node derivation across sssp's eager checkpoint jobs);
-    # released right after the call — sssp consumed it eagerly
+    # source-node derivation across sssp's staged checkpoints); released
+    # right after the call — sssp ran every round before returning
     pairs = _copurchase_pairs(li).localCheckpoint(eager=True)
     weighted = pairs.select(
         "src", "dst", (F.lit(1) + (F.col("src") + F.col("dst")) % 5).cast("bigint").alias("w")

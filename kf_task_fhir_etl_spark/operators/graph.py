@@ -1,13 +1,23 @@
-"""Iterative graph computation as DataFrame plans — PageRank, alongside the
-connected-components operator in operators/dedup.py.
+"""Iterative graph computation as DataFrame plans — PageRank, personalized
+PageRank, label propagation, k-core, BFS and weighted shortest paths,
+alongside the connected-components operator in operators/dedup.py.
 
-The engine pattern for iteration (shared with dedup.connected_components):
-each round is one equi-join + one aggregate on the node key, the loop lives
-in the DRIVER as plan construction, and ``localCheckpoint`` truncates
-lineage each round so the plan stays flat instead of doubling (measured 2×
-on connected components, SCALE.md). Round count is FIXED (power iteration
-to a chosen depth), which keeps the computation deterministic and lets an
-oracle unroll the same rounds.
+The engine pattern for iteration: each round is a few joins + one
+aggregate on the node key, the loop lives in the DRIVER as plan
+construction, and ``localCheckpoint`` truncates lineage each round so the
+plan stays flat instead of doubling (measured 2× on connected components,
+SCALE.md). Superseded rounds are released as soon as the next one has
+materialized. Two loop shapes:
+
+- FIXED round count (pagerank, personalized_pagerank, label_propagation):
+  power iteration to a chosen depth, which keeps the computation
+  deterministic and lets an oracle unroll the same rounds.
+- Run to a FIXPOINT (bfs_distances, sssp_distances, k_core, and
+  dedup.connected_components / graph_delta.apply_sssp_inserts): the loop
+  stops at the first round that changes nothing. All but k_core run on
+  ``iterate_to_fixpoint``, the one checkpoint → probe → release → guard
+  policy; each fixpoint is unique, so an oracle that unrolls at least as
+  many rounds reproduces it (extra rounds are no-ops).
 
 Cross-engine float discipline: per-round ranks round to 12dp — far above
 ULP-level summation-order drift (~1e-16 relative), far below any real rank
@@ -17,8 +27,13 @@ produce bit-identical ranks round after round; final output rounds to 6dp.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from kf_task_fhir_etl_spark.etl import release_checkpoints
 
 
 def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -28,19 +43,57 @@ def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     return fwd.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the BlockManager storage behind a SUPERSEDED per-round
-    localCheckpoint. Without this, every operator call pinned each round's
-    vector plus the staged edge tables for the application lifetime (r06
-    review) — in the resident-driver steady state that is an unbounded
-    leak. Only the RETURNED frame's final checkpoint stays live; the
-    caller owns it and GC + ContextCleaner reclaim it with the result.
-    Delegates to etl.release_checkpoints — the single audited home of the
-    py4j reach-through — non-blocking because nothing synchronizes on the
-    removal (local import: etl is a higher layer; no import-time cycle)."""
-    from kf_task_fhir_etl_spark.etl import release_checkpoints
+def iterate_to_fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], tuple[DataFrame, int]],
+    max_rounds: int,
+    what: str,
+) -> DataFrame:
+    """Run ``step`` until a round changes nothing and return that
+    round's state — the one lifecycle policy of the fixpoint operators
+    (bfs/sssp_distances, graph_delta.apply_sssp_inserts,
+    dedup.connected_components).
 
-    release_checkpoints([df], blocking=False)
+    ``step(state)`` returns ``(nxt, changed)``: ``nxt`` sits behind a LAZY
+    ``localCheckpoint`` and ``changed`` comes from the round's ONE action,
+    which computes the step, persists ``nxt`` and probes it in a single
+    pass. Then:
+
+    - ``changed`` is 0 (or falsy): the confirmation round. ``nxt`` holds
+      the same values as ``state`` and is already materialized, so
+      ``state`` is released and ``nxt`` is the answer — a checkpoint of
+      the step's own plan even when no round changed anything, which
+      keeps the planned-stats lineage ``lifecycle.assert_bounded_stats``
+      is calibrated on.
+    - more than ``max_rounds`` PRODUCTIVE rounds: everything pinned here
+      is released (nothing was served) and ``RuntimeError`` names
+      ``what``, the operator's guard. Only productive rounds count, so
+      input needing exactly ``max_rounds`` still gets its confirmation
+      round instead of a spurious raise. The guard is loud, never a
+      silent truncation.
+    - otherwise the superseded ``state`` is released — safe, because the
+      action has already materialized ``nxt`` — and ``nxt`` goes on.
+
+    Releases are non-blocking: nothing synchronizes on the removal. An
+    initial ``state`` may be a projection of a caller's frame: releasing
+    it is a no-op (``etl.release_checkpoints`` frees checkpoint roots
+    only)."""
+    rounds = 0
+    while True:
+        nxt, changed = step(state)
+        rounds += bool(changed)
+        if rounds > max_rounds:
+            pinned = {id(d): d for d in (state, nxt)}
+            release_checkpoints(list(pinned.values()), blocking=False)
+            raise RuntimeError(
+                f"{what}={max_rounds} exceeded: round {rounds} still changed "
+                "the state — raise the guard, or check that the input has a "
+                "fixpoint (a negative-weight cycle has none)"
+            )
+        release_checkpoints([state], blocking=False)
+        if not changed:
+            return nxt
+        state = nxt
 
 
 def _normalize_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -164,7 +217,7 @@ def pagerank(
         # the new round is eagerly materialized — the previous round's
         # blocks are dead; the initial (non-checkpointed) vector is skipped
         if prev_ck is not None:
-            _release_checkpoint(prev_ck)
+            release_checkpoints([prev_ck], blocking=False)
         prev_ck = ranks
     # Staged inputs the returned frame no longer derives from are released
     # on EVERY exit path (r09 VERDICT #1 named the iters=0 leak on the PPR
@@ -172,17 +225,13 @@ def pagerank(
     # projection of the final round's checkpoint, so all four staged frames
     # go; with iters=0 the returned uniform vector still projects from
     # `nodes`, so the other three go and `nodes` stays (caller-owned, GC +
-    # ContextCleaner reclaim it with the result). (Named `frame`, not
-    # `staged`: the staleness guard conservatively links any use of an
-    # imported sibling's name, and lifecycle.staged exists — a shadowing
-    # local would dirty this gate every round.)
+    # ContextCleaner reclaim it with the result).
     releasable = (
-        (edges, nodes, edges_deg, dangling_nodes)
+        [edges, nodes, edges_deg, dangling_nodes]
         if prev_ck is not None
-        else (edges, edges_deg, dangling_nodes)
+        else [edges, edges_deg, dangling_nodes]
     )
-    for frame in releasable:
-        _release_checkpoint(frame)
+    release_checkpoints(releasable, blocking=False)
     return ranks.select("node", F.round(F.col("pr"), 6).alias("pr"))
 
 
@@ -257,13 +306,12 @@ def label_propagation(
             .localCheckpoint()
         )
         if prev_ck is not None:
-            _release_checkpoint(prev_ck)
+            release_checkpoints([prev_ck], blocking=False)
         prev_ck = labels
     if prev_ck is not None:
         # ≥1 round ran: the returned vector depends only on its own final
         # checkpoint — release the staged edge/node tables
-        _release_checkpoint(edges)
-        _release_checkpoint(nodes)
+        release_checkpoints([edges, nodes], blocking=False)
     return labels
 
 
@@ -445,10 +493,10 @@ def k_core(
             .localCheckpoint(eager=False)
         )
         n_nxt = nxt.count()
-        _release_checkpoint(keep)
+        release_checkpoints([keep], blocking=False)
         if n_nxt == n_cur:
             # fixpoint: nxt duplicates cur — release the duplicate blocks
-            _release_checkpoint(nxt)
+            release_checkpoints([nxt], blocking=False)
             break
         # the guard counts PRODUCTIVE peel rounds only, so a graph whose
         # peel depth is exactly max_rounds still gets its (free) fixpoint
@@ -459,20 +507,121 @@ def k_core(
             # empty answer is known, so the guard must not discard it
             # (r08 review, thirteenth pass; the bfs empty-frontier-before-
             # guard ordering applied here too)
-            _release_checkpoint(nxt)
-            _release_checkpoint(cur)
+            release_checkpoints([nxt, cur], blocking=False)
             raise RuntimeError(
                 f"k_core: still peeling after max_rounds={max_rounds} "
                 "productive rounds — raise the guard (each counted round "
                 "removed >=1 node, so the graph's peel depth exceeds it)"
             )
-        _release_checkpoint(cur)
+        release_checkpoints([cur], blocking=False)
         cur, n_cur = nxt, n_nxt
     if handles_out is not None:
         # hand the final round's edge checkpoint to the caller — the
         # returned aggregate cannot release it (docstring lifecycle note)
         handles_out.append(cur)
     return _degrees(cur, "deg")
+
+
+def _weighted_edges(
+    edges: DataFrame, weight_col: str, src: str, dst: str, directed: bool
+) -> DataFrame:
+    """(s, t, w) relaxation rows of a weighted edge list: both directions
+    unless ``directed``, NULL endpoints/weights and self-loops dropped (a
+    NULL weight cannot order, a self-loop never improves a distance), and
+    the weight cast to the distance dtype — bigint for integral weights
+    (exact), double otherwise."""
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    dist_t = "bigint" if isinstance(edges.schema[weight_col].dataType, integral) else "double"
+    w = F.col(weight_col).cast(dist_t).alias("w")
+    out = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"), w)
+    if not directed:
+        out = out.unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("t"), w))
+    return out.filter(
+        F.col("s").isNotNull()
+        & F.col("t").isNotNull()
+        & F.col("w").isNotNull()
+        & (F.col("s") != F.col("t"))
+    )
+
+
+def stage_sssp_edges(
+    edges: DataFrame,
+    weight_col: str = "w",
+    src: str = "src",
+    dst: str = "dst",
+    directed: bool = False,
+) -> DataFrame:
+    """Stage the shortest-path propagation medium ONCE: the
+    ``_weighted_edges`` rows with parallel edges collapsed to their min
+    weight (only the lightest copy can win a relaxation — this bounds
+    every round's join fan-out and IS the undirected dedupe),
+    co-partitioned on ``s`` so each round shuffles only the frontier
+    side, behind a LAZY ``localCheckpoint`` that the first relaxation
+    round materializes. ``sssp_distances`` stages its edges here; callers
+    applying many ``graph_delta.apply_sssp_inserts`` batches over one
+    post-changelog edge set pass the result as ``edges_staged`` to pay
+    the O(|E|) shuffle once (r10 ADVICE). Such a frame is CALLER-owned:
+    release it with ``etl.release_checkpoints`` when done."""
+    return (
+        _weighted_edges(edges, weight_col, src, dst, directed)
+        .groupBy("s", "t")
+        .agg(F.min("w").alias("w"))
+        .repartition("s")
+        .localCheckpoint(eager=False)
+    )
+
+
+def _relax(
+    state: DataFrame,
+    seed: DataFrame,
+    max_rounds: int,
+    what: str,
+    stage: Callable[[], DataFrame] | None = None,
+) -> DataFrame:
+    """Frontier Bellman-Ford on ``iterate_to_fixpoint`` — the ONE
+    relaxation loop behind bfs_distances, sssp_distances and
+    graph_delta.apply_sssp_inserts. ``state`` is (node, dist,
+    __improved); its improved rows are the first frontier. Each round
+    relaxes the (s, t, w) edges OUT OF the frontier — one node-key join +
+    min-aggregate on the destination — then ONE full-outer merge of the
+    candidates against the distance table is the round's lazy checkpoint
+    (next distance = the per-node least, improved = strictly lowered or
+    newly reached), and counting its improved rows is the round's one
+    action. Round 1 relaxes ``seed``; with ``stage``, the first productive
+    round calls it once for the edges of every later round, so a seed
+    that improves nothing never builds them. Returns the final state."""
+    edges = seed
+
+    def step(cur: DataFrame) -> tuple[DataFrame, int]:
+        nonlocal edges, stage
+        frontier = cur.filter(F.col("__improved")).select(
+            F.col("node").alias("s"), F.col("dist").alias("__d")
+        )
+        cand = (
+            edges.join(frontier, "s")
+            .groupBy(F.col("t").alias("node"))
+            .agg(F.min(F.col("__d") + F.col("w")).alias("__cand"))
+        )
+        nxt = (
+            cur.select("node", "dist")
+            .join(cand, "node", "full")
+            .select(
+                "node",
+                # least() skips NULLs (never both NULL under a full outer join)
+                F.least(F.col("dist"), F.col("__cand")).alias("dist"),
+                (
+                    F.col("__cand").isNotNull()
+                    & (F.col("dist").isNull() | (F.col("__cand") < F.col("dist")))
+                ).alias("__improved"),
+            )
+            .localCheckpoint(eager=False)
+        )
+        changed = nxt.filter(F.col("__improved")).count()
+        if changed and stage is not None:
+            edges, stage = stage(), None
+        return nxt, changed
+
+    return iterate_to_fixpoint(state, step, max_rounds, what)
 
 
 def bfs_distances(
@@ -486,113 +635,32 @@ def bfs_distances(
 ) -> DataFrame:
     """Multi-source BFS hop distances: (node, dist) — the minimum number
     of edges from ANY source node, for every reachable node (unreachable
-    nodes are absent, the standard convention). Level-synchronous frontier
-    expansion — the textbook distributed BFS:
+    nodes are absent, the standard convention). BFS is shortest paths
+    with unit weights, so this runs the ``sssp_distances`` relaxation over
+    (src, dst, 1): with equal weights round k assigns distance k exactly
+    to the nodes first reached in it and never improves an earlier one —
+    level-synchronous frontier expansion, the textbook distributed BFS,
+    with the same per-round plan, lifecycle and edge staging as SSSP.
+    ``dist`` is cast back to int.
 
-    per round: frontier ⋈ edges on the node key → neighbor set, one
-    left-anti against the visited set (new nodes only), distance = round
-    index. The frontier is checkpointed per round and superseded rounds
-    released (the pagerank/k_core discipline); the visited set grows to
-    |reachable| rows and is rebuilt per round by union — at 100 TB both
-    sides of every join are node-key partitioned and the edge list is
-    shuffled to its join partitioning ONCE. Terminates when a frontier
-    comes back empty (checkpoints are EAGER — the per-round count reads
-    already-materialized blocks; converting to lazy checkpoints would
-    also require re-auditing the deferred-release ordering); ``max_depth``
-    is a loud guard against pathological chains,
-    not a silent truncation. BFS levels are unique fixpoints, so an
-    unrolled SQL oracle with rounds ≥ the true eccentricity reproduces
-    the distances exactly (extra rounds are no-ops).
+    ``max_depth`` is a loud guard against pathological chains, not a
+    silent truncation: it trips only when a node would be ASSIGNED a
+    distance beyond it, so a graph whose eccentricity is exactly
+    ``max_depth`` gets its (cheap, empty) confirmation round. BFS levels
+    are unique fixpoints, so an unrolled SQL oracle with rounds ≥ the true
+    eccentricity reproduces the distances exactly (extra rounds are
+    no-ops).
 
     ``directed=False`` (default) symmetrizes the edge list first;
     ``sources`` is a one-column (``source_col``) frame — dedup'd and
     intersected with nothing: a source absent from the graph still
     reports dist 0 (it IS reachable from itself)."""
-    e = (
-        # NULL endpoints dropped explicitly (r08 review): symmetrize's
-        # src != dst filter drops them on the undirected path, but a raw
-        # directed list from an outer join would otherwise push NULL into
-        # the frontier as a phantom "node" with a distance
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).filter(
-            F.col(src).isNotNull() & F.col(dst).isNotNull()
-        ).distinct()  # symmetrize dedupes the undirected path; a raw
-        # outer-join-derived directed list is duplicate-heavy and every
-        # round's frontier join would shuffle the multiplied rows before
-        # neighbors.distinct() discards them (r08 review, seventh pass)
-        if directed
-        else symmetrize(edges, src, dst).select(
-            F.col("src").alias("s"), F.col("dst").alias("t")
-        )
+    unit = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), F.lit(1).alias("w"))
+    dist = _shortest_paths(
+        unit, sources, "w", "src", "dst", source_col, max_depth, directed, None,
+        "bfs_distances: max_depth",
     )
-    # LAZY staging + merged-state rounds (r12, guide §1.2 "fewer passes"):
-    # the old formulation paid THREE jobs per round (eager new_frontier
-    # checkpoint, frontier count, eager new_visited checkpoint). One
-    # full-outer merge of (neighbors @ depth) against the visited set is
-    # the round's ONLY checkpoint — the sssp_distances merge formulation —
-    # and the frontier count materializes it lazily, so a round is ONE job
-    # that computes the step, persists the blocks, and counts the new
-    # frontier in a single pass. The next visited set and the next
-    # frontier are both projections of the merged state. Release ordering
-    # is audited: the previous generation is freed only AFTER the count
-    # has materialized the new one.
-    e = e.repartition("s").localCheckpoint(eager=False)
-    state = (
-        # NULL sources dropped like NULL edge endpoints (r08 review,
-        # third pass): an outer-join-derived source list would otherwise
-        # emit a phantom (NULL, 0) row no SQL oracle produces
-        sources.filter(F.col(source_col).isNotNull())
-        .select(F.col(source_col).alias("node"))
-        .distinct()
-        .select("node", F.lit(0).alias("dist"))
-        .localCheckpoint(eager=False)
-    )
-    visited = state
-    frontier = state
-    frontier_n = frontier.count()
-    depth = 0
-    while frontier_n > 0:
-        depth += 1
-        neighbors = (
-            e.join(frontier.select(F.col("node").alias("s")), "s")
-            .select(F.col("t").alias("node"))
-            .distinct()
-        )
-        merged = (
-            neighbors.select("node", F.lit(depth).alias("__nd"))
-            .join(visited.withColumnRenamed("dist", "__cur"), "node", "full")
-            .localCheckpoint(eager=False)
-        )
-        new_frontier = merged.filter(F.col("__cur").isNull()).select(
-            "node", F.col("__nd").alias("dist")
-        )
-        frontier_n = new_frontier.count()
-        if frontier_n == 0:
-            # terminating round: the frontier is empty, so the merge added
-            # nothing — `visited` (over the PREVIOUS state) is the answer
-            _release_checkpoint(merged)
-            break
-        if depth > max_depth:
-            # the guard trips only when a node would be ASSIGNED a
-            # distance beyond max_depth — a graph whose eccentricity is
-            # exactly max_depth gets its (cheap, empty) confirmation
-            # round instead of a spurious raise, the k_core off-by-one
-            # fix applied here too (r08 review, fourth pass).
-            # release-before-raise (the q129 discipline): nothing was
-            # served, so every pinned generation goes, deduped by id
-            for stale_df in {id(d): d for d in (e, state, merged)}.values():
-                _release_checkpoint(stale_df)
-            raise RuntimeError(
-                f"bfs_distances: a node at distance {depth} > max_depth="
-                f"{max_depth} exists — raise the guard for deep graphs"
-            )
-        # the count above materialized the merged state — the previous
-        # generation is superseded and safe to free
-        _release_checkpoint(state)
-        state = merged
-        visited = merged.select("node", F.coalesce("__cur", "__nd").alias("dist"))
-        frontier = new_frontier
-    _release_checkpoint(e)
-    return visited
+    return dist.select("node", F.col("dist").cast("int").alias("dist"))
 
 
 def sssp_distances(
@@ -609,26 +677,15 @@ def sssp_distances(
     """Multi-source weighted shortest-path distances (node, dist) — the
     minimum total edge weight from ANY source, for every reachable node
     (unreachable nodes absent, the bfs_distances convention). Frontier
-    Bellman-Ford: ``bfs_distances`` generalized from hop counts to
-    min-relaxation over a weight column (VERDICT r08 #4 — the sixth
-    member of the iterative family after pagerank / label propagation /
-    connected components / k-core / BFS, same per-round template).
-
-    Per round: relax only edges OUT OF the frontier (nodes whose
-    tentative distance improved last round) — one node-key join +
-    min-aggregate on the destination — then ONE full-outer merge of the
-    candidates against the current distance table is the round's ONLY
-    checkpoint: the next frontier (strictly-improved nodes) and the next
-    distance table (per-node least) are both lazy PROJECTIONS of that
-    merged state, so a round costs two local jobs (merge materialization
-    + frontier count), not three — measured ~35% off the
-    anti-join+union formulation's wall clock at sf0.01, where iteration
-    cost is job-submission-bound (the q85/q140 lesson). Superseded
-    generations are released immediately. Terminates when a round
-    improves nothing. At 100 TB the edge list is shuffled to its join
-    partitioning ONCE (and parallel edges collapse to their min weight
-    up front — only the lightest copy can ever win a relaxation);
-    per-round state is the |V|-row merged frame.
+    Bellman-Ford (``_relax``): a round relaxes only the edges out of the
+    nodes improved last round and costs ONE action, which computes,
+    persists and probes the round's full-outer merge in a single pass
+    (the anti-join+union formulation it replaced cost ~35% more wall
+    clock at sf0.01, where iteration is job-submission-bound).
+    Terminates when a round improves nothing. At 100 TB the edge list is
+    shuffled to its join partitioning ONCE (``stage_sssp_edges``, which
+    also collapses parallel edges to their min weight); per-round state
+    is the |V|-row merged frame.
 
     Lifecycle (the k_core r08-ADVICE contract): the returned frame is a
     projection over the final round's |V|-row checkpoint — pass
@@ -639,11 +696,11 @@ def sssp_distances(
     (non-negative weights; ≤ |V|−1 by Bellman-Ford), so distances are a
     unique fixpoint and an unrolled min-relaxation SQL oracle with
     rounds ≥ that bound is byte-identical — extra rounds are no-ops.
-    ``max_rounds`` counts PRODUCTIVE rounds (each improved ≥1 node, the
-    k_core guard semantics) and raises loudly beyond — which is also
-    the only way out of a negative-weight cycle, where "shortest" is
-    undefined; negative edge WEIGHTS without a negative cycle relax
-    correctly (textbook Bellman-Ford).
+    ``max_rounds`` counts PRODUCTIVE rounds (each improved ≥1 node) and
+    raises loudly beyond — which is also the only way out of a
+    negative-weight cycle, where "shortest" is undefined; negative edge
+    WEIGHTS without a negative cycle relax correctly (textbook
+    Bellman-Ford).
 
     Distance dtype: bigint for integral weights (exact — use integer
     weights when an external engine must reproduce the values
@@ -653,101 +710,50 @@ def sssp_distances(
     cross-engine caveat). ``directed=False`` symmetrizes (each edge
     relaxable both ways at the same weight); self-loops and NULL
     endpoints/weights are dropped (a NULL weight cannot order)."""
-    from pyspark.sql import types as T
+    return _shortest_paths(
+        edges, sources, weight_col, src, dst, source_col, max_rounds, directed,
+        handles_out, "sssp_distances: max_rounds",
+    )
 
-    wt = edges.schema[weight_col].dataType
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    dist_t = "bigint" if isinstance(wt, integral) else "double"
-    fwd = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t"), F.col(weight_col).cast(dist_t).alias("w")
-    )
-    e = (
-        fwd
-        if directed
-        else fwd.unionByName(
-            edges.select(
-                F.col(dst).alias("s"), F.col(src).alias("t"), F.col(weight_col).cast(dist_t).alias("w")
-            )
-        )
-    )
-    e = (
-        e.filter(
-            F.col("s").isNotNull()
-            & F.col("t").isNotNull()
-            & F.col("w").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
-        # parallel edges: only the min weight can win a relaxation —
-        # collapsing up front bounds every round's join fan-out (and IS
-        # the undirected dedupe: symmetrized duplicates collapse here)
-        .groupBy("s", "t")
-        .agg(F.min("w").alias("w"))
-        .repartition("s")
-        .localCheckpoint(eager=False)
-    )
+
+def _shortest_paths(
+    edges: DataFrame,
+    sources: DataFrame,
+    weight_col: str,
+    src: str,
+    dst: str,
+    source_col: str,
+    max_rounds: int,
+    directed: bool,
+    handles_out: list[DataFrame] | None,
+    what: str,
+) -> DataFrame:
+    """sssp_distances with the guard named by ``what`` (bfs_distances
+    reports its own ``max_depth``)."""
+    e = stage_sssp_edges(edges, weight_col, src, dst, directed)
     state = (
-        # the round-0 "merged state": sources at distance 0 — dist and
-        # frontier below are projections of whatever `state` currently is
+        # NULL sources dropped (r08 review, third pass): an outer-join-
+        # derived source list would otherwise emit a phantom (NULL, 0) row
+        # no SQL oracle produces. Every source starts in the frontier.
         sources.filter(F.col(source_col).isNotNull())
         .select(F.col(source_col).alias("node"))
         .distinct()
-        .select("node", F.lit(0).cast(dist_t).alias("dist"))
+        .select(
+            "node",
+            F.lit(0).cast(e.schema["w"].dataType).alias("dist"),
+            F.lit(True).alias("__improved"),
+        )
         .localCheckpoint(eager=False)
     )
-    dist = state
-    frontier = state
-    improved_n = frontier.count()
-    rounds = 0
-    while improved_n > 0:
-        cand = (
-            e.join(frontier.select(F.col("node").alias("s"), "dist"), "s")
-            .select(F.col("t").alias("node"), (F.col("dist") + F.col("w")).alias("cand"))
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        # the round's ONE checkpoint: full-outer candidates-vs-current —
-        # at least one side is non-NULL per row by construction. LAZY
-        # (r12): the frontier count below is the round's ONE job — it
-        # computes the merge, persists the blocks, and counts in a single
-        # pass (previously a materialization job AND a count job).
-        merged = cand.join(dist.withColumnRenamed("dist", "__cur"), "node", "full").localCheckpoint(
-            eager=False
-        )
-        new_frontier = merged.filter(
-            F.col("cand").isNotNull()
-            & (F.col("__cur").isNull() | (F.col("cand") < F.col("__cur")))
-        ).select("node", F.col("cand").alias("dist"))
-        improved_n = new_frontier.count()
-        if improved_n == 0:
-            # fixpoint: the confirmation round's merge adds nothing —
-            # `dist` (over the PREVIOUS state) already is the answer
-            _release_checkpoint(merged)
-            break
-        rounds += 1
-        if rounds > max_rounds:
-            # release-before-raise (the bfs discipline)
-            for stale in {id(d): d for d in (e, state, merged)}.values():
-                _release_checkpoint(stale)
-            raise RuntimeError(
-                f"sssp_distances: still relaxing after max_rounds={max_rounds} "
-                "productive rounds — raise the guard for long shortest paths, "
-                "or check the graph for a negative-weight cycle (distances "
-                "have no fixpoint there)"
-            )
-        # superseded generation goes AFTER the count above materialized the
-        # lazy merge (the audited release ordering); dist/frontier now
-        # re-derive from the new state
-        _release_checkpoint(state)
-        state = merged
-        # least() skips NULLs (never both NULL under a full outer join)
-        dist = merged.select("node", F.least(F.col("cand"), F.col("__cur")).alias("dist"))
-        frontier = new_frontier
-    _release_checkpoint(e)
+    try:
+        state = _relax(state, e, max_rounds, what)
+    finally:
+        release_checkpoints([e], blocking=False)
     if handles_out is not None:
         # the caller owns the final state's blocks — the returned
         # projection's root cannot release them (the k_core lifecycle)
         handles_out.append(state)
-    return dist
+    return state.select("node", "dist")
 
 
 def personalized_pagerank(
@@ -805,8 +811,7 @@ def personalized_pagerank(
     )
     s = restart_ck.filter(F.col("__s")).count()
     if s == 0:
-        for frame in (edges, nodes, restart_ck):
-            _release_checkpoint(frame)
+        release_checkpoints([edges, nodes, restart_ck], blocking=False)
         raise ValueError(
             "personalized_pagerank: no source node exists in the graph — "
             "the restart vector would be all-zero"
@@ -864,7 +869,7 @@ def personalized_pagerank(
                 restart.join(sums, "node", "left").select("node", new_pr).localCheckpoint()
             )
         if prev_ck is not None:
-            _release_checkpoint(prev_ck)
+            release_checkpoints([prev_ck], blocking=False)
         prev_ck = ranks
     # The four graph-side staged frames are released on EVERY exit path
     # (r09 VERDICT #1: gating them on prev_ck leaked all four — plus
@@ -872,10 +877,9 @@ def personalized_pagerank(
     # returned frame is a projection of `restart_ck` ONLY, so the graph
     # frames are already dead; after ≥1 round the final round's checkpoint
     # carries the result and restart_ck is superseded too.
-    for frame in (edges, nodes, edges_deg, dangling_nodes):
-        _release_checkpoint(frame)
+    release_checkpoints([edges, nodes, edges_deg, dangling_nodes], blocking=False)
     if prev_ck is not None:
         # the restart vector's checkpoint is superseded too: the returned
         # frame re-derives from the FINAL round's checkpoint only
-        _release_checkpoint(restart_ck)
+        release_checkpoints([restart_ck], blocking=False)
     return ranks.select("node", F.round(F.col("pr"), 6).alias("pr"))

@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kf_task_fhir_etl_spark.operators.dedup import connected_components
+from kf_task_fhir_etl_spark.operators.graph import stage_sssp_edges
 from kf_task_fhir_etl_spark.operators.lifecycle import assert_bounded_stats
 
 
@@ -180,41 +181,6 @@ def apply_components_delta(
     return remapped
 
 
-def stage_sssp_edges(
-    edges: DataFrame,
-    weight_col: str = "w",
-    src: str = "src",
-    dst: str = "dst",
-    directed: bool = False,
-) -> DataFrame:
-    """Symmetrize + min-collapse + co-partition the SSSP propagation
-    medium ONCE, for reuse across insert batches (r10 ADVICE: rebuilding
-    it per ``apply_sssp_inserts`` call is an O(|E|) shuffle per batch).
-    Returns a localCheckpointed (s, t, w) frame the CALLER owns — pass it
-    as ``edges_staged`` to every batch over the same post-changelog edge
-    set, and release it with ``etl.release_checkpoints`` when done."""
-    fwd = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("t"), F.col(weight_col).alias("w")
-    )
-    out = fwd if directed else fwd.unionByName(
-        edges.select(
-            F.col(dst).alias("s"), F.col(src).alias("t"), F.col(weight_col).alias("w")
-        )
-    )
-    return (
-        out.filter(
-            F.col("s").isNotNull() & F.col("t").isNotNull() & F.col("w").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
-        .groupBy("s", "t")
-        .agg(F.min("w").alias("w"))
-        .repartition("s")
-        # LAZY (r12): materialized by the first relaxation round's count;
-        # callers release it only after their terminal action either way
-        .localCheckpoint(eager=False)
-    )
-
-
 def apply_sssp_inserts(
     dist: DataFrame,
     edges_new: DataFrame,
@@ -245,115 +211,52 @@ def apply_sssp_inserts(
     ``base_new`` precedent). ``delta_edges``: the inserted edges
     (src, dst, weight_col); symmetrized unless ``directed``.
 
-    Plan shape: the SEED frontier is the inserted edges' one-hop
-    relaxation against the current table — ONE broadcast-delta join,
-    batch-sized — and each later round is ``sssp_distances``' frontier
-    template (relax out of the improved set, min-aggregate, one
-    full-outer merge checkpoint) over the post-changelog edges, so the
-    per-round cost is bounded by the improvement wavefront, never a full
-    restart from the sources. The propagation medium is staged LAZILY
-    (r10 VERDICT What's-wrong #2): the seed runs first, and the
-    symmetrize/min-collapse/checkpoint of ``edges_new`` happens only when
-    the first frontier is non-empty — so an insert that improves nothing
-    costs the seed join and one empty-frontier check, FULL STOP, never an
-    O(|E|) shuffle. Callers applying many batches over one edge set pass
-    ``edges_staged`` (from ``stage_sssp_edges``) to pay that shuffle once
-    across all of them; a staged frame is caller-owned and never released
-    here. ``max_rounds`` counts productive rounds and raises loudly (also
-    the negative-cycle exit for negative delta weights). Integer weights
-    stay exact (bigint); see the sssp_distances float caveat otherwise."""
+    Plan shape: ``sssp_distances``' relaxation (graph._relax), continued.
+    Round 1 is the SEED: the inserted edges relaxed against the WHOLE
+    current table — ONE broadcast-delta join, batch-sized. Each later
+    round relaxes out of the improved set over the post-changelog edges,
+    so the per-round cost is bounded by the improvement wavefront, never
+    a full restart from the sources. The propagation medium is staged
+    LAZILY (r10 VERDICT What's-wrong #2): ``stage_sssp_edges(edges_new)``
+    runs only once the seed improved something — so an insert that
+    improves nothing costs the seed join and one empty-frontier check,
+    FULL STOP, never an O(|E|) shuffle. Callers applying many batches
+    over one edge set pass ``edges_staged`` (from ``stage_sssp_edges``)
+    to pay that shuffle once across all of them; a staged frame is
+    caller-owned and never released here. ``max_rounds`` counts
+    productive rounds, the seed included, and raises loudly (also the
+    negative-cycle exit for negative delta weights). Integer weights
+    stay exact (bigint); see the sssp_distances float caveat otherwise.
+    ``handles_out`` receives the final merge's checkpoint, which the
+    returned projection reads (the sssp_distances lifecycle)."""
     from kf_task_fhir_etl_spark.etl import release_checkpoints
+    from kf_task_fhir_etl_spark.operators.graph import _relax, _weighted_edges
 
     # storage-boundary guardrail on the state INPUT (r12 — see lifecycle)
     assert_bounded_stats(dist, context="apply_sssp_inserts dist input")
+    owned: list[DataFrame] = []
 
-    def _sym(frame: DataFrame) -> DataFrame:
-        fwd = frame.select(
-            F.col(src).alias("s"), F.col(dst).alias("t"), F.col(weight_col).alias("w")
-        )
-        if directed:
-            out = fwd
-        else:
-            out = fwd.unionByName(
-                frame.select(
-                    F.col(dst).alias("s"), F.col(src).alias("t"), F.col(weight_col).alias("w")
-                )
-            )
-        return out.filter(
-            F.col("s").isNotNull() & F.col("t").isNotNull() & F.col("w").isNotNull()
-            & (F.col("s") != F.col("t"))
-        )
+    def stage() -> DataFrame:
+        if edges_staged is not None:
+            return edges_staged
+        owned.append(stage_sssp_edges(edges_new, weight_col, src, dst, directed))
+        return owned[0]
 
-    d = _sym(delta_edges)
-    e: DataFrame | None = edges_staged  # staged lazily when None
-
-    def _merge(table: DataFrame, cand: DataFrame) -> DataFrame:
-        return (
-            table.join(
-                cand.withColumnRenamed(node_col, "__n"),
-                F.col(node_col) == F.col("__n"),
-                "full",
-            )
-            .select(
-                F.coalesce(F.col(node_col), F.col("__n")).alias(node_col),
-                F.least(F.col(dist_col), F.col("__cand")).alias(dist_col),
-                (
-                    F.col(dist_col).isNull()
-                    | (F.col("__cand").isNotNull() & (F.col("__cand") < F.col(dist_col)))
-                ).alias("__improved"),
-            )
-            # LAZY (r12): the caller's frontier count materializes the
-            # merge in the same job (one pass per round, not two); the
-            # superseded state is released only after that count
-            .localCheckpoint(eager=False)
-        )
-
-    # seed: relax ONLY the inserted edges against the current distances
-    seed = (
-        dist.join(F.broadcast(d), dist[node_col] == F.col("s"))
-        .select(F.col("t").alias(node_col), (F.col(dist_col) + F.col("w")).alias("__cand"))
-        .groupBy(node_col)
-        .agg(F.min("__cand").alias("__cand"))
+    # the seed's frontier is the whole table; releasing this projection
+    # of the caller's frame is a no-op (it is no checkpoint root)
+    state = dist.select(
+        F.col(node_col).alias("node"),
+        F.col(dist_col).alias("dist"),
+        F.lit(True).alias("__improved"),
     )
-    state = _merge(dist.select(node_col, dist_col), seed)
-    frontier = state.filter(F.col("__improved")).select(node_col, dist_col)
-    improved_n = frontier.count()
-    owns_e = False
-    rounds = 0
-    while improved_n > 0:
-        if e is None:
-            # first productive round: NOW the propagation medium is worth
-            # building (an improvement at v must flow onward through v's
-            # old edges too — the apply_minmax_delta base_new precedent)
-            e = stage_sssp_edges(edges_new, weight_col, src, dst, directed)
-            owns_e = True
-        rounds += 1
-        if rounds > max_rounds:
-            release_checkpoints([e, state] if owns_e else [state], blocking=False)
-            raise RuntimeError(
-                f"apply_sssp_inserts: still relaxing after max_rounds="
-                f"{max_rounds} productive rounds — raise the guard for long "
-                "improvement chains, or check the delta for a negative-"
-                "weight cycle"
-            )
-        cand = (
-            e.join(frontier.withColumnRenamed(node_col, "s"), "s")
-            .select(F.col("t").alias(node_col), (F.col(dist_col) + F.col("w")).alias("__cand"))
-            .groupBy(node_col)
-            .agg(F.min("__cand").alias("__cand"))
-        )
-        merged = _merge(state.select(node_col, dist_col), cand)
-        frontier = merged.filter(F.col("__improved")).select(node_col, dist_col)
-        improved_n = frontier.count()
-        # the count materialized the lazy merge — NOW the superseded
-        # generation is safe to free (r12 release-ordering audit)
-        release_checkpoints([state], blocking=False)
-        state = merged
-    if owns_e:
-        release_checkpoints([e], blocking=False)
+    seed = F.broadcast(_weighted_edges(delta_edges, weight_col, src, dst, directed))
+    try:
+        state = _relax(state, seed, max_rounds, "apply_sssp_inserts: max_rounds", stage)
+    finally:
+        release_checkpoints(owned, blocking=False)
     if handles_out is not None:
         handles_out.append(state)
-    return state.select(node_col, dist_col)
+    return state.select(F.col("node").alias(node_col), F.col("dist").alias(dist_col))
 
 
 # ---------------------------------------------------------------------------
