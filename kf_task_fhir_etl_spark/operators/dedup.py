@@ -184,18 +184,18 @@ def minhash_lsh_candidates(
             F.col("b.digest").alias("digest"),
             *[F.col(f"d{b}") for b in range(bands)],
         )
-        # Materialize the band table ONCE, pre-partitioned on the join key:
-        # the self-join's two sides would otherwise each recompute the full
-        # signature pipeline (Spark's exchange reuse does not collapse the
-        # aliased subplans here), and localCheckpoint preserves the
-        # (band, digest) partitioning so the join itself adds no exchange.
-        # Measured 4.4 → 3.6 s at sf0.1 — and the win compounds into every
+        # Materialize the band table ONCE: the self-join's two sides would
+        # otherwise each recompute the full signature pipeline (Spark's
+        # exchange reuse does not collapse the aliased subplans here). The
+        # (band, digest) repartition does NOT carry into the join: planned
+        # adaptively, the checkpoint reports no partitioning, and the
+        # executed plan shows an Exchange hashpartitioning(band, digest)
+        # over each side's scan of it. Measured 4.4 → 3.6 s at sf0.1 — and the win compounds into every
         # candidate consumer (q12 verify, q63/q72 components). State is
         # executor-local disk, O(docs × bands) small rows — scale-safe.
         # LAZY (r12): the first downstream action materializes the blocks
         # inside its own job; both join sides then read them — the
-        # standalone materialization job disappears, partitioning is
-        # preserved through the LogicalRDD either way.
+        # standalone materialization job disappears.
         # EXPLICIT partition count (r13): without it AQE coalesces this
         # small-byte exchange to 1-2 partitions and the self-join + the
         # downstream Jaccard verify (the chain's CPU-dense O(pairs) work)
@@ -517,42 +517,16 @@ def connected_components(
     ContextCleaner reclaim it with the result.
     """
     from kf_task_fhir_etl_spark.etl import release_checkpoints
-    from kf_task_fhir_etl_spark.operators.graph import iterate_to_fixpoint
+    from kf_task_fhir_etl_spark.operators.graph import (
+        _pinned,
+        _static_plans,
+        iterate_to_fixpoint,
+    )
 
     a, b = edge_cols
-    # Materialize the edge list ONCE: every round joins against it, and
-    # without this each round would re-execute the full upstream plan
-    # (e.g. MinHash-LSH candidate generation) — measured 14s → 6s at sf0.1.
-    # Pre-partition on the join key BEFORE checkpointing: localCheckpoint
-    # preserves outputPartitioning, so every round's edge⋈label join
-    # shuffles only the tiny label side — the big edge list is shuffled
-    # exactly once for the whole algorithm, not once per round.
-    # Symmetrize via explode, not union-of-two-selects: the union form
-    # references the UN-checkpointed `edges` twice, so the upstream
-    # candidate plan (its band self-join probe — the signature pipeline
-    # itself is already checkpointed inside minhash_lsh_candidates)
-    # executes twice before this checkpoint. One explode pass derives the
-    # candidate frame exactly once (r09, closing the VERDICT r08 q63
-    # question; measured 3.26 → 3.00 s for the sym materialization at
-    # sf0.1 — the residual r08 delta was host band).
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
-                    F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .repartition("dst")
-        # LAZY (r12, guide §1.2 "fewer passes"): round 1's fixpoint action
-        # materializes these blocks inside its own job — the standalone
-        # eager-materialization job disappears; partitioning preservation
-        # through the LogicalRDD is unchanged
-        .localCheckpoint(eager=False)
-    )
-    labels = nodes.select(F.col(node_col).alias("src"), F.col(node_col).alias("label"))
+    labels = _pinned(nodes.select(F.col(node_col).alias("src"), F.col(node_col).alias("label")))
+    pinned = _pinned(edges)
+    sym = None
 
     def step(cur: DataFrame) -> tuple[DataFrame, bool]:
         labels = cur.select("src", "label")
@@ -581,11 +555,49 @@ def connected_components(
         return stepped, bool(changed)
 
     try:
-        labels = iterate_to_fixpoint(labels, step, max_iter, "connected_components: max_iter")
+        # n is sized from the edges as well as the labels
+        with _static_plans(labels, pinned):
+            # Materialize the edge list ONCE: every round joins against it,
+            # and without this each round would re-execute the full
+            # upstream plan (e.g. MinHash-LSH candidate generation) —
+            # measured 14s → 6s at sf0.1. Pre-partition on the join key
+            # BEFORE checkpointing, inside the static scope: the checkpoint
+            # keeps hashpartitioning(dst, n), so every round's edge⋈label
+            # join shuffles only the label side and the big edge list is
+            # shuffled exactly once for the whole algorithm (an adaptively
+            # planned checkpoint reports no partitioning, and every round
+            # would re-shuffle it).
+            # Symmetrize via explode, not union-of-two-selects: the union
+            # form references the UN-checkpointed `edges` twice, so the
+            # upstream candidate plan (its band self-join probe — the
+            # signature pipeline itself is already checkpointed inside
+            # minhash_lsh_candidates) executes twice before this
+            # checkpoint. One explode pass derives the candidate frame
+            # exactly once (r09; measured 3.26 → 3.00 s for the sym
+            # materialization at sf0.1).
+            sym = (
+                pinned.select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col(a).alias("src"), F.col(b).alias("dst")),
+                            F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
+                        )
+                    ).alias("e")
+                )
+                .select("e.src", "e.dst")
+                .repartition("dst")
+                # LAZY (r12): round 1's fixpoint action materializes these
+                # blocks inside its own job
+                .localCheckpoint(eager=False)
+            )
+            labels = iterate_to_fixpoint(labels, step, max_iter, "connected_components: max_iter")
     finally:
         # the returned frame's lineage roots at the FINAL round's
-        # checkpoint only — the staged edge table has no remaining consumer
-        release_checkpoints([sym], blocking=False)
+        # checkpoint only — the staged edge table (and the pinned edge
+        # input) has no remaining consumer
+        release_checkpoints(
+            [d for d in (sym, pinned) if d is not None and d is not edges], blocking=False
+        )
     return labels.select(F.col("src").alias(node_col), F.col("label").alias("component"))
 
 

@@ -19,6 +19,19 @@ materialized. Two loop shapes:
   policy; each fixpoint is unique, so an oracle that unrolls at least as
   many rounds reproduces it (extra rounds are no-ops).
 
+Every loop of either shape but personalized_pagerank (whose gate, q150,
+measured no faster wrapped) plans its rounds statically inside
+``_static_plans``: adaptive execution off and ``spark.sql.shuffle.partitions``
+set to ``n``, the largest partition count adaptive execution already chose
+for the loop's inputs (state and edge input), both settings restored on
+every exit. A round's plan is then one Spark job instead of one job per
+shuffle-map and broadcast stage, and an edge set staged inside the scope
+keeps its ``hashpartitioning(key, n)``, so a round shuffles only its
+|V|-sized side. The settings belong to the SESSION, which threads share:
+no thread may run a graph loop while another plans on the same session
+(the threaded callers today — q115's FHIR pool, ``etl``'s build pools and
+``compaction`` — run none).
+
 Cross-engine float discipline: per-round ranks round to 12dp — far above
 ULP-level summation-order drift (~1e-16 relative), far below any real rank
 gap — so Spark's distributed partial sums and a sequential SQL engine
@@ -27,7 +40,8 @@ produce bit-identical ranks round after round; final output rounds to 6dp.
 
 from __future__ import annotations
 
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,6 +55,59 @@ def symmetrize(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     rev = edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
     return fwd.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
+
+
+_AQE = "spark.sql.adaptive.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _pinned(df: DataFrame) -> DataFrame:
+    """``df`` itself when its partition count is known without a job (a
+    checkpoint, a scan, or a narrow plan over one); otherwise a LAZY
+    ``localCheckpoint`` of it, whose creation runs the exchanges adaptive
+    execution still had to run — once, where the staging that reads it
+    would have run them — and fixes the partition count AQE chose for
+    the data. A pinned frame is a checkpoint root the caller releases."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() != "AdaptiveSparkPlan":
+        return df
+    return df.localCheckpoint(eager=False)
+
+
+@contextmanager
+def _static_plans(*frames: DataFrame) -> Iterator[None]:
+    """Plan statically inside the scope: ``spark.sql.adaptive.enabled``
+    is false and ``spark.sql.shuffle.partitions`` is ``n``, the largest
+    partition count among ``frames`` (each ``_pinned``, so reading it
+    runs no job) — the count adaptive execution already chose for the
+    loop's inputs, never a configured constant. Both settings are
+    restored on every exit. Where the session already plans statically
+    (inside an open scope, or with adaptive execution switched off) the
+    scope changes nothing, so a caller that stages its edges in its own
+    scope sizes ``n`` from them as well as from the state.
+
+    Why: under adaptive execution every shuffle-map and broadcast stage
+    of a round is a job of its own, and a checkpoint reports no
+    partitioning, so every round re-shuffles the staged edges. A static
+    round is ONE job (its probe), and an edge set staged
+    ``repartition``-ed on its join key inside the scope keeps
+    ``hashpartitioning(key, n)``, so each round shuffles only the
+    frontier side. The settings belong to the SESSION: no thread may
+    run a fixpoint while another thread plans on the same session."""
+    conf = frames[0].sparkSession.conf
+    if conf.get(_AQE).lower() == "false":
+        yield
+        return
+    # an empty input has 0 partitions; a shuffle needs at least one
+    n = max(1, *(f._jdf.rdd().getNumPartitions() for f in frames))
+    prior = [(k, conf.get(k)) for k in (_AQE, _SHUFFLE_PARTITIONS)]
+    try:
+        conf.set(_AQE, "false")
+        conf.set(_SHUFFLE_PARTITIONS, str(n))
+        yield
+    finally:
+        for k, v in prior:
+            conf.set(k, v)
 
 
 def iterate_to_fixpoint(
@@ -77,23 +144,34 @@ def iterate_to_fixpoint(
     Releases are non-blocking: nothing synchronizes on the removal. An
     initial ``state`` may be a projection of a caller's frame: releasing
     it is a no-op (``etl.release_checkpoints`` frees checkpoint roots
-    only)."""
-    rounds = 0
-    while True:
-        nxt, changed = step(state)
-        rounds += bool(changed)
-        if rounds > max_rounds:
-            pinned = {id(d): d for d in (state, nxt)}
-            release_checkpoints(list(pinned.values()), blocking=False)
-            raise RuntimeError(
-                f"{what}={max_rounds} exceeded: round {rounds} still changed "
-                "the state — raise the guard, or check that the input has a "
-                "fixpoint (a negative-weight cycle has none)"
-            )
-        release_checkpoints([state], blocking=False)
-        if not changed:
-            return nxt
-        state = nxt
+    only).
+
+    Every round runs inside ``_static_plans``: adaptive execution off and
+    ``spark.sql.shuffle.partitions`` = ``n``, so each round's plan is
+    static and its one action is ONE Spark job. ``n`` is the partition
+    count adaptive execution chose for ``state`` (``_pinned`` first), or,
+    when the caller opened the scope to stage its edges in it, the larger
+    of the edges' and the state's. Both settings are restored on return
+    and on the guard's raise. They are session settings, shared by every
+    thread: a threaded caller must not run a fixpoint."""
+    state = _pinned(state)
+    with _static_plans(state):
+        rounds = 0
+        while True:
+            nxt, changed = step(state)
+            rounds += bool(changed)
+            if rounds > max_rounds:
+                pinned = {id(d): d for d in (state, nxt)}
+                release_checkpoints(list(pinned.values()), blocking=False)
+                raise RuntimeError(
+                    f"{what}={max_rounds} exceeded: round {rounds} still changed "
+                    "the state — raise the guard, or check that the input has a "
+                    "fixpoint (a negative-weight cycle has none)"
+                )
+            release_checkpoints([state], blocking=False)
+            if not changed:
+                return nxt
+            state = nxt
 
 
 def _normalize_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -129,9 +207,11 @@ def pagerank(
     Runs a fixed ``iters`` rounds from the uniform vector; returns
     (node, pr) with pr rounded to 6dp.
 
-    Plan shape per round: contributions = edges ⋈ ranks on src (both sides
-    hash-partitioned on the node key — AQE reuses the exchange across
-    rounds), one groupBy(dst) sum with map-side partial aggregation, and a
+    Plan shape per round: contributions = edges ⋈ ranks on src (the
+    degree-joined edge table is staged inside ``_static_plans`` and each
+    round's rank checkpoint comes out of a node-key join, so both keep
+    their node-key partitioning and the join shuffles neither side), one
+    groupBy(dst) sum with map-side partial aggregation, and a
     one-row dangling aggregate broadcast via cross join (the left-anti
     against the degree table is |V|-sized, never edge-sized). At 100 TB
     the edge list is the big side and is shuffled ONCE to its
@@ -145,94 +225,95 @@ def pagerank(
     # the node count below materializes both frames in one job instead of
     # two standalone materialization jobs + a count.
     edges = edges.localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)  # before count(): one evaluation feeds both
-    )
-    n = nodes.count()
-    deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    # co-locate the per-round join on the node key once
-    edges_deg = (
-        edges.join(deg, edges["src"] == deg["node"])
-        .select("src", "dst", "deg")
-        .repartition("src")
-        .localCheckpoint(eager=False)  # r12: round 1's checkpoint job materializes it
-    )
-    # the dangling node SET is round-invariant (only its mass changes) —
-    # materialize it once so no round re-runs the edge-sized degree
-    # aggregation
-    dangling_nodes = (
-        nodes.join(deg.select("node"), "node", "left_anti").localCheckpoint(eager=False)
-    )
-    # The dangling SET is round-invariant (only its mass changes), so its
-    # EMPTINESS is too: probe it once (one take(1) on a materialized
-    # |V|-bounded checkpoint) and, when empty — every symmetrized graph —
-    # skip the per-round semi-join + one-row aggregate + broadcast entirely
-    # (r12, guide §2.4: two jobs per round removed; the term contributes an
-    # exact +0.0 and the per-round rounding of the remaining expression is
-    # unchanged, so ranks are bit-identical either way).
-    has_dangling = bool(dangling_nodes.take(1))
-    ranks = nodes.select("node", (F.lit(1.0) / F.lit(float(n))).alias("pr"))
-    base = (1.0 - damping) / n
-    prev_ck: DataFrame | None = None
-    for _ in range(iters):
-        contribs = edges_deg.join(ranks, edges_deg["src"] == ranks["node"]).select(
-            F.col("dst").alias("node"), (F.col("pr") / F.col("deg")).alias("w")
+    with _static_plans(edges):
+        nodes = (
+            edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .localCheckpoint(eager=False)  # before count(): one evaluation feeds both
         )
-        sums = contribs.groupBy("node").agg(F.sum("w").alias("w_sum"))
-        if has_dangling:
-            # dangling mass: rank held by nodes with NO out-links this
-            # round, spread uniformly (one-row aggregate, broadcast cross
-            # join; |V|-sized semi-join against the pre-materialized
-            # dangling set)
-            dangling = ranks.join(dangling_nodes, "node", "leftsemi").agg(
-                F.round(
-                    F.coalesce(F.sum("pr"), F.lit(0.0)) / F.lit(float(n)), round_digits
-                ).alias("d_share")
+        n = nodes.count()
+        deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+        # co-locate the per-round join on the node key once
+        edges_deg = (
+            edges.join(deg, edges["src"] == deg["node"])
+            .select("src", "dst", "deg")
+            .repartition("src")
+            .localCheckpoint(eager=False)  # r12: round 1's checkpoint job materializes it
+        )
+        # the dangling node SET is round-invariant (only its mass changes) —
+        # materialize it once so no round re-runs the edge-sized degree
+        # aggregation
+        dangling_nodes = (
+            nodes.join(deg.select("node"), "node", "left_anti").localCheckpoint(eager=False)
+        )
+        # The dangling SET is round-invariant (only its mass changes), so its
+        # EMPTINESS is too: probe it once (one take(1) on a materialized
+        # |V|-bounded checkpoint) and, when empty — every symmetrized graph —
+        # skip the per-round semi-join + one-row aggregate + broadcast entirely
+        # (r12: two jobs per round removed; the term contributes an
+        # exact +0.0 and the per-round rounding of the remaining expression is
+        # unchanged, so ranks are bit-identical either way).
+        has_dangling = bool(dangling_nodes.take(1))
+        ranks = nodes.select("node", (F.lit(1.0) / F.lit(float(n))).alias("pr"))
+        base = (1.0 - damping) / n
+        prev_ck: DataFrame | None = None
+        for _ in range(iters):
+            contribs = edges_deg.join(ranks, edges_deg["src"] == ranks["node"]).select(
+                F.col("dst").alias("node"), (F.col("pr") / F.col("deg")).alias("w")
             )
-            new_pr = F.round(
-                F.lit(base)
-                + F.lit(damping)
-                * (F.coalesce(F.col("w_sum"), F.lit(0.0)) + F.col("d_share")),
-                round_digits,
-            ).alias("pr")
-            # left-join back onto the FULL node set: a zero-in-degree node
-            # keeps rank (1−d)/N + d·D/N instead of silently dropping out of
-            # the vector and losing its outgoing contributions in later
-            # rounds
-            ranks = (
-                nodes.join(sums, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select("node", new_pr)
-                .localCheckpoint()
-            )
-        else:
-            new_pr = F.round(
-                F.lit(base) + F.lit(damping) * F.coalesce(F.col("w_sum"), F.lit(0.0)),
-                round_digits,
-            ).alias("pr")
-            ranks = nodes.join(sums, "node", "left").select("node", new_pr).localCheckpoint()
-        # the new round is eagerly materialized — the previous round's
-        # blocks are dead; the initial (non-checkpointed) vector is skipped
-        if prev_ck is not None:
-            release_checkpoints([prev_ck], blocking=False)
-        prev_ck = ranks
-    # Staged inputs the returned frame no longer derives from are released
-    # on EVERY exit path (r09 VERDICT #1 named the iters=0 leak on the PPR
-    # sibling; the same shape lived here): after ≥1 round the result is a
-    # projection of the final round's checkpoint, so all four staged frames
-    # go; with iters=0 the returned uniform vector still projects from
-    # `nodes`, so the other three go and `nodes` stays (caller-owned, GC +
-    # ContextCleaner reclaim it with the result).
-    releasable = (
-        [edges, nodes, edges_deg, dangling_nodes]
-        if prev_ck is not None
-        else [edges, edges_deg, dangling_nodes]
-    )
-    release_checkpoints(releasable, blocking=False)
-    return ranks.select("node", F.round(F.col("pr"), 6).alias("pr"))
+            sums = contribs.groupBy("node").agg(F.sum("w").alias("w_sum"))
+            if has_dangling:
+                # dangling mass: rank held by nodes with NO out-links this
+                # round, spread uniformly (one-row aggregate, broadcast cross
+                # join; |V|-sized semi-join against the pre-materialized
+                # dangling set)
+                dangling = ranks.join(dangling_nodes, "node", "leftsemi").agg(
+                    F.round(
+                        F.coalesce(F.sum("pr"), F.lit(0.0)) / F.lit(float(n)), round_digits
+                    ).alias("d_share")
+                )
+                new_pr = F.round(
+                    F.lit(base)
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("w_sum"), F.lit(0.0)) + F.col("d_share")),
+                    round_digits,
+                ).alias("pr")
+                # left-join back onto the FULL node set: a zero-in-degree node
+                # keeps rank (1−d)/N + d·D/N instead of silently dropping out of
+                # the vector and losing its outgoing contributions in later
+                # rounds
+                ranks = (
+                    nodes.join(sums, "node", "left")
+                    .crossJoin(F.broadcast(dangling))
+                    .select("node", new_pr)
+                    .localCheckpoint()
+                )
+            else:
+                new_pr = F.round(
+                    F.lit(base) + F.lit(damping) * F.coalesce(F.col("w_sum"), F.lit(0.0)),
+                    round_digits,
+                ).alias("pr")
+                ranks = nodes.join(sums, "node", "left").select("node", new_pr).localCheckpoint()
+            # the new round is eagerly materialized — the previous round's
+            # blocks are dead; the initial (non-checkpointed) vector is skipped
+            if prev_ck is not None:
+                release_checkpoints([prev_ck], blocking=False)
+            prev_ck = ranks
+        # Staged inputs the returned frame no longer derives from are released
+        # on EVERY exit path (the iters=0 leak of the PPR sibling had the
+        # same shape here): after ≥1 round the result is a
+        # projection of the final round's checkpoint, so all four staged frames
+        # go; with iters=0 the returned uniform vector still projects from
+        # `nodes`, so the other three go and `nodes` stays (caller-owned, GC +
+        # ContextCleaner reclaim it with the result).
+        releasable = (
+            [edges, nodes, edges_deg, dangling_nodes]
+            if prev_ck is not None
+            else [edges, edges_deg, dangling_nodes]
+        )
+        release_checkpoints(releasable, blocking=False)
+        return ranks.select("node", F.round(F.col("pr"), 6).alias("pr"))
 
 
 def label_propagation(
@@ -265,54 +346,59 @@ def label_propagation(
     iteration discipline of pagerank/connected_components). State is two
     |V|-row vectors; the edge list never materializes on the driver."""
     w_col = F.col(weight).cast("double") if weight else F.lit(1.0).cast("double")
-    edges = (
-        edges.select(F.col("src"), F.col("dst"), w_col.alias("w"))
-        .repartition("src")
-        .localCheckpoint(eager=False)  # r12: round 1's checkpoint materializes both
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    prev_ck: DataFrame | None = None
-    for _ in range(iters):
-        scores = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"), "label")
-            .agg(F.round(F.sum("w"), round_digits).alias("w_sum"))
+    pinned = _pinned(edges)
+    with _static_plans(pinned):
+        staged = (
+            pinned.select(F.col("src"), F.col("dst"), w_col.alias("w"))
+            .repartition("src")
+            .localCheckpoint(eager=False)  # r12: round 1's checkpoint materializes both
         )
-        # argmax by (w_sum DESC, label ASC) as a STRUCT-MIN aggregate
-        # (r12, guide §2.4): min(struct(−w_sum, label)) picks the same row
-        # the old row_number window did — (−w_sum) ascending ≡ w_sum
-        # descending, label ascending breaks ties — but as a hash
-        # aggregate with map-side partial combine instead of a
-        # sort-within-partitions window pass, removing the per-round sort
-        # (finite weight sums; double negation is exact).
-        best = (
-            scores.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("w_sum")).alias("nw"), F.col("label").alias("l"))
-                ).alias("__b")
+        nodes = (
+            staged.select(F.col("src").alias("node"))
+            .unionByName(staged.select(F.col("dst").alias("node")))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        labels = nodes.select("node", F.col("node").alias("label"))
+        prev_ck: DataFrame | None = None
+        for _ in range(iters):
+            scores = (
+                staged.join(labels, staged["src"] == labels["node"])
+                .groupBy(F.col("dst").alias("node"), "label")
+                .agg(F.round(F.sum("w"), round_digits).alias("w_sum"))
             )
-            .select("node", F.col("__b.l").alias("new_label"))
-        )
-        labels = (
-            labels.join(best, "node", "left")
-            .select("node", F.coalesce("new_label", "label").alias("label"))
-            .localCheckpoint()
-        )
+            # argmax by (w_sum DESC, label ASC) as a STRUCT-MIN aggregate
+            # (r12): min(struct(−w_sum, label)) picks the same row
+            # the old row_number window did — (−w_sum) ascending ≡ w_sum
+            # descending, label ascending breaks ties — but as a hash
+            # aggregate with map-side partial combine instead of a
+            # sort-within-partitions window pass, removing the per-round sort
+            # (finite weight sums; double negation is exact).
+            best = (
+                scores.groupBy("node")
+                .agg(
+                    F.min(
+                        F.struct((-F.col("w_sum")).alias("nw"), F.col("label").alias("l"))
+                    ).alias("__b")
+                )
+                .select("node", F.col("__b.l").alias("new_label"))
+            )
+            labels = (
+                labels.join(best, "node", "left")
+                .select("node", F.coalesce("new_label", "label").alias("label"))
+                .localCheckpoint()
+            )
+            if prev_ck is not None:
+                release_checkpoints([prev_ck], blocking=False)
+            prev_ck = labels
         if prev_ck is not None:
-            release_checkpoints([prev_ck], blocking=False)
-        prev_ck = labels
-    if prev_ck is not None:
-        # ≥1 round ran: the returned vector depends only on its own final
-        # checkpoint — release the staged edge/node tables
-        release_checkpoints([edges, nodes], blocking=False)
-    return labels
+            # ≥1 round ran: the returned vector depends only on its own final
+            # checkpoint — release the staged edge/node tables (and the
+            # pinned input)
+            release_checkpoints(
+                [staged, nodes] + ([pinned] if pinned is not edges else []), blocking=False
+            )
+        return labels
 
 
 def triangle_count(
@@ -474,52 +560,59 @@ def k_core(
         )
 
     cur = _normalize_undirected(edges, src, dst).localCheckpoint(eager=False)
-    n_cur = cur.count()
-    peels = 0
-    while n_cur > 0:
-        deg = _degrees(cur, "d")
-        # keep feeds TWO semi-joins — without the per-round checkpoint
-        # Catalyst re-derives the |E|-sized degree aggregate once per
-        # consumer (r08 review, fifteenth pass; the triangle_count deg
-        # lesson). |V|-sized; LAZY (r12) like nxt below: the count is the
-        # round's ONE job — it computes keep + nxt, persists both, and
-        # counts in a single pass (previously three jobs per round);
-        # released right after that count has materialized it.
-        keep = deg.filter(F.col("d") >= k).select("node").localCheckpoint(eager=False)
-        nxt = (
-            cur.join(keep.withColumnRenamed("node", "u"), "u", "leftsemi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "leftsemi")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-        n_nxt = nxt.count()
-        release_checkpoints([keep], blocking=False)
-        if n_nxt == n_cur:
-            # fixpoint: nxt duplicates cur — release the duplicate blocks
-            release_checkpoints([nxt], blocking=False)
-            break
-        # the guard counts PRODUCTIVE peel rounds only, so a graph whose
-        # peel depth is exactly max_rounds still gets its (free) fixpoint
-        # confirmation instead of a spurious raise (r08 review off-by-one)
-        peels += 1
-        if peels > max_rounds and n_nxt > 0:
-            # n_nxt == 0 is a TERMINAL state, not "still peeling" — the
-            # empty answer is known, so the guard must not discard it
-            # (r08 review, thirteenth pass; the bfs empty-frontier-before-
-            # guard ordering applied here too)
-            release_checkpoints([nxt, cur], blocking=False)
-            raise RuntimeError(
-                f"k_core: still peeling after max_rounds={max_rounds} "
-                "productive rounds — raise the guard (each counted round "
-                "removed >=1 node, so the graph's peel depth exceeds it)"
+    with _static_plans(cur):
+        n_cur = cur.count()
+        peels = 0
+        while n_cur > 0:
+            deg = _degrees(cur, "d")
+            # keep feeds TWO semi-joins — without the per-round checkpoint
+            # Catalyst re-derives the |E|-sized degree aggregate once per
+            # consumer (the triangle_count deg lesson). |V|-sized; LAZY (r12) like nxt below: the count is the
+            # round's ONE job — it computes keep + nxt, persists both, and
+            # counts in a single pass (previously three jobs per round);
+            # released right after that count has materialized it.
+            keep = deg.filter(F.col("d") >= k).select("node").localCheckpoint(eager=False)
+            nxt = (
+                cur.join(keep.withColumnRenamed("node", "u"), "u", "leftsemi")
+                .join(keep.withColumnRenamed("node", "v"), "v", "leftsemi")
+                .select("u", "v")
+                .localCheckpoint(eager=False)
             )
-        release_checkpoints([cur], blocking=False)
-        cur, n_cur = nxt, n_nxt
-    if handles_out is not None:
-        # hand the final round's edge checkpoint to the caller — the
-        # returned aggregate cannot release it (docstring lifecycle note)
-        handles_out.append(cur)
-    return _degrees(cur, "deg")
+            n_nxt = nxt.count()
+            release_checkpoints([keep], blocking=False)
+            if n_nxt == n_cur:
+                # fixpoint: nxt duplicates cur — release the duplicate blocks
+                release_checkpoints([nxt], blocking=False)
+                break
+            # the guard counts PRODUCTIVE peel rounds only, so a graph whose
+            # peel depth is exactly max_rounds still gets its (free) fixpoint
+            # confirmation instead of a spurious raise
+            peels += 1
+            if peels > max_rounds and n_nxt > 0:
+                # n_nxt == 0 is a TERMINAL state, not "still peeling" — the
+                # empty answer is known, so the guard must not discard it
+                # (the bfs empty-frontier-before-guard ordering applied here
+                # too)
+                release_checkpoints([nxt, cur], blocking=False)
+                raise RuntimeError(
+                    f"k_core: still peeling after max_rounds={max_rounds} "
+                    "productive rounds — raise the guard (each counted round "
+                    "removed >=1 node, so the graph's peel depth exceeds it)"
+                )
+            release_checkpoints([cur], blocking=False)
+            cur, n_cur = nxt, n_nxt
+        if handles_out is not None:
+            # hand the final round's edge checkpoint to the caller — the
+            # returned aggregate cannot release it (docstring lifecycle note)
+            handles_out.append(cur)
+        return _degrees(cur, "deg")
+
+
+def _dist_type(edges: DataFrame, weight_col: str) -> str:
+    """The distance dtype: bigint for integral weights (exact), double
+    otherwise."""
+    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    return "bigint" if isinstance(edges.schema[weight_col].dataType, integral) else "double"
 
 
 def _weighted_edges(
@@ -528,11 +621,8 @@ def _weighted_edges(
     """(s, t, w) relaxation rows of a weighted edge list: both directions
     unless ``directed``, NULL endpoints/weights and self-loops dropped (a
     NULL weight cannot order, a self-loop never improves a distance), and
-    the weight cast to the distance dtype — bigint for integral weights
-    (exact), double otherwise."""
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    dist_t = "bigint" if isinstance(edges.schema[weight_col].dataType, integral) else "double"
-    w = F.col(weight_col).cast(dist_t).alias("w")
+    the weight cast to the distance dtype (``_dist_type``)."""
+    w = F.col(weight_col).cast(_dist_type(edges, weight_col)).alias("w")
     out = edges.select(F.col(src).alias("s"), F.col(dst).alias("t"), w)
     if not directed:
         out = out.unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("t"), w))
@@ -552,21 +642,27 @@ def stage_sssp_edges(
     directed: bool = False,
 ) -> DataFrame:
     """Stage the shortest-path propagation medium ONCE: the
-    ``_weighted_edges`` rows with parallel edges collapsed to their min
-    weight (only the lightest copy can win a relaxation — this bounds
-    every round's join fan-out and IS the undirected dedupe),
-    co-partitioned on ``s`` so each round shuffles only the frontier
-    side, behind a LAZY ``localCheckpoint`` that the first relaxation
-    round materializes. ``sssp_distances`` stages its edges here; callers
-    applying many ``graph_delta.apply_sssp_inserts`` batches over one
-    post-changelog edge set pass the result as ``edges_staged`` to pay
-    the O(|E|) shuffle once (r10 ADVICE). Such a frame is CALLER-owned:
-    release it with ``etl.release_checkpoints`` when done."""
+    ``_weighted_edges`` rows hash-partitioned on ``s``, then parallel
+    edges collapsed to their min weight within each partition (only the
+    lightest copy can win a relaxation — this bounds every round's join
+    fan-out and IS the undirected dedupe; one shuffle, as the collapse
+    keys on (s, t) ⊇ s), behind a LAZY ``localCheckpoint`` that the first
+    relaxation round materializes. ``sssp_distances`` and
+    ``graph_delta.apply_sssp_inserts`` stage inside their fixpoint's
+    ``_static_plans`` scope, where the checkpoint keeps
+    ``hashpartitioning(s, n)`` and each round shuffles only the frontier
+    side. Callers applying many ``apply_sssp_inserts`` batches over one
+    post-changelog edge set may pass the result as ``edges_staged`` to
+    pay the symmetrize/collapse once; staged outside a
+    scope, adaptive execution plans it and the checkpoint reports no
+    partitioning, so each round still re-shuffles it. Such a frame is
+    CALLER-owned: release it with ``etl.release_checkpoints`` when
+    done."""
     return (
         _weighted_edges(edges, weight_col, src, dst, directed)
+        .repartition("s")
         .groupBy("s", "t")
         .agg(F.min("w").alias("w"))
-        .repartition("s")
         .localCheckpoint(eager=False)
     )
 
@@ -730,7 +826,6 @@ def _shortest_paths(
 ) -> DataFrame:
     """sssp_distances with the guard named by ``what`` (bfs_distances
     reports its own ``max_depth``)."""
-    e = stage_sssp_edges(edges, weight_col, src, dst, directed)
     state = (
         # NULL sources dropped (r08 review, third pass): an outer-join-
         # derived source list would otherwise emit a phantom (NULL, 0) row
@@ -740,15 +835,22 @@ def _shortest_paths(
         .distinct()
         .select(
             "node",
-            F.lit(0).cast(e.schema["w"].dataType).alias("dist"),
+            F.lit(0).cast(_dist_type(edges, weight_col)).alias("dist"),
             F.lit(True).alias("__improved"),
         )
         .localCheckpoint(eager=False)
     )
+    pinned = _pinned(edges)
+    e = None
     try:
-        state = _relax(state, e, max_rounds, what)
+        # the edges are staged in the scope, sized from them and the state
+        with _static_plans(state, pinned):
+            e = stage_sssp_edges(pinned, weight_col, src, dst, directed)
+            state = _relax(state, e, max_rounds, what)
     finally:
-        release_checkpoints([e], blocking=False)
+        release_checkpoints(
+            [d for d in (e, pinned) if d is not None and d is not edges], blocking=False
+        )
     if handles_out is not None:
         # the caller owns the final state's blocks — the returned
         # projection's root cannot release them (the k_core lifecycle)
@@ -784,9 +886,10 @@ def personalized_pagerank(
     rounds to ``round_digits``, so distributed partial sums and a
     sequential engine agree bit-for-bit).
 
-    Plan shape per round: identical to ``pagerank`` (one edge⋈rank join
-    + groupBy(dst) sum, both on the node-key partitioning the staged
-    edge table carries; one-row dangling aggregate broadcast). The
+    Plan shape per round: ``pagerank``'s (one edge⋈rank join +
+    groupBy(dst) sum on the node key; one-row dangling aggregate
+    broadcast), but planned adaptively: the staged edge table's
+    checkpoint reports no partitioning, so each round re-shuffles it. The
     restart vector is a staged |V|-row frame reused every round. Raises
     on an empty effective restart set (release-before-raise)."""
     edges = edges.localCheckpoint(eager=False)

@@ -339,15 +339,17 @@ def test_connected_components_guard_raises_instead_of_splitting(spark):
 
 def test_fixpoint_operators_job_shape(spark):
     """Pin the Spark job shape of the fixpoint loops
-    (graph.iterate_to_fixpoint: one action per round). On a path of n
-    nodes from node 0, sssp_distances, then apply_sssp_inserts with a
-    shortcut onto node 1, then connected_components each take n rounds
-    (n - 1 productive + the confirmation round), so one more node adds
-    one round to each call. Jobs are counted over one job group, and
-    adaptive execution submits every shuffle-map and broadcast stage as
-    a job of its own: a shortest-path round is 6 jobs, a
-    connected-components round 7. An extra per-round action (a separate
-    materialization or frontier count) raises the per-round figure."""
+    (graph.iterate_to_fixpoint: one action per round, planned statically).
+    On a path of n nodes from node 0, sssp_distances, then
+    apply_sssp_inserts with a shortcut onto node 1, then
+    connected_components each take n rounds (n - 1 productive + the
+    confirmation round), so one more node adds one round to each call.
+    Jobs are counted over one job group. Inside the static scope a round
+    is ONE job; adaptive execution would submit every shuffle-map and
+    broadcast stage as a job of its own (6 per shortest-path round, 7
+    per connected-components round). An extra per-round action (a
+    separate materialization or frontier count) raises the per-round
+    figure."""
     from kf_task_fhir_etl_spark.operators import graph, graph_delta
     from kf_task_fhir_etl_spark.operators.dedup import connected_components
 
@@ -376,8 +378,94 @@ def test_fixpoint_operators_job_shape(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     five, six = jobs(5), jobs(6)
-    assert six - five == 6 + 6 + 7
-    assert five == 33 + 31 + 36
+    assert six - five == 1 + 1 + 1
+    # sssp: 5 rounds + the source state's distinct, planned adaptively
+    # before the scope opens; apply: 5 rounds + the broadcast of the
+    # inserted edges in its seed round; components: 5 rounds
+    assert five == 6 + 6 + 5
+
+
+def _session_plan_settings(spark) -> tuple[str, str]:
+    return (
+        spark.conf.get("spark.sql.adaptive.enabled"),
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
+
+
+def test_fixpoint_restores_session_plan_settings(spark):
+    """A fixpoint plans its rounds with adaptive execution off and a
+    data-sized shuffle partition count; both session settings hold their
+    prior values once it returns."""
+    from kf_task_fhir_etl_spark.operators import graph
+
+    before = _session_plan_settings(spark)
+    edges = spark.createDataFrame([(0, 1, 2), (1, 2, 3)], "src bigint, dst bigint, w bigint")
+    source = spark.createDataFrame([(0,)], "node bigint")
+    got = {r["node"]: r["dist"] for r in graph.sssp_distances(edges, source).collect()}
+    assert got == {0: 0, 1: 2, 2: 5}
+    assert _session_plan_settings(spark) == before
+
+
+def test_fixpoint_guard_restores_session_plan_settings(spark):
+    """The connected-components guard raising on the 40-node path
+    (max_iter=25) leaves both session plan settings as they were."""
+    from kf_task_fhir_etl_spark.operators.dedup import connected_components
+
+    before = _session_plan_settings(spark)
+    nodes = spark.createDataFrame([(i,) for i in range(40)], "node long")
+    edges = spark.createDataFrame([(i, i + 1) for i in range(39)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="max_iter"):
+        connected_components(nodes, edges, max_iter=25)
+    assert _session_plan_settings(spark) == before
+
+
+def test_relaxation_round_reads_staged_edges_without_exchange(spark, monkeypatch):
+    """Pin the executed plan of the relaxation rounds: the staged edge
+    set is hash-partitioned on ``s`` once, so the frontier join reads it
+    with no Exchange above its scan and only the frontier side is
+    shuffled. Planned adaptively, a checkpoint reports no partitioning
+    and every round re-shuffled the whole edge list."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from kf_task_fhir_etl_spark.operators import graph
+
+    plans: list[str] = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(5)], "src bigint, dst bigint, w bigint"
+    )
+    source = spark.createDataFrame([(0,)], "node bigint")
+    monkeypatch.setattr(DataFrame, "localCheckpoint", capture)
+    got = {r["node"]: r["dist"] for r in graph.sssp_distances(edges, source).collect()}
+    monkeypatch.undo()
+    assert got == {i: i for i in range(6)}
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    rounds = [p for p in plans if "__cand" in p]
+    assert len(rounds) == 6  # 5 productive rounds + the confirmation round
+    for plan in rounds:
+        lines = plan.splitlines()
+        scan = next(
+            i for i, ln in enumerate(lines) if re.search(r"Scan ExistingRDD\[s#\d+L?,t#", ln)
+        )
+        above, d = [], depth(lines[scan])
+        for ln in reversed(lines[:scan]):
+            if depth(ln) < d:
+                if "Join" in ln:
+                    break
+                above.append(ln.strip())
+                d = depth(ln)
+        assert not [ln for ln in above if "Exchange" in ln], plan
+        assert "Exchange" in plan  # the frontier side is still shuffled
 
 
 def test_lsh_max_bucket_path_matches_minimal_band_path(spark):
