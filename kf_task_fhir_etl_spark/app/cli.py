@@ -11,11 +11,14 @@ load ends swapped for engine-mode equivalents:
   the S1/S2 scan path), the snapshot reads a directory of endpoint parquet
   tables (``studies.parquet``, ``participants.parquet``, …) and applies the
   S3 descendant fan-out (``sources.lineage.descendant_snapshot``) per study.
+- **build**: ``run_pipeline`` returns the study's fused
+  ``(target, resource_type, target_id, resource_json)`` union.
 - **load**: with ``--out``, one keyed idempotent parquet MERGE per study:
-  the fused build (``run_pipeline(..., single_pass=True)``) is merged on
-  ``(target, target_id)`` into ``<out>/<study>/<target>/`` in one scan and
-  one write (``sources.sinks.keyed_parquet_upsert``); with ``--fhir-url``,
-  the S8 FHIR REST upsert per target in dependency order (reference
+  the union is merged on ``(target, target_id)`` into
+  ``<out>/<study>/<target>/`` in one scan and one write
+  (``sources.sinks.keyed_parquet_upsert``); with ``--fhir-url``, the union
+  is checkpointed once and its per-target views (``etl.by_target``) go
+  through the S8 FHIR REST upsert in dependency order (reference
   ``kf_api_fhir_service.py:37-94``).
 """
 
@@ -68,7 +71,7 @@ def fhir_etl(kf_study_ids: tuple[str, ...], source_dir: str, out_dir: str | None
     if out_dir is None and fhir_url is None:
         raise click.UsageError("one of --out or --fhir-url is required")
 
-    from kf_task_fhir_etl_spark.etl import run_pipeline
+    from kf_task_fhir_etl_spark.etl import by_target, release_checkpoints, run_pipeline
     from kf_task_fhir_etl_spark.plans.transform import applicable_targets
     from kf_task_fhir_etl_spark.session import get_spark
     from kf_task_fhir_etl_spark.sources.lineage import descendant_snapshot
@@ -89,16 +92,22 @@ def fhir_etl(kf_study_ids: tuple[str, ...], source_dir: str, out_dir: str | None
     for kf_study_id in kf_study_ids:
         click.echo(f"⏳ {kf_study_id}")
         snapshot = descendant_snapshot(tables, kf_study_id, strict=True)
+        union = run_pipeline(snapshot)
         if fhir_url is not None:
-            resources = run_pipeline(snapshot)
-            written = load_all(
-                resources,
-                applicable_targets(snapshot),
-                lambda target, df: fhir_upsert_sink(df, fhir_url, default_submit),
-            )
+            # one materialization: without it each of the per-target views
+            # would re-run the fused explode and its serializations
+            union = union.localCheckpoint(eager=True)
+            targets = applicable_targets(snapshot)
+            try:
+                written = load_all(
+                    by_target(union, targets),
+                    targets,
+                    lambda target, df: fhir_upsert_sink(df, fhir_url, default_submit),
+                )
+            finally:
+                release_checkpoints([union])
         else:
             study_out = os.path.join(out_dir, kf_study_id)
-            union = run_pipeline(snapshot, single_pass=True)
             keyed_parquet_upsert(spark, union, study_out, ["target", "target_id"])
             written = applicable_targets(snapshot)
             # partitionBy writes no directory for a target that built no

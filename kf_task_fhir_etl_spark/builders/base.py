@@ -91,13 +91,16 @@ def non_empty_array(arr: Column) -> Column:
 
 
 def build_from_plan(plan_fn, wide: DataFrame, api_path: str) -> DataFrame:
-    """Classic per-builder output from a ``plan()`` seam: every row-wise
-    builder exposes ``plan(wide) -> (target_id, resource, keep | None)``
-    (pure unresolved Columns over the padded wide table) and derives its
-    ``build()`` through here — while ``etl.build_resources_union`` consumes
-    the same seam to fuse ALL row-wise builders into one select over ONE
-    scan of the checkpointed wide table. Both routes share the expression
-    code, so they cannot drift (equivalence pinned in tests and by q85)."""
+    """Per-builder output from a ``plan()`` seam: every row-wise builder
+    exposes ``plan(wide) -> (target_id, resource, keep | None)`` (pure
+    unresolved Columns over the padded wide table) and derives its
+    ``build()`` through here (the narrow path ``plans/narrow.py`` and the
+    per-target gates) — while ``etl.build_resources`` consumes the same
+    seam to fuse ALL row-wise builders into one select over ONE scan of the
+    checkpointed wide table. Both routes share the expression code, so they
+    cannot drift (equivalence pinned in
+    tests/test_builders.py::test_fused_build_equals_per_builder_build and
+    by q85)."""
     tid, resource, keep = plan_fn(wide)
     if keep is not None:
         wide = wide.filter(keep)

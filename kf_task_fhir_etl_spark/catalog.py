@@ -1,8 +1,8 @@
 """Catalog of named DataFrames over a testdata scale-factor directory.
 
 Mirrors the reference's snapshot abstraction ``{endpoint: DataFrame}``
-(reference ``etl/ingest.py:94-122``): one named table per parquet file, with
-temp views registered so both the DataFrame and SQL surfaces see them.
+(reference ``etl/ingest.py:94-122``): one named table per parquet file,
+read by ``load_table`` (or ``cached_table``, memoized per application).
 """
 
 from __future__ import annotations
@@ -65,22 +65,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # epochs (double mantissa is 53 bits) and can round across a µs
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def load_catalog(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TPCH_TABLES, register_views: bool = False
-) -> dict[str, DataFrame]:
-    """Load every table that exists under ``sf_dir`` (missing ones skipped —
-    the reference's join cascade is presence-conditional, ``etl/ingest.py:167-483``)."""
-    catalog: dict[str, DataFrame] = {}
-    for name in tables:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            df = load_table(spark, sf_dir, name)
-            catalog[name] = df
-            if register_views:
-                df.createOrReplaceTempView(name)
-    return catalog
 
 
 # {(applicationId, sf_dir, table): (fingerprint, DataFrame)} — cached_table.

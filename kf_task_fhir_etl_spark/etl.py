@@ -7,16 +7,19 @@ The Spark re-expression of the reference's ``Ingest`` driver
   ``sources``), replacing the Postgres snapshot dict (``etl/ingest.py:53-127``).
 - **transform**: ``plans.transform.transform_study`` — the conditional
   outer-join cascade + normalize (``etl/ingest.py:129-493``).
-- **build**: every applicable entity builder in the fixed dependency order
-  (``kf_api_fhir_service.py:115-132``) over the wide/FR tables → one
-  ``(resource_type, target_id, resource_json)`` DataFrame per target.
-- **load**: keyed idempotent sink (``sinks``) — parquet MERGE-by-key engine
-  mode or FHIR REST upsert parity mode (``kf_api_fhir_service.py:37-94``).
+- **build**: ``build_resources``, one fused pass of every applicable entity
+  builder over the wide/FR tables → ONE
+  ``(target, resource_type, target_id, resource_json)`` DataFrame.
+- **load**: keyed idempotent sink (``sinks``) — the union merged on
+  ``(target, target_id)`` in engine mode, or, in FHIR REST upsert parity
+  mode (``kf_api_fhir_service.py:37-94``), the per-target views of
+  ``by_target`` in the fixed dependency order
+  (``kf_api_fhir_service.py:115-132``).
 
 With deterministic surrogate IDs the dependency order no longer gates
-correctness (references are pure functions), so builders can run in
-parallel; the order is preserved for load-time referential integrity against
-a real FHIR server.
+correctness (references are pure functions), so all builders share one
+pass; the order is kept for load-time referential integrity against a real
+FHIR server.
 """
 
 from __future__ import annotations
@@ -31,49 +34,7 @@ from kf_task_fhir_etl_spark.plans.mappings import pad_concepts
 from kf_task_fhir_etl_spark.plans.transform import TransformResult, transform_study
 
 
-def build_resources(
-    transformed: TransformResult,
-    metadata: DataFrame | None = None,
-) -> dict[str, DataFrame]:
-    """Run every applicable builder; returns {target_name: resource_df}
-    in dependency order.
-
-    Builders only CONSTRUCT plans here (no actions), and with deterministic
-    surrogate IDs they are independent of each other — so construction runs
-    on a thread pool: each builder's time is part py4j round-trip latency
-    (overlappable) and part Python expression construction (GIL-bound), so
-    the win is real but bounded — measured ~0.9 s off q85's 9.2 s warm
-    wall at sf0.1 for the 16-builder set. Results are re-ordered to
-    ``transformed.targets`` so load-time referential integrity is
-    unaffected."""
-    # partial-presence wide tables lack cross-entity columns builders
-    # reference unconditionally — pad them null (presence-sensitive
-    # SEQUENCING columns excepted; see mappings.DYNAMIC_PRESENCE_COLUMNS).
-    # Padded once per source table, not once per builder: the projection is
-    # ~100 driver-side column expressions, and all 16 builders share it.
-    padded: dict[str, DataFrame] = {}
-    jobs: list[tuple[str, object, DataFrame]] = []
-    for target in transformed.targets:
-        module, table_key = BUILDERS[target]
-        if table_key not in padded:
-            table = transformed.tables.get(table_key)
-            padded[table_key] = None if table is None else pad_concepts(table)
-        if padded[table_key] is None:
-            continue
-        jobs.append((target, module, padded[table_key]))
-
-    def _build(job: tuple[str, object, DataFrame]) -> tuple[str, DataFrame]:
-        target, module, table = job
-        if target == "DRSDocumentReference":
-            return target, module.build(table, metadata=metadata)
-        return target, module.build(table)
-
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        built = dict(ex.map(_build, jobs))
-    return {target: built[target] for target, _, _ in jobs}
-
-
-def _checkpoint_tables(transformed: TransformResult, overlap=lambda: None):
+def _checkpoint_tables(transformed: TransformResult, overlap):
     """Eagerly ``localCheckpoint`` every transform output, replacing
     ``transformed.tables`` entries with the checkpointed frames — the Spark
     analogue of the reference materializing the wide pandas frame in RAM
@@ -94,38 +55,36 @@ def _checkpoint_tables(transformed: TransformResult, overlap=lambda: None):
     return result
 
 
-def build_resources_union(
+def build_resources(
     transformed: TransformResult,
     metadata: DataFrame | None = None,
 ) -> DataFrame:
-    """Fused single-pass build: ONE select over ONE scan of the
-    checkpointed wide table emits every row-wise builder's
+    """The build: ONE select over ONE scan of the checkpointed wide table
+    emits every row-wise builder's
     ``(target, resource_type, target_id, resource_json)`` struct — 13
     serialized resources per input row via an array of null-able elements
     + explode — followed by one dedupe shuffle on (target, target_id).
     Aggregating builders (Family, DRSDocumentReference) and the separate
-    family_relationship table keep their own plans and union in.
+    family_relationship table keep their own ``build()`` plans and union in.
 
-    Why: the classic dict path (``build_resources``) makes 16 independent
-    passes over the wide table — after ``localCheckpoint`` column pruning
-    can no longer narrow them, so that is 16 full-width scans and 16
-    dedupe shuffles. Fused: 1 scan + 1 shuffle for the row-wise set (the
-    at-scale win), and both routes share the builders' ``plan()``
-    expressions, so they cannot drift (equivalence pinned in
-    tests/test_builders.py::test_single_pass_union_equals_classic_dict;
-    q85 runs this path under its oracle).
-    Use the dict path when per-target DataFrames are needed (the
-    dependency-ordered load); use this when the consumer wants the union
-    (bulk export, counting gates).
+    Why fused: after ``localCheckpoint`` column pruning can no longer
+    narrow a scan of the wide table, so one plan per builder would be 16
+    full-width scans and 16 dedupe shuffles; fused it is 1 scan + 1 shuffle
+    for the row-wise set (the at-scale win). The fused elements and each
+    builder's ``build()`` share the builders' ``plan()`` expressions, so
+    they cannot drift (pinned in
+    tests/test_builders.py::test_fused_build_equals_per_builder_build; q85
+    runs this path under its oracle). Consumers that need per-target
+    frames take ``by_target`` views of the result.
 
     The eager ``localCheckpoint`` of the transform outputs happens INSIDE
     this call, OVERLAPPED with plan construction: the 13 fused builder
     ``plan()`` expressions are pure ``F.col`` trees that never consult
     their DataFrame argument (pinned in tests/test_builders.py) — so they
     are built under the running cascade instead of after it (measured ~3 s
-    of the q85 cold wall at sf0.1). The aggregating classic builders DO
-    derive plans from their input table, so they are constructed after
-    the checkpoint lands, against the truncated lineage.
+    of the q85 cold wall at sf0.1). The aggregating builders DO derive
+    plans from their input table, so they are constructed after the
+    checkpoint lands, against the truncated lineage.
     ``transformed.tables`` is mutated to the checkpointed frames (see
     ``_checkpoint_tables``)."""
     from kf_task_fhir_etl_spark.builders.base import fused_element
@@ -133,7 +92,7 @@ def build_resources_union(
     # applicability is decided on table PRESENCE alone; padding happens
     # once, after the checkpoint
     fused_jobs: list[tuple[str, object, str]] = []
-    classic_jobs: list[tuple[str, object, str]] = []
+    separate_jobs: list[tuple[str, object, str]] = []
     for target in transformed.targets:
         module, table_key = BUILDERS[target]
         if transformed.tables.get(table_key) is None:
@@ -141,7 +100,7 @@ def build_resources_union(
         if table_key == "default" and hasattr(module, "plan"):
             fused_jobs.append((target, module, table_key))
         else:
-            classic_jobs.append((target, module, table_key))
+            separate_jobs.append((target, module, table_key))
 
     def _element(job: tuple[str, object, str]):
         target, module, _ = job
@@ -150,7 +109,7 @@ def build_resources_union(
         tid, resource, keep = module.plan(None)
         return fused_element(target, module.API_PATH, tid, resource, keep)
 
-    def _classic(job: tuple[str, object, str], padded_map: dict[str, DataFrame]) -> DataFrame:
+    def _separate(job: tuple[str, object, str], padded_map: dict[str, DataFrame]) -> DataFrame:
         target, module, table_key = job
         table = padded_map[table_key]
         df = (
@@ -163,16 +122,18 @@ def build_resources_union(
         )
 
     elems = _checkpoint_tables(transformed, lambda: [_element(job) for job in fused_jobs])
-    # pad ONCE per table_key against the truncated lineage and share across
-    # the classic jobs AND the fused scan (two consumers of one table_key
+    # partial-presence wide tables lack cross-entity columns the builders
+    # reference unconditionally — pad them null (presence-sensitive
+    # SEQUENCING columns excepted; see mappings.DYNAMIC_PRESENCE_COLUMNS).
+    # Pad ONCE per table_key against the truncated lineage and share across
+    # the separate jobs AND the fused scan (two consumers of one table_key
     # must not pad twice — construction cost is the measured bottleneck)
-    pad_keys = {j[2] for j in classic_jobs} | {j[2] for j in fused_jobs}
+    pad_keys = {j[2] for j in separate_jobs} | {j[2] for j in fused_jobs}
     padded = {tk: pad_concepts(transformed.tables[tk]) for tk in pad_keys}
-    # classic construction is py4j-round-trip-bound (same rationale and
-    # measured win as build_resources' pool); order follows
-    # transformed.targets
+    # build() construction is py4j-round-trip-bound, so the separate plans
+    # are built on a pool; order follows transformed.targets
     with ThreadPoolExecutor(max_workers=8) as ex:
-        classic = list(ex.map(lambda j: _classic(j, padded), classic_jobs))
+        separate = list(ex.map(lambda j: _separate(j, padded), separate_jobs))
     fused = None
     if elems:
         fused = (
@@ -181,11 +142,11 @@ def build_resources_union(
             .select("e.*")
             .dropDuplicates(["target", "target_id"])
         )
-    for df in classic:
+    for df in separate:
         fused = df if fused is None else fused.unionByName(df)
     if fused is None:
-        # degenerate input (no applicable tables): mirror the classic dict
-        # path's empty-{} behavior with an empty, correctly-typed union.
+        # degenerate input (no applicable tables): an empty, correctly-typed
+        # union.
         # Prefer a session we can reach from an input DataFrame; fall back
         # to getOrCreate (getActiveSession() is thread-local and None on
         # worker threads — the q115 concurrent-study pattern).
@@ -199,6 +160,15 @@ def build_resources_union(
             [], "target string, resource_type string, target_id string, resource_json string"
         )
     return fused
+
+
+def by_target(union: DataFrame, targets: list[str]) -> dict[str, DataFrame]:
+    """Per-target ``(resource_type, target_id, resource_json)`` views of a
+    ``build_resources`` union, keyed in the order of ``targets`` (pass
+    ``plans.transform.applicable_targets`` for the dependency order). A
+    target that built no rows still gets its (empty) view. Each view
+    re-runs the union's plan unless the union is checkpointed first."""
+    return {t: union.filter(F.col("target") == t).drop("target") for t in targets}
 
 
 # bench.py reads this to detect memoized gates; nothing memoizes, so it stays 0.
@@ -231,27 +201,20 @@ def release_checkpoints(dfs: list[DataFrame], blocking: bool = True) -> None:
 def run_pipeline(
     endpoint_tables: dict[str, DataFrame],
     metadata: DataFrame | None = None,
-    single_pass: bool = False,
-):
+) -> DataFrame:
     """extract(already-loaded tables) → transform → checkpoint → build.
 
     One straight path, as the reference's ``Ingest`` runs once per study:
-    ``transform_study``, then an eager ``localCheckpoint`` of the transform
-    outputs (``_checkpoint_tables``), then the builders. The checkpoint
-    truncates the 12-join cascade out of every builder's logical plan, so
-    Catalyst analyzes/optimizes the cascade ONCE instead of 16× (measured
-    at sf0.01: downstream optimize+execute of the 16-builder union drops
+    ``transform_study``, then ``build_resources``, which eagerly
+    ``localCheckpoint``s the transform outputs (``_checkpoint_tables``)
+    while it constructs the fused plan. The checkpoint truncates the
+    12-join cascade out of the build's logical plan, so Catalyst
+    analyzes/optimizes the cascade ONCE (measured at sf0.01 with a plan per
+    builder: downstream optimize+execute of the 16-builder union dropped
     10.4 s → 0.4 s for a one-time ~2.5 s materialization; end-to-end
-    ~18 s → ~9 s) — one wide-table materialization versus sixteen
-    re-executions of the join cascade, strictly fewer shuffles.
+    ~18 s → ~9 s).
 
-    Returns the per-target dict from ``build_resources`` (the
-    dependency-ordered load). ``single_pass=True`` returns ONE unioned
-    DataFrame via ``build_resources_union`` (fused scan, checkpoint
-    overlapped with plan construction) — the mode for union consumers
-    (bulk export, q85)."""
-    transformed = transform_study(endpoint_tables)
-    if single_pass:
-        return build_resources_union(transformed, metadata=metadata)
-    _checkpoint_tables(transformed)
-    return build_resources(transformed, metadata=metadata)
+    Returns the ``(target, resource_type, target_id, resource_json)``
+    union; ``by_target`` splits it into per-target views for the
+    dependency-ordered load."""
+    return build_resources(transform_study(endpoint_tables), metadata=metadata)

@@ -1036,8 +1036,8 @@ def q75_fhir_family_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q85_fhir_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ENTIRE reference pipeline in one gate: a kitchen-sink study with
     all 14 endpoint tables present runs ``etl.run_pipeline`` — the WIDE
-    full-outer cascade (J1-J12), concept padding, and every one of the 16
-    builders in the fixed dependency order — and the gate checks one row
+    full-outer cascade (J1-J12), concept padding, and the fused build of
+    all 16 builders — and the gate checks one row
     per resource type: emitted count + distinct target-id count (equal ⇔
     finalize's dedup found no surrogate-id collisions). Entities are keyed
     1:1 per participant so the wide fan-out stays linear (the combinatorial
@@ -1126,10 +1126,10 @@ def q85_fhir_full_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("GF_"), (c % 500)).alias("genomic_file_id"),
         F.lit("True").alias("visible"),
     )
-    # the fused one-scan build (etl.build_resources_union); per-builder
-    # bytes stay gated by q74-q84, fused ≡ classic pinned in
-    # tests/test_builders.py::test_single_pass_union_equals_classic_dict
-    out = run_pipeline(tables, single_pass=True)
+    # the fused one-scan build (etl.build_resources); per-builder bytes
+    # stay gated by q74-q84, fused ≡ each builder's build() pinned in
+    # tests/test_builders.py::test_fused_build_equals_per_builder_build
+    out = run_pipeline(tables)
     return (
         out.groupBy(F.col("target").alias("resource_type"))
         .agg(F.count(F.lit(1)).alias("n"), F.countDistinct("target_id").alias("n_ids"))
@@ -2351,7 +2351,7 @@ def q115_multi_study_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     VitalStatus only in B), the two builds must not bleed rows into each
     other, and distinct-target-id counts must equal emitted counts. The
     thread-pool ≡ sequential equivalence itself is pinned in
-    tests/test_transform.py; this gate proves it end-to-end under the
+    tests/test_builders.py; this gate proves it end-to-end under the
     driver's oracle. Every call constructs both studies afresh."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -2398,13 +2398,10 @@ def q115_multi_study_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     union = None
     for study, out in (("A", out_a), ("B", out_b)):
-        for target, df in out.items():
-            part = df.agg(
-                F.count(F.lit(1)).alias("n"), F.countDistinct("target_id").alias("n_ids")
-            ).select(
-                F.lit(study).alias("study"), F.lit(target).alias("resource_type"), "n", "n_ids"
-            )
-            union = part if union is None else union.unionByName(part)
+        part = out.groupBy(F.col("target").alias("resource_type")).agg(
+            F.count(F.lit(1)).alias("n"), F.countDistinct("target_id").alias("n_ids")
+        ).select(F.lit(study).alias("study"), "resource_type", "n", "n_ids")
+        union = part if union is None else union.unionByName(part)
     return union.orderBy("study", "resource_type")
 
 

@@ -4,10 +4,10 @@ Hash functions are md5-based (hex strings) so every stage is reproducible in
 any engine — the DuckDB oracles in ``queries.py`` recompute the identical
 signatures. At scale:
 
-- **signatures are map-side**: one row in, one row out, no explode — the
-  MinHash signature is ``transform(seeds, s → array_min(transform(shingles,
-  sh → md5(s|sh))))`` evaluated inside codegen;
-- **the only shuffle is the LSH bucket join** (hash-partition by band value),
+- **signatures shuffle O(docs)**: ``minhash_signatures`` explodes shingle
+  positions and min-aggregates them per document, and the map-side partial
+  aggregation collapses each document to one row before the shuffle;
+- **the only other shuffle is the LSH bucket join** (hash-partition by band value),
   which is exactly the work LSH exists to bound;
 - **verification joins are candidate-only**: exact Jaccard runs on the
   candidate pairs, never all O(n²) pairs.
@@ -24,35 +24,9 @@ from pyspark.sql import functions as F
 from kf_task_fhir_etl_spark.operators.parallelism import cpu_partitions, widen_for_cpu
 
 
-def char_shingles(text: Column, k: int = 5, max_chars: int = 500) -> Column:
-    """Distinct character k-grams of the first ``max_chars`` chars (bounding
-    per-row work so a pathological 1 GB document can't stall an executor)."""
-    t = F.substring(text, 1, max_chars)
-    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
-    grams = F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k)))
-    return F.array_distinct(grams)
-
-
 def word_tokens(text: Column, distinct: bool = False) -> Column:
     toks = F.split(F.lower(F.trim(text)), r"\s+")
     return F.array_distinct(toks) if distinct else toks
-
-
-def minhash_signature(text: Column, num_hashes: int = 8, shingle_size: int = 5, max_chars: int = 500) -> Column:
-    """MinHash signature as an array of ``num_hashes`` md5-min strings.
-    Entirely map-side; lexicographic min over md5 hex strings is a valid
-    uniform min-hash family (seeded by prefixing the hash input).
-
-    NOTE: higher-order functions are interpreted (not codegen'd) in Spark —
-    for the hot path prefer ``minhash_signatures`` below, which computes the
-    same family through codegen'd explode/groupBy (~10× faster)."""
-    sh = char_shingles(text, shingle_size, max_chars)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(seed.cast("string"), F.lit("|"), s)))
-        ),
-    )
 
 
 def minhash_signatures(

@@ -9,9 +9,10 @@ S7 replaces the reference's per-row GET inside the DocumentReference builder
 file metadata up front into a DataFrame and broadcast-join it (SURVEY.md
 §2.1-S7 — never a network call per record inside a builder).
 
-``fetch`` is injectable: tests pass a fake; production passes a retrying
-HTTP session's ``get``. The network import is gated so the module works in
-offline containers.
+``fetch`` is injectable: tests pass a fake; production passes
+``default_fetch``, a GET on ``retrying_session`` (bounded retries, as the
+reference's ``d3b_utils.requests_retry.Session``, ``common/utils.py:58``).
+The network import is gated so the module works in offline containers.
 """
 
 from __future__ import annotations
@@ -26,11 +27,40 @@ Fetch = Callable[[str, dict | None], dict]
 """fetch(url, params) -> parsed JSON body."""
 
 
-def default_fetch(headers: dict | None = None, auth: tuple[str, str] | None = None) -> Fetch:
-    """HTTP fetch via requests (import gated; only needed in live mode)."""
-    import requests
+ATTEMPTS = 3
+"""Requests per call at most: the first try and two retries."""
+RETRY_STATUSES = (429, 500, 502, 503, 504)
 
+
+def retrying_session():
+    """A ``requests.Session`` that retries a bounded number of times (import
+    gated; only needed in live mode): up to ``ATTEMPTS`` requests on
+    connection errors, and for GET and PUT on the ``RETRY_STATUSES``, with
+    exponential backoff or the server's ``Retry-After``. POST is not
+    idempotent, so a POST is never retried on a status. When the attempts
+    run out the last response is returned, for the caller to raise on."""
+    import requests
+    from requests.adapters import HTTPAdapter
+    from urllib3.util.retry import Retry
+
+    retry = Retry(
+        total=ATTEMPTS - 1,
+        backoff_factor=0.5,
+        status_forcelist=RETRY_STATUSES,
+        allowed_methods=frozenset({"GET", "PUT"}),
+        respect_retry_after_header=True,
+        raise_on_status=False,
+    )
     session = requests.Session()
+    adapter = HTTPAdapter(max_retries=retry)
+    session.mount("http://", adapter)
+    session.mount("https://", adapter)
+    return session
+
+
+def default_fetch(headers: dict | None = None, auth: tuple[str, str] | None = None) -> Fetch:
+    """HTTP GET on a ``retrying_session``."""
+    session = retrying_session()
 
     def fetch(url: str, params: dict | None = None) -> dict:
         resp = session.get(url, params=params, headers=headers, auth=auth)

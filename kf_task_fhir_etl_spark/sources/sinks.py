@@ -4,8 +4,8 @@ parquet MERGE (engine mode).
 S8 reproduces ``submit`` (reference ``kf_api_fhir_service.py:37-94``): PUT
 ``/{type}/{id}`` when an id is present, falling back to POST when the server
 reports the id unknown; executed with ``foreachPartition`` so each executor
-holds one HTTP session and streams its partition (the Spark analog of the
-reference's async submit loop, ``etl/ingest.py:514``).
+holds one retrying HTTP session and streams its partition (the Spark analog
+of the reference's async submit loop, ``etl/ingest.py:514``).
 
 S9's dependency order is data in ``plans.transform.ALL_TARGETS``; ``load_all``
 walks it.
@@ -26,10 +26,11 @@ Submit = Callable[[str, str, str, dict], str]
 
 
 def default_submit(headers: dict | None = None, auth: tuple[str, str] | None = None) -> Submit:
-    """requests-backed PUT-else-POST (import gated to live mode)."""
-    import requests
+    """PUT-else-POST on a ``rest.retrying_session`` (bounded retries on
+    connection errors and, for the PUT, on 429/5xx)."""
+    from kf_task_fhir_etl_spark.sources.rest import retrying_session
 
-    session = requests.Session()
+    session = retrying_session()
 
     def submit(host: str, api_path: str, resource_id: str, body: dict) -> str:
         resp = None

@@ -7,15 +7,19 @@ import json
 
 import pytest
 
-from kf_task_fhir_etl_spark.etl import run_pipeline
-from kf_task_fhir_etl_spark.plans.transform import transform_study
+from kf_task_fhir_etl_spark.etl import by_target, run_pipeline
+from kf_task_fhir_etl_spark.plans.transform import applicable_targets, transform_study
 
 from .fixtures import endpoint_tables
 
 
+def _per_target(tables):
+    return by_target(run_pipeline(tables), applicable_targets(tables))
+
+
 @pytest.fixture(scope="module")
 def resources(spark):
-    out = run_pipeline(endpoint_tables(spark))
+    out = _per_target(endpoint_tables(spark))
     return {name: [json.loads(r["resource_json"]) for r in df.collect()] for name, df in out.items()}
 
 
@@ -174,7 +178,7 @@ def test_vital_status_codings(resources):
 def test_deterministic_ids_consistent_across_builders(spark):
     """A referencing builder computes the same ID the referenced builder
     assigns — the engine's replacement for get_target_id_from_record."""
-    out = run_pipeline(endpoint_tables(spark))
+    out = _per_target(endpoint_tables(spark))
     patient_ids = {r["target_id"] for r in out["Patient"].collect()}
     subj_refs = {
         json.loads(r["resource_json"])["subject"]["reference"].split("/")[1]
@@ -198,9 +202,6 @@ def test_run_pipeline_two_studies_concurrently_equals_sequential(spark):
 
     from pyspark.sql import functions as F
 
-    from kf_task_fhir_etl_spark.etl import run_pipeline
-    from tests.fixtures import endpoint_tables
-
     def study(seed: int):
         # two disjoint "studies": the fixture study as-is, and a variant
         # with re-keyed external ids so outputs must differ
@@ -217,10 +218,7 @@ def test_run_pipeline_two_studies_concurrently_equals_sequential(spark):
         return tables
 
     def snapshot(out):
-        return {
-            target: sorted(r["resource_json"] for r in df.select("resource_json").collect())
-            for target, df in out.items()
-        }
+        return sorted(tuple(r) for r in out.select("target", "resource_json").collect())
 
     seq = [snapshot(run_pipeline(study(i))) for i in (0, 1)]
     with ThreadPoolExecutor(max_workers=2) as ex:
@@ -231,33 +229,33 @@ def test_run_pipeline_two_studies_concurrently_equals_sequential(spark):
     assert seq[0] != seq[1]
 
 
-def test_single_pass_union_equals_classic_dict(spark):
-    """The fused one-scan build (etl.build_resources_union) must emit
-    EXACTLY the rows of the classic 16-plan dict path — same targets, same
-    target_ids, byte-identical resource_json — since both consume the same
-    builder plan() expressions. This is the guard that lets q85 gate the
-    fused path while q74-q84 keep gating the per-builder bytes."""
-    from kf_task_fhir_etl_spark.etl import run_pipeline
-    from tests.fixtures import endpoint_tables
+def test_fused_build_equals_per_builder_build(spark):
+    """The fused one-scan build (etl.build_resources) must emit EXACTLY the
+    rows of each BUILDERS module's own ``build()`` over the same padded,
+    checkpointed transform tables — same targets, same target_ids,
+    byte-identical resource_json — since both consume the same builder
+    ``plan()`` expressions. This is the guard that lets q85 and the CLI run
+    the fused path while q74-q84 and the narrow path gate the per-builder
+    bytes."""
+    from kf_task_fhir_etl_spark.builders import BUILDERS
+    from kf_task_fhir_etl_spark.etl import build_resources
+    from kf_task_fhir_etl_spark.plans.mappings import pad_concepts
 
-    tables = endpoint_tables(spark)
-    classic = run_pipeline(tables)
-    flat_classic = sorted(
+    transformed = transform_study(endpoint_tables(spark))
+    union = build_resources(transformed)  # checkpoints transformed.tables
+    fused = sorted(tuple(r) for r in union.collect())
+    padded = {key: pad_concepts(df) for key, df in transformed.tables.items()}
+    per_builder = sorted(
         (target, r["resource_type"], r["target_id"], r["resource_json"])
-        for target, df in classic.items()
-        for r in df.collect()
+        for target in transformed.targets
+        for r in BUILDERS[target][0].build(padded[BUILDERS[target][1]]).collect()
     )
-    union = run_pipeline(tables, single_pass=True)
-    flat_union = sorted(
-        (r["target"], r["resource_type"], r["target_id"], r["resource_json"])
-        for r in union.collect()
-    )
-    assert flat_union == flat_classic
-    assert len(flat_union) > 0
+    assert fused == per_builder
+    assert {row[0] for row in fused} == set(transformed.targets)
 
 
 def test_fused_plan_builders_ignore_their_dataframe_arg(spark):
-    """The fused build (etl.build_resources_union) constructs the 13 fused
+    """The fused build (etl.build_resources) constructs the 13 fused
     ``plan()`` expressions CONCURRENTLY with the wide-table
     materialization, against the pre-checkpoint frames — which is only sound because every fused builder's ``plan()`` is a pure
     ``F.col`` expression tree that never consults its DataFrame argument.
@@ -267,10 +265,7 @@ def test_fused_plan_builders_ignore_their_dataframe_arg(spark):
     from pyspark.sql import functions as F
 
     from kf_task_fhir_etl_spark.builders import BUILDERS
-    from kf_task_fhir_etl_spark.etl import run_pipeline
     from kf_task_fhir_etl_spark.plans.mappings import pad_concepts
-    from kf_task_fhir_etl_spark.plans.transform import transform_study
-    from tests.fixtures import endpoint_tables
 
     transformed = transform_study(endpoint_tables(spark))
     wide = pad_concepts(transformed.tables["default"])

@@ -1,5 +1,6 @@
 """Narrow-path ≡ wide-path equivalence: every builder must emit identical
-resources from its minimal join as from the full wide table."""
+resources from its minimal join as from the full wide table (the per-target
+views of the fused ``run_pipeline`` union)."""
 
 from __future__ import annotations
 
@@ -7,16 +8,21 @@ import json
 
 import pytest
 
-from kf_task_fhir_etl_spark.etl import run_pipeline
+from kf_task_fhir_etl_spark.etl import by_target, run_pipeline
 from kf_task_fhir_etl_spark.plans.narrow import build_resources_narrow
+from kf_task_fhir_etl_spark.plans.transform import applicable_targets
 
 from .fixtures import endpoint_tables
+
+
+def _wide(tables):
+    return by_target(run_pipeline(tables), applicable_targets(tables))
 
 
 @pytest.fixture(scope="module")
 def both_paths(spark):
     tables = endpoint_tables(spark)
-    wide = run_pipeline(tables)
+    wide = _wide(tables)
     narrow = build_resources_narrow(tables)
     return wide, narrow
 
@@ -40,13 +46,11 @@ def test_children_build_without_participants(spark):
     """Disease/Phenotype/VitalStatus carry their own participant FK — absent
     participants must not silently drop them (wide-path parity: the wide
     cascade still emits their rows with null study columns)."""
-    from .fixtures import endpoint_tables
-    from kf_task_fhir_etl_spark.etl import run_pipeline
-
     tables = endpoint_tables(spark)
     sub = {k: tables[k] for k in ("studies", "diagnoses")}
-    wide = run_pipeline(sub)
+    wide = _wide(sub)
     narrow = build_resources_narrow(sub)
+    assert list(wide) == ["ResearchStudy", "Disease"]
     assert "Disease" in narrow and "Disease" in wide
     w = {r["target_id"]: json.loads(r["resource_json"]) for r in wide["Disease"].collect()}
     n = {r["target_id"]: json.loads(r["resource_json"]) for r in narrow["Disease"].collect()}
@@ -57,9 +61,6 @@ def test_drs_builds_without_sequencing_experiments(spark):
     """sequencing-experiment-genomic-files WITHOUT sequencing-experiments:
     SEQUENCING|TARGET_SERVICE_ID exists but STRATEGY doesn't — the A2
     aggregation must widen the key without referencing STRATEGY."""
-    from .fixtures import endpoint_tables
-    from kf_task_fhir_etl_spark.etl import run_pipeline
-
     tables = endpoint_tables(spark)
     sub = {
         k: tables[k]
@@ -68,8 +69,12 @@ def test_drs_builds_without_sequencing_experiments(spark):
             "genomic-files", "sequencing-experiment-genomic-files",
         )
     }
-    wide = run_pipeline(sub)
+    wide = _wide(sub)
     narrow = build_resources_narrow(sub)
+    assert list(wide) == [
+        "Patient", "ProbandStatus", "ResearchStudy", "ResearchSubject",
+        "SequencingCenter", "Specimen", "DRSDocumentReference",
+    ]
     w = {r["target_id"]: json.loads(r["resource_json"]) for r in wide["DRSDocumentReference"].collect()}
     n = {r["target_id"]: json.loads(r["resource_json"]) for r in narrow["DRSDocumentReference"].collect()}
     assert w and w == n
@@ -78,13 +83,11 @@ def test_drs_builds_without_sequencing_experiments(spark):
 def test_drs_builds_from_genomic_files_alone(spark):
     """Wide path targets DRSDocumentReference whenever genomic-files is
     present; narrow path must too (empty participant/biospecimen lists)."""
-    from .fixtures import endpoint_tables
-    from kf_task_fhir_etl_spark.etl import run_pipeline
-
     tables = endpoint_tables(spark)
     sub = {"genomic-files": tables["genomic-files"]}
-    wide = run_pipeline(sub)
+    wide = _wide(sub)
     narrow = build_resources_narrow(sub)
+    assert list(wide) == ["DRSDocumentReference"]
     w = {r["target_id"]: json.loads(r["resource_json"]) for r in wide["DRSDocumentReference"].collect()}
     n = {r["target_id"]: json.loads(r["resource_json"]) for r in narrow["DRSDocumentReference"].collect()}
     assert w and w == n

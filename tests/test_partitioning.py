@@ -102,7 +102,7 @@ def test_semi_anti_join_plans(spark):
     assert "ReadSchema: struct<o_custkey:bigint,o_orderdate:timestamp_ntz>" in anti
 
 
-def test_pivot_explicit_values_single_pass(spark):
+def test_pivot_explicit_values_one_pass(spark):
     """q49's scale claim: with an explicit value list the pivot is one
     aggregate over one scan — no collect-distinct discovery job, no Expand."""
     from kf_task_fhir_etl_spark.queries import q49_pivot_status_matrix
@@ -333,27 +333,13 @@ def test_budget_select_single_group_exchange(spark):
 
 
 def test_fused_union_scans_wide_table_once(spark):
-    """The single-pass builder union reads the checkpointed wide table in
-    exactly 4 branches — the fused row-wise select plus the three
+    """The fused builder union reads the checkpointed transform tables in
+    at most 4 branches — the fused row-wise select plus the three
     non-fusable plans (Family and DRS aggregate; family_relationship is a
-    separate table) — where the classic per-builder union scans it 16x
-    (column pruning cannot narrow a checkpoint, so each scan is
-    full-width)."""
-    from functools import reduce
-
+    separate table) — not once per builder (column pruning cannot narrow a
+    checkpoint, so each scan is full-width)."""
     from kf_task_fhir_etl_spark.etl import run_pipeline
     from tests.fixtures import endpoint_tables
 
-    tables = endpoint_tables(spark)
-    fused_plan = (
-        run_pipeline(tables, single_pass=True)._jdf.queryExecution().executedPlan().toString()
-    )
+    fused_plan = run_pipeline(endpoint_tables(spark))._jdf.queryExecution().executedPlan().toString()
     assert fused_plan.count("Scan ExistingRDD") <= 4
-    classic = run_pipeline(tables)
-    classic_plan = (
-        reduce(lambda a, b: a.unionByName(b), classic.values())
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert classic_plan.count("Scan ExistingRDD") >= 13

@@ -6,12 +6,14 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from kf_task_fhir_etl_spark.sources import lineage, rest, sinks
 
+from .fhir_stub import FhirStub
 from .fixtures import endpoint_tables
 
 
@@ -52,10 +54,11 @@ def test_descendant_snapshot_isolates_study(two_study_tables):
 
 
 def test_snapshot_feeds_pipeline(two_study_tables):
-    from kf_task_fhir_etl_spark.etl import run_pipeline
+    from kf_task_fhir_etl_spark.etl import by_target, run_pipeline
+    from kf_task_fhir_etl_spark.plans.transform import applicable_targets
 
     snap = lineage.descendant_snapshot(two_study_tables, "SD_00000002")
-    out = run_pipeline(snap)
+    out = by_target(run_pipeline(snap), applicable_targets(snap))
     # second study has participants but no families/diagnosis tables non-empty…
     patients = out["Patient"].collect()
     assert {json.loads(r["resource_json"])["identifier"][0]["value"] for r in patients} == {
@@ -125,9 +128,9 @@ def test_metadata_prefetch_joins_into_drs_builder(spark):
     assert rows["GF_00000002"]["size"] is None  # swallowed cast
 
     # end-to-end: metadata reaches the DocumentReference content block
-    from kf_task_fhir_etl_spark.etl import run_pipeline
+    from kf_task_fhir_etl_spark.etl import by_target, run_pipeline
 
-    out = run_pipeline(endpoint_tables(spark), metadata=meta)
+    out = by_target(run_pipeline(endpoint_tables(spark), metadata=meta), ["DRSDocumentReference"])
     docs = {d["identifier"][0]["value"]: d for d in
             (json.loads(r["resource_json"]) for r in out["DRSDocumentReference"].collect())}
     d1 = docs["GF_00000001"]
@@ -163,6 +166,41 @@ def test_fhir_upsert_sink_put_else_post(spark, tmp_path):
     calls = [json.load(open(os.path.join(log_dir, f))) for f in os.listdir(log_dir)]
     assert {c["id"] for c in calls} == {"p1", "p2"}
     assert all(c["path"] == "Patient" for c in calls)
+
+
+def test_submit_retries_transient_put_failure():
+    """A 503 on PUT is retried, and the retry's 201 returns the id."""
+    with FhirStub(faults=(503,)) as stub:
+        rid = sinks.default_submit()(stub.url, "Patient", "p1", {"resourceType": "Patient"})
+    assert rid == "p1"
+    assert [(m, p) for m, p, _ in stub.requests] == [("PUT", "/Patient/p1")] * 2
+
+
+def test_fetch_retries_rate_limit_honouring_retry_after():
+    """A 429 on GET is retried after the server's ``Retry-After: 1`` (the
+    first backoff step alone would retry at once), then the 200 body
+    returns."""
+    with FhirStub(faults=(429,)) as stub:
+        t0 = time.monotonic()
+        body = rest.default_fetch()(f"{stub.url}/Patient/p1")
+        waited = time.monotonic() - t0
+    assert body == {"id": "p1"}
+    assert [m for m, _, _ in stub.requests] == ["GET", "GET"]
+    assert waited >= 1.0
+
+
+def test_submit_gives_up_after_the_retry_bound():
+    """A persistent 503 raises after ``rest.ATTEMPTS`` PUTs; a POST is not
+    idempotent and is sent once."""
+    with FhirStub(faults=(503,) * 10) as stub:
+        submit = sinks.default_submit()
+        with pytest.raises(RuntimeError, match="503"):
+            submit(stub.url, "Patient", "p1", {})
+        assert [m for m, _, _ in stub.requests] == ["PUT"] * rest.ATTEMPTS
+        stub.requests.clear()
+        with pytest.raises(RuntimeError, match="503"):
+            submit(stub.url, "Patient", "", {})
+        assert [m for m, _, _ in stub.requests] == ["POST"]
 
 
 def _partitions(spark, path: str) -> dict[str, set[tuple]]:
@@ -249,7 +287,7 @@ def test_load_all_dependency_order(spark):
 def test_metadata_missing_file_falls_back_to_wide_columns(spark):
     """A genomic file absent from the prefetched metadata keeps its
     wide-table attributes (per-field coalesce), instead of going all-null."""
-    from kf_task_fhir_etl_spark.etl import run_pipeline
+    from kf_task_fhir_etl_spark.etl import by_target, run_pipeline
 
     def fetch(url, params=None):
         return {
@@ -269,7 +307,7 @@ def test_metadata_missing_file_falls_back_to_wide_columns(spark):
     meta = rest.prefetch_genomic_file_metadata(
         spark, "https://ds.example.org", ["GF_00000001"], fetch
     )
-    out = run_pipeline(endpoint_tables(spark), metadata=meta)
+    out = by_target(run_pipeline(endpoint_tables(spark), metadata=meta), ["DRSDocumentReference"])
     docs = {d["identifier"][0]["value"]: d for d in
             (json.loads(r["resource_json"]) for r in out["DRSDocumentReference"].collect())}
     d2 = docs["GF_00000002"]
