@@ -20,6 +20,9 @@ load ends swapped for engine-mode equivalents:
   is checkpointed once and its per-target views (``etl.by_target``) go
   through the S8 FHIR REST upsert in dependency order (reference
   ``kf_api_fhir_service.py:37-94``).
+
+Each study's checkpoints are released once it is loaded, so a run over many
+studies holds at most one study's tables in executor memory.
 """
 
 from __future__ import annotations
@@ -92,30 +95,34 @@ def fhir_etl(kf_study_ids: tuple[str, ...], source_dir: str, out_dir: str | None
     for kf_study_id in kf_study_ids:
         click.echo(f"⏳ {kf_study_id}")
         snapshot = descendant_snapshot(tables, kf_study_id, strict=True)
-        union = run_pipeline(snapshot)
-        if fhir_url is not None:
-            # one materialization: without it each of the per-target views
-            # would re-run the fused explode and its serializations
-            union = union.localCheckpoint(eager=True)
-            targets = applicable_targets(snapshot)
-            try:
+        # the study's checkpoints, released once it is loaded so that a
+        # finished study does not hold executor memory while the next builds
+        pinned: list = []
+        union = run_pipeline(snapshot, checkpoints=pinned)
+        try:
+            if fhir_url is not None:
+                # one materialization: without it each of the per-target views
+                # would re-run the fused explode and its serializations
+                union = union.localCheckpoint(eager=True)
+                pinned.append(union)
+                targets = applicable_targets(snapshot)
                 written = load_all(
                     by_target(union, targets),
                     targets,
                     lambda target, df: fhir_upsert_sink(df, fhir_url, default_submit),
                 )
-            finally:
-                release_checkpoints([union])
-        else:
-            study_out = os.path.join(out_dir, kf_study_id)
-            keyed_parquet_upsert(spark, union, study_out, ["target", "target_id"])
-            written = applicable_targets(snapshot)
-            # partitionBy writes no directory for a target that built no
-            # rows; it still gets its readable, empty table
-            empty = union.drop("target").limit(0)
-            for target in written:
-                if not os.path.isdir(os.path.join(study_out, target)):
-                    keyed_parquet_upsert(spark, empty, os.path.join(study_out, target), "target_id")
+            else:
+                study_out = os.path.join(out_dir, kf_study_id)
+                keyed_parquet_upsert(spark, union, study_out, ["target", "target_id"])
+                written = applicable_targets(snapshot)
+                # partitionBy writes no directory for a target that built no
+                # rows; it still gets its readable, empty table
+                empty = union.drop("target").limit(0)
+                for target in written:
+                    if not os.path.isdir(os.path.join(study_out, target)):
+                        keyed_parquet_upsert(spark, empty, os.path.join(study_out, target), "target_id")
+        finally:
+            release_checkpoints(pinned)
         click.echo(f"✅ {kf_study_id}: {', '.join(written)}")
 
 

@@ -201,6 +201,7 @@ def release_checkpoints(dfs: list[DataFrame], blocking: bool = True) -> None:
 def run_pipeline(
     endpoint_tables: dict[str, DataFrame],
     metadata: DataFrame | None = None,
+    checkpoints: list[DataFrame] | None = None,
 ) -> DataFrame:
     """extract(already-loaded tables) → transform → checkpoint → build.
 
@@ -216,5 +217,12 @@ def run_pipeline(
 
     Returns the ``(target, resource_type, target_id, resource_json)``
     union; ``by_target`` splits it into per-target views for the
-    dependency-ordered load."""
-    return build_resources(transform_study(endpoint_tables), metadata=metadata)
+    dependency-ordered load. The checkpointed transform frames stay in
+    executor memory until GC reaches them; a caller that runs many studies
+    in one session passes a ``checkpoints`` list, which receives them, and
+    hands it to ``release_checkpoints`` once the union is consumed."""
+    transformed = transform_study(endpoint_tables)
+    union = build_resources(transformed, metadata=metadata)
+    if checkpoints is not None:
+        checkpoints.extend(transformed.tables.values())
+    return union

@@ -375,3 +375,24 @@ def endpoint_tables(spark: SparkSession) -> dict[str, DataFrame]:
         "sequencing-experiment-genomic-files": sequencing_experiment_genomic_files,
         "sequencing-experiments": sequencing_experiments,
     }
+
+
+def two_study_endpoint_tables(spark: SparkSession) -> dict[str, DataFrame]:
+    """``endpoint_tables`` plus a second study, ``SD_00000002``, with one
+    participant (``PT_99999999``) and one diagnosis of its own."""
+    tables = dict(endpoint_tables(spark))
+    extra_study = spark.createDataFrame(
+        [("SD_00000002", None, "other", "False")],
+        "kf_id string, investigator_id string, external_id string, visible string",
+    )
+    tables["studies"] = tables["studies"].unionByName(extra_study, allowMissingColumns=True)
+    extra_participant = spark.createDataFrame(
+        [("PT_99999999", "SD_00000002", None)],
+        "kf_id string, study_id string, family_id string",
+    )
+    tables["participants"] = tables["participants"].unionByName(extra_participant, allowMissingColumns=True)
+    extra_diag = spark.createDataFrame(
+        [("DG_99999999", "PT_99999999")], "kf_id string, participant_id string"
+    )
+    tables["diagnoses"] = tables["diagnoses"].unionByName(extra_diag, allowMissingColumns=True)
+    return tables

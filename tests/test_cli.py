@@ -14,7 +14,7 @@ import os
 from click.testing import CliRunner
 from pyspark.sql import functions as F
 
-from tests.fixtures import endpoint_tables
+from tests.fixtures import endpoint_tables, two_study_endpoint_tables
 
 STUDY = "SD_00000001"
 
@@ -26,10 +26,10 @@ def _write_source(tables, path) -> str:
     return str(path)
 
 
-def _run_cli(source: str, out) -> str:
+def _run_cli(source: str, out, studies: tuple[str, ...] = (STUDY,)) -> str:
     from kf_task_fhir_etl_spark.app.cli import cli
 
-    result = CliRunner().invoke(cli, ["fhir-etl", STUDY, "--source", source, "--out", str(out)])
+    result = CliRunner().invoke(cli, ["fhir-etl", *studies, "--source", source, "--out", str(out)])
     assert result.exit_code == 0, result.output
     return result.output
 
@@ -151,6 +151,31 @@ def test_cli_fhir_url_loads_every_target_in_dependency_order(spark, tmp_path):
     order = [ALL_TARGETS.index(t) for t in arrived]
     assert order == sorted(order)
     assert list(dict.fromkeys(arrived)) == targets
+
+
+def test_cli_releases_each_study_checkpoints(spark, tmp_path):
+    """A two-study run on either sink leaves none of its checkpoints (each
+    study's wide and family-relationship tables, and the ``--fhir-url``
+    union) cached in executor memory once it returns."""
+    from kf_task_fhir_etl_spark.app.cli import cli
+
+    from tests.fhir_stub import FhirStub
+
+    studies = (STUDY, "SD_00000002")
+    source = _write_source(two_study_endpoint_tables(spark), tmp_path / "source")
+    jsc = spark.sparkContext._jsc.sc()
+    # a set difference, not a count: the ContextCleaner may retire storage
+    # of earlier tests meanwhile
+    ids_before = {info.id() for info in jsc.getRDDStorageInfo()}
+    output = _run_cli(source, tmp_path / "out", studies)
+    assert all(f"✅ {study}: " in output for study in studies)
+    assert {info.id() for info in jsc.getRDDStorageInfo()} <= ids_before
+
+    with FhirStub() as stub:
+        result = CliRunner().invoke(cli, ["fhir-etl", *studies, "--source", source, "--fhir-url", stub.url])
+    assert result.exit_code == 0, result.output
+    assert stub.requests
+    assert {info.id() for info in jsc.getRDDStorageInfo()} <= ids_before
 
 
 def test_cli_unknown_study_fails(spark, tmp_path):

@@ -14,28 +14,12 @@ from pyspark.sql import functions as F
 from kf_task_fhir_etl_spark.sources import lineage, rest, sinks
 
 from .fhir_stub import FhirStub
-from .fixtures import endpoint_tables
+from .fixtures import endpoint_tables, two_study_endpoint_tables
 
 
 @pytest.fixture(scope="module")
 def two_study_tables(spark):
-    """Fixture tables + a second study's rows to prove lineage isolation."""
-    tables = dict(endpoint_tables(spark))
-    extra_study = spark.createDataFrame(
-        [("SD_00000002", None, "other", "False")],
-        "kf_id string, investigator_id string, external_id string, visible string",
-    )
-    tables["studies"] = tables["studies"].unionByName(extra_study, allowMissingColumns=True)
-    extra_participant = spark.createDataFrame(
-        [("PT_99999999", "SD_00000002", None)],
-        "kf_id string, study_id string, family_id string",
-    )
-    tables["participants"] = tables["participants"].unionByName(extra_participant, allowMissingColumns=True)
-    extra_diag = spark.createDataFrame(
-        [("DG_99999999", "PT_99999999")], "kf_id string, participant_id string"
-    )
-    tables["diagnoses"] = tables["diagnoses"].unionByName(extra_diag, allowMissingColumns=True)
-    return tables
+    return two_study_endpoint_tables(spark)
 
 
 def test_descendant_snapshot_isolates_study(two_study_tables):
@@ -51,6 +35,34 @@ def test_descendant_snapshot_isolates_study(two_study_tables):
     assert snap["sequencing-experiments"].count() == 1
     # family-relationships membership via either endpoint, deduped
     assert snap["family-relationships"].count() == 2
+
+
+def _subtree(plan: str, node: str) -> list[str]:
+    """The lines of the first ``node`` in a plan tree string and of every
+    operator below it."""
+    lines = plan.splitlines()
+    start = next(i for i, ln in enumerate(lines) if node in ln)
+    depth = lines[start].index(node)
+    below = []
+    for ln in lines[start + 1:]:
+        name = ln.lstrip(" :+-")
+        if len(ln) - len(name) <= depth:
+            break
+        below.append(ln)
+    return [lines[start], *below]
+
+
+def test_snapshot_broadcasts_kf_id_keys_without_aggregate(two_study_tables):
+    """``kf_id`` is unique, so a semi-join keyed on it broadcasts the
+    column as is: the diagnoses snapshot (keyed on the participants'
+    ``kf_id``, which are keyed on the study's) plans no aggregate, and so
+    no shuffle job, below its broadcast."""
+    snap = lineage.descendant_snapshot(two_study_tables, "SD_00000001")
+    plan = snap["diagnoses"]._jdf.queryExecution().executedPlan().toString()
+    broadcast = _subtree(plan, "BroadcastExchange")
+    assert not [ln for ln in broadcast if "Aggregate" in ln], plan
+    # the study's participants still reach the broadcast
+    assert any("Scan" in ln for ln in broadcast), plan
 
 
 def test_snapshot_feeds_pipeline(two_study_tables):
