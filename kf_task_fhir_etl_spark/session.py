@@ -5,15 +5,16 @@ are chosen to hold at cluster scale: AQE on (runtime coalesce + skew-join),
 shuffle partitions sized by env, Arrow enabled for the few pandas boundaries,
 UTC session timezone so results hash-match the DuckDB oracle.
 
-The driver JVM compiles less (``driver_java_options``). Every entry point
+The driver JVM compiles less (``DRIVER_JIT_FLAGS``). Every entry point
 here is a batch process: it starts a JVM, runs one study or one query set
 for 20-60 s and exits. In such a process most JVM CPU goes to the JIT
 compiler threads, mostly C2 compiles of Catalyst and scheduler paths that
 run a few thousand times and then never again. Two levers trim that:
 
-- ``-XX:CICompilerCount=max(2, cpus // 2)`` caps the JIT compiler threads
-  (C1 and C2 together) at half the cores ``local[N]`` runs tasks on; the
-  JDK 17 default on 4 cores is 3.
+- ``-XX:CICompilerCount=2`` runs one C1 and one C2 compiler thread, the
+  fewest tiered compilation allows. The JDK 17 default grows with the
+  cores (3 on 4 cores, 12 on 16), so the flag can only lower it. 2 is the
+  value measured, on a 4-core host.
 - The four C2 promotion thresholds (``Tier4InvocationThreshold``,
   ``Tier4MinInvocationThreshold``, ``Tier4CompileThreshold``,
   ``Tier4BackEdgeThreshold``) are 5x their JDK 17 defaults, so a method
@@ -24,10 +25,14 @@ They go in ``spark.driver.defaultJavaOptions``, not ``extraJavaOptions``:
 a caller's ``--driver-java-options`` (or its own ``extraJavaOptions``)
 replaces ``extraJavaOptions`` but is appended after
 ``defaultJavaOptions``, so both sets reach the JVM and the caller's flags
-win where they overlap. The options apply to the driver JVM only. In
-``local[N]`` the executors run inside it; on a cluster the executors are
-long-lived JVMs and keep the JDK defaults. They are read once, when the
-JVM starts: a session built while a JVM is already up keeps its flags.
+win where they overlap. They are set only for a ``local`` master, whose
+driver is this batch process. For any other master the builder leaves
+``defaultJavaOptions`` alone, so a cluster's own (from its
+``spark-defaults.conf``) stays in force; a builder config would replace it.
+The options apply to the driver JVM only. In ``local[N]`` the executors
+run inside it; on a cluster the executors are long-lived JVMs and keep the
+JDK defaults. They are read once, when the JVM starts: a session built
+while a JVM is already up keeps its flags.
 """
 
 from __future__ import annotations
@@ -45,26 +50,17 @@ TIER4_THRESHOLDS = {
     "Tier4CompileThreshold": 75000,
     "Tier4BackEdgeThreshold": 200000,
 }
+DRIVER_JIT_FLAGS = " ".join(
+    ["-XX:CICompilerCount=2"] + [f"-XX:{name}={value}" for name, value in TIER4_THRESHOLDS.items()]
+)
 # the driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half of RAM, at most this
 MAX_DEFAULT_DRIVER_MEM_MB = 16 * 1024
 
 
-def local_cores(cpus: str) -> int:
-    """The core count of ``local[cpus]``: ``cpus`` itself, or for ``*``
-    every core this process may run on."""
-    if cpus.isdigit():
-        return int(cpus)
-    try:
-        return len(os.sched_getaffinity(0))
-    except AttributeError:  # no affinity call on this platform
-        return os.cpu_count() or 1
-
-
-def driver_java_options(cpus: int) -> str:
-    """The driver JVM's JIT flags for ``cpus`` task cores (module docstring)."""
-    flags = [f"-XX:CICompilerCount={max(2, cpus // 2)}"]
-    flags += [f"-XX:{name}={value}" for name, value in TIER4_THRESHOLDS.items()]
-    return " ".join(flags)
+def driver_java_options(master: str) -> str | None:
+    """``DRIVER_JIT_FLAGS`` for a ``local`` master, else None: a cluster
+    driver keeps its site's ``defaultJavaOptions`` (module docstring)."""
+    return DRIVER_JIT_FLAGS if master.startswith("local") else None
 
 
 def default_driver_memory() -> str:
@@ -96,7 +92,6 @@ def get_spark(app_name: str = "kf_task_fhir_etl_spark", master: str | None = Non
         # (current naive-µs layout normalizes there too)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
-        .config("spark.driver.defaultJavaOptions", driver_java_options(local_cores(cpus)))
         .config("spark.ui.enabled", "false")
         # PySpark 4 captures a Python call site (stack walk + JVM origin RPC)
         # for EVERY DataFrame/Column call to enrich error messages. On
@@ -108,6 +103,9 @@ def get_spark(app_name: str = "kf_task_fhir_etl_spark", master: str | None = Non
             os.environ.get("SPARK_GRAFT_DF_DEBUG", "false"),
         )
     )
+    jit_flags = driver_java_options(master)
+    if jit_flags:
+        builder = builder.config("spark.driver.defaultJavaOptions", jit_flags)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -21,14 +21,11 @@ from pyspark.sql import functions as F
 def _semi(big: DataFrame, big_key: str, keys: DataFrame, key_col: str) -> DataFrame:
     """big WHERE big.big_key IN keys.key_col — broadcast semi-join.
 
-    A left-semi join emits each ``big`` row at most once whatever the key
-    side holds, so the ``distinct`` on a foreign-key column only shrinks
-    the broadcast. A ``kf_id`` key side is already unique, and
-    deduplicating it would cost a shuffle job and change nothing."""
-    key_df = keys.select(F.col(key_col).alias(big_key))
-    if key_col != "kf_id":
-        key_df = key_df.distinct()
-    return big.join(F.broadcast(key_df), on=[big_key], how="left_semi")
+    The key side is broadcast as is, duplicates and all: a left-semi join
+    emits each ``big`` row at most once whatever the key side holds, and
+    a ``distinct`` would cost a shuffle job per hop."""
+    key_df = F.broadcast(keys.select(F.col(key_col).alias(big_key)))
+    return big.join(key_df, on=[big_key], how="left_semi")
 
 
 def descendant_snapshot(

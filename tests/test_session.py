@@ -1,5 +1,5 @@
 """The session factory's driver JVM options: the JIT flags of
-``session.driver_java_options`` reach the driver JVM, alongside a caller's
+``session.DRIVER_JIT_FLAGS`` reach a local driver JVM, alongside a caller's
 own ``--driver-java-options``."""
 
 from __future__ import annotations
@@ -9,15 +9,10 @@ import os
 import subprocess
 import sys
 
-from kf_task_fhir_etl_spark.session import TIER4_THRESHOLDS
+from kf_task_fhir_etl_spark.session import DRIVER_JIT_FLAGS, TIER4_THRESHOLDS, driver_java_options
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _jit_flags(cpus: int) -> list[str]:
-    return [f"-XX:CICompilerCount={max(2, cpus // 2)}"] + [
-        f"-XX:{name}={value}" for name, value in TIER4_THRESHOLDS.items()
-    ]
+JIT_FLAGS = DRIVER_JIT_FLAGS.split()
 
 
 def _jvm_arguments(spark) -> list[str]:
@@ -26,10 +21,11 @@ def _jvm_arguments(spark) -> list[str]:
 
 
 def test_driver_jvm_runs_with_jit_flags(spark):
-    """The compiler count is half the ``local[N]`` cores (at least 2), and
-    the four C2 thresholds are 5x the JDK 17 defaults."""
+    """Two compiler threads, the fewest tiered compilation allows, and the
+    four C2 thresholds at 5x the JDK 17 defaults."""
     args = _jvm_arguments(spark)
-    assert set(_jit_flags(spark.sparkContext.defaultParallelism)) <= set(args), args
+    assert "-XX:CICompilerCount=2" in JIT_FLAGS
+    assert set(JIT_FLAGS) <= set(args), args
     assert TIER4_THRESHOLDS == {
         "Tier4InvocationThreshold": 5 * 5000,
         "Tier4MinInvocationThreshold": 5 * 600,
@@ -58,7 +54,7 @@ def test_caller_driver_java_options_keep_jit_flags(tmp_path):
         os.environ,
         PYTHONPATH=os.pathsep.join(p for p in (REPO, os.environ.get("PYTHONPATH")) if p),
         PYSPARK_SUBMIT_ARGS="--driver-java-options -XX:-UsePerfData pyspark-shell",
-        SPARK_GRAFT_CPUS="4",
+        SPARK_GRAFT_CPUS="2",
         SPARK_GRAFT_DRIVER_MEM="1g",
     )
     proc = subprocess.run(
@@ -66,8 +62,16 @@ def test_caller_driver_java_options_keep_jit_flags(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     args = json.loads(proc.stdout.strip().splitlines()[-1])
-    jit = _jit_flags(4)
-    assert jit[0] == "-XX:CICompilerCount=2"
-    assert set(jit) <= set(args), args
+    assert set(JIT_FLAGS) <= set(args), args
     assert "-XX:-UsePerfData" in args
-    assert max(args.index(f) for f in jit) < args.index("-XX:-UsePerfData")
+    assert max(args.index(f) for f in JIT_FLAGS) < args.index("-XX:-UsePerfData")
+
+
+def test_cluster_master_keeps_site_java_options():
+    """Only a ``local`` master gets the JIT flags; for any other the
+    builder sets no ``defaultJavaOptions``, which would replace the ones a
+    cluster sets in its ``spark-defaults.conf``."""
+    for master in ("local", "local[4]", "local[*]", "local-cluster[2,1,1024]"):
+        assert driver_java_options(master) == DRIVER_JIT_FLAGS
+    for master in ("spark://head:7077", "yarn", "k8s://https://api:6443"):
+        assert driver_java_options(master) is None

@@ -52,17 +52,18 @@ def _subtree(plan: str, node: str) -> list[str]:
     return [lines[start], *below]
 
 
-def test_snapshot_broadcasts_kf_id_keys_without_aggregate(two_study_tables):
-    """``kf_id`` is unique, so a semi-join keyed on it broadcasts the
-    column as is: the diagnoses snapshot (keyed on the participants'
-    ``kf_id``, which are keyed on the study's) plans no aggregate, and so
-    no shuffle job, below its broadcast."""
+def test_snapshot_broadcasts_keys_without_aggregate(two_study_tables):
+    """A semi-join broadcasts its key column as is, so no snapshot plans an
+    aggregate, and so a shuffle job, below its broadcast: neither the
+    diagnoses (keyed on the participants' ``kf_id``) nor the families
+    (keyed on the participants' ``family_id``, a foreign key)."""
     snap = lineage.descendant_snapshot(two_study_tables, "SD_00000001")
-    plan = snap["diagnoses"]._jdf.queryExecution().executedPlan().toString()
-    broadcast = _subtree(plan, "BroadcastExchange")
-    assert not [ln for ln in broadcast if "Aggregate" in ln], plan
-    # the study's participants still reach the broadcast
-    assert any("Scan" in ln for ln in broadcast), plan
+    for endpoint in ("diagnoses", "families"):
+        plan = snap[endpoint]._jdf.queryExecution().executedPlan().toString()
+        broadcast = _subtree(plan, "BroadcastExchange")
+        assert not [ln for ln in broadcast if "Aggregate" in ln], plan
+        # the study's participants still reach the broadcast
+        assert any("Scan" in ln for ln in broadcast), plan
 
 
 def test_snapshot_feeds_pipeline(two_study_tables):
