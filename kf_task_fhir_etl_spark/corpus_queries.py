@@ -4285,8 +4285,9 @@ def q152_streaming_join_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q153 — OUT-OF-ORDER streaming pattern spans (streaming/patterns.py::
-# streaming_pattern_spans_ooo; VERDICT r09 Next #4 — the ordering contract
-# produced by watermark buffering instead of assumed from the source)
+# streaming_pattern_spans with a watermark; VERDICT r09 Next #4 — the
+# ordering contract produced by watermark buffering instead of assumed
+# from the source)
 # ---------------------------------------------------------------------------
 
 
@@ -4296,12 +4297,12 @@ def q153_streaming_pattern_spans_ooo(spark: SparkSession, sf_dir: str) -> DataFr
     evaluated on a stream whose per-user event times are GENUINELY
     out of order across microbatches: every fifth event arrives one batch
     late (streaming/events.py::read_events_stream_late_shifted), violating
-    the contract q145's in-order source guarantees. The buffered matcher
-    (streaming_pattern_spans_ooo) absorbs the disorder in per-user state,
-    releasing and deciding only the watermark-passed prefix through the
-    SAME decision core as q145, with event-time timeouts waking users whose
-    buffers outlive their arrivals and two sentinel microbatches closing
-    the finite replay. The oracle is LITERALLY q137's batch SQL
+    the contract q145's in-order source guarantees. Given the derived
+    watermark, streaming_pattern_spans absorbs the disorder in per-user
+    state, releasing and deciding only the watermark-passed prefix through
+    the SAME engine and span kernel as q145, with event-time timeouts
+    waking users whose buffers outlive their arrivals and two sentinel
+    microbatches closing the finite replay. The oracle is LITERALLY q137's batch SQL
     (_SPANS_ORACLE_SQL — one string, now three surfaces): shuffled arrival
     must change NOTHING about the decisions. The sentinel user is filtered
     from the output (its rows are deny-typed and can never match)."""
@@ -4309,12 +4310,10 @@ def q153_streaming_pattern_spans_ooo(spark: SparkSession, sf_dir: str) -> DataFr
         read_events_stream_late_shifted,
         run_stream_to_memory,
     )
-    from kf_task_fhir_etl_spark.streaming.patterns import streaming_pattern_spans_ooo
+    from kf_task_fhir_etl_spark.streaming.patterns import streaming_pattern_spans
 
     stream, wm = read_events_stream_late_shifted(spark, sf_dir, n_splits=3, late_mod=5)
-    spans = streaming_pattern_spans_ooo(
-        stream, "view", "purchase", ["error"], watermark=wm
-    )
+    spans = streaming_pattern_spans(stream, "view", "purchase", ["error"], watermark=wm)
     run_stream_to_memory(spans, "q153_spans_mem", output_mode="append")
     return (
         spark.table("q153_spans_mem")
@@ -4464,18 +4463,19 @@ def q157_incremental_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q158 — OUT-OF-ORDER streaming funnel (streaming/patterns.py::
-# streaming_funnel_trajectories_ooo; the q153 buffering applied to the
-# funnel family — both stateful pattern operators now have both arrival
-# modes)
+# streaming_funnel_trajectories with a watermark; the q153 buffering
+# applied to the funnel kernel — both stateful pattern operators run both
+# arrival modes through one engine)
 # ---------------------------------------------------------------------------
 
 
 @register("q158_streaming_funnel_ooo", oracle=_FUNNEL_ORACLE_SQL)
 def q158_streaming_funnel_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The q134 first-touch funnel evaluated on the q153 DISORDERED stream
-    (every fifth event one batch late): the buffered matcher advances the
-    carried first-touch vector only over watermark-released prefixes
-    through the SAME core as the in-order q147 matcher, so shuffled
+    (every fifth event one batch late): given the derived watermark,
+    streaming_funnel_trajectories advances the carried first-touch vector
+    only over watermark-released prefixes through the SAME engine and
+    funnel kernel as the in-order q147, so shuffled
     arrival must change NOTHING — the oracle is LITERALLY q134's batch
     SQL (_FUNNEL_ORACLE_SQL, now a third surface). The sentinel user
     rides step-1-typed events (the watermark must see them BEFORE the
@@ -4487,13 +4487,13 @@ def q158_streaming_funnel_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_stream_late_shifted,
         run_stream_to_memory,
     )
-    from kf_task_fhir_etl_spark.streaming.patterns import streaming_funnel_trajectories_ooo
+    from kf_task_fhir_etl_spark.streaming.patterns import streaming_funnel_trajectories
 
     steps = ["view", "click", "purchase"]
     stream, wm = read_events_stream_late_shifted(
         spark, sf_dir, n_splits=3, late_mod=5, flush_type="view"
     )
-    traj = streaming_funnel_trajectories_ooo(stream, steps, watermark=wm)
+    traj = streaming_funnel_trajectories(stream, steps, watermark=wm)
     run_stream_to_memory(traj, "q158_funnel_mem", output_mode="update")
     t = spark.table("q158_funnel_mem").filter(F.col("user_id") != -1)
     w = Window.partitionBy("user_id").orderBy(F.desc("reached"))

@@ -14,7 +14,7 @@ materialized. Two loop shapes:
   deterministic and lets an oracle unroll the same rounds.
 - Run to a FIXPOINT (bfs_distances, sssp_distances, k_core, and
   dedup.connected_components / graph_delta.apply_sssp_inserts): the loop
-  stops at the first round that changes nothing. All but k_core run on
+  stops at the first round that changes nothing. All of them run on
   ``iterate_to_fixpoint``, the one checkpoint → probe → release → guard
   policy; each fixpoint is unique, so an oracle that unrolls at least as
   many rounds reproduces it (extra rounds are no-ops).
@@ -118,7 +118,7 @@ def iterate_to_fixpoint(
 ) -> DataFrame:
     """Run ``step`` until a round changes nothing and return that
     round's state — the one lifecycle policy of the fixpoint operators
-    (bfs/sssp_distances, graph_delta.apply_sssp_inserts,
+    (bfs/sssp_distances, k_core, graph_delta.apply_sssp_inserts,
     dedup.connected_components).
 
     ``step(state)`` returns ``(nxt, changed)``: ``nxt`` sits behind a LAZY
@@ -526,11 +526,12 @@ def k_core(
     key. State is the |E|-row edge frame and a |V|-row survivor set;
     nothing edge-sized ever reaches the driver — the per-round fixpoint
     test is a count() comparison (peeling is monotone decreasing, so
-    count equality IS set equality). Per-round localCheckpoints keep the
-    plan flat and superseded rounds are released (the pagerank/
-    label_propagation/connected_components discipline). Rounds are
-    data-bounded (≤ |V| pathologically, a handful in practice);
-    ``max_rounds`` is a loud guard, not a silent truncation.
+    count equality IS set equality). The rounds run on
+    ``iterate_to_fixpoint``: one lazy checkpoint and one count per round,
+    superseded rounds released. Rounds are data-bounded (≤ |V|
+    pathologically, a handful in practice); ``max_rounds`` is a loud
+    guard on PRODUCTIVE peels, not a silent truncation, and a round that
+    peels the graph empty ends the loop with the (empty) answer.
 
     Lifecycle of the RETURNED plan (r08 ADVICE): the result is a degree
     aggregate over the FINAL round's |E|-sized edge checkpoint, whose
@@ -562,15 +563,16 @@ def k_core(
     cur = _normalize_undirected(edges, src, dst).localCheckpoint(eager=False)
     with _static_plans(cur):
         n_cur = cur.count()
-        peels = 0
-        while n_cur > 0:
+
+        def step(cur: DataFrame) -> tuple[DataFrame, int]:
+            nonlocal n_cur
             deg = _degrees(cur, "d")
             # keep feeds TWO semi-joins — without the per-round checkpoint
             # Catalyst re-derives the |E|-sized degree aggregate once per
-            # consumer (the triangle_count deg lesson). |V|-sized; LAZY (r12) like nxt below: the count is the
-            # round's ONE job — it computes keep + nxt, persists both, and
-            # counts in a single pass (previously three jobs per round);
-            # released right after that count has materialized it.
+            # consumer (the triangle_count deg lesson). |V|-sized and LAZY
+            # like nxt: the count is the round's ONE job, which computes
+            # keep + nxt, persists both and counts in a single pass; keep
+            # is released once that count has materialized nxt.
             keep = deg.filter(F.col("d") >= k).select("node").localCheckpoint(eager=False)
             nxt = (
                 cur.join(keep.withColumnRenamed("node", "u"), "u", "leftsemi")
@@ -580,32 +582,19 @@ def k_core(
             )
             n_nxt = nxt.count()
             release_checkpoints([keep], blocking=False)
-            if n_nxt == n_cur:
-                # fixpoint: nxt duplicates cur — release the duplicate blocks
-                release_checkpoints([nxt], blocking=False)
-                break
-            # the guard counts PRODUCTIVE peel rounds only, so a graph whose
-            # peel depth is exactly max_rounds still gets its (free) fixpoint
-            # confirmation instead of a spurious raise
-            peels += 1
-            if peels > max_rounds and n_nxt > 0:
-                # n_nxt == 0 is a TERMINAL state, not "still peeling" — the
-                # empty answer is known, so the guard must not discard it
-                # (the bfs empty-frontier-before-guard ordering applied here
-                # too)
-                release_checkpoints([nxt, cur], blocking=False)
-                raise RuntimeError(
-                    f"k_core: still peeling after max_rounds={max_rounds} "
-                    "productive rounds — raise the guard (each counted round "
-                    "removed >=1 node, so the graph's peel depth exceeds it)"
-                )
-            release_checkpoints([cur], blocking=False)
-            cur, n_cur = nxt, n_nxt
-        if handles_out is not None:
-            # hand the final round's edge checkpoint to the caller — the
-            # returned aggregate cannot release it (docstring lifecycle note)
-            handles_out.append(cur)
-        return _degrees(cur, "deg")
+            # peeling only removes edges, so an unchanged count is the
+            # fixpoint; an EMPTY core is terminal too (its answer is known),
+            # so it reports no change rather than counting toward the guard
+            changed = n_nxt if n_nxt < n_cur else 0
+            n_cur = n_nxt
+            return nxt, changed
+
+        cur = iterate_to_fixpoint(cur, step, max_rounds, "k_core: max_rounds")
+    if handles_out is not None:
+        # hand the final round's edge checkpoint to the caller — the
+        # returned aggregate cannot release it (docstring lifecycle note)
+        handles_out.append(cur)
+    return _degrees(cur, "deg")
 
 
 def _dist_type(edges: DataFrame, weight_col: str) -> str:

@@ -9,6 +9,17 @@ of the reference's async submit loop, ``etl/ingest.py:514``).
 
 S9's dependency order is data in ``plans.transform.ALL_TARGETS``; ``load_all``
 walks it.
+
+Why S9's ``keyed_parquet_upsert`` is not routed through
+``streaming/versioned_store.apply_batch``, the other keyed upsert: the two
+serve different contracts. ``keyed_parquet_upsert`` publishes PLAIN
+``<study>/<target>/`` parquet tables by local rename — the CLI's on-disk
+layout, which any parquet reader (pyarrow in the benchmark's
+``etl_studies`` check) reads with no protocol. ``apply_batch`` commits
+``.v{id}`` versions that readers resolve through marker files on the Hadoop
+FileSystem API, and its batch-id replay guard serves ``foreachBatch``'s
+at-least-once delivery; a plain reader of that layout would see every
+retained version.
 """
 
 from __future__ import annotations

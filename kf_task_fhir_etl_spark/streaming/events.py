@@ -299,8 +299,8 @@ def read_events_stream_late_shifted(
     DELAYS every event with ``event_id % late_mod == 0`` by one batch:
     batch i+1 carries slice i+1's regular rows plus slice i's latecomers,
     so per-user event time is NOT monotone across microbatches and the
-    ordering contract of ``streaming_pattern_spans`` is genuinely violated
-    (the buffered ``streaming_pattern_spans_ooo`` must absorb it). The
+    in-order contract of ``streaming_pattern_spans`` (``watermark=None``)
+    is genuinely violated (its watermark mode must absorb it). The
     disorder is bounded by one slice's time width, so the returned
     watermark delay — max slice width plus an hour of slack — guarantees
     no latecomer is ever watermark-dropped.

@@ -1,38 +1,51 @@
-"""Streaming event-pattern spans — the stream form of
-``operators/patterns.py::pattern_spans`` (VERDICT r08 #6), completing the
+"""Streaming event-pattern matchers — the stream forms of
+``operators/patterns.py::pattern_spans`` (q137) and
+``operators/funnel.py::funnel_trajectories`` (q134), completing the
 batch/stream unification story for the pattern family the way q109 did for
 the stateless quality filters and q96/q37 for dedup/aggregation.
 
-Batch ``pattern_spans`` is ONE window pass per user: for each ``then``
-event, the latest strictly-earlier ``first`` event, kept when no ``deny``
-event sits strictly between them. That running-max-over-history shape is
-exactly a keyed streaming state machine: per user, carry (latest anchor µs,
-latest deny µs) and decide each arriving ``then`` event against the carried
-state — O(1) state per user, no buffering of history. Decisions are
-emitted append-only: a span, once emitted, is final (the open-interval veto
-only depends on events BEFORE the span's end, which the ordering contract
-below has already delivered).
+ONE per-user engine (``_match_stream``) runs TWO kernels. Each batch
+operator is a running scan over a user's time-ordered history, so each
+stream form is a keyed state machine: per user, a small carry (``_Spans``:
+latest anchor µs and latest deny µs, 4 scalars; ``_Funnel``: the k
+first-touch completion µs) advanced over each window of that user's
+events, sorted by event time — O(1) state per user, never full history.
+The engine owns everything else once: the intake projection, the output
+and state schemas, the per-user ``match`` function and the one
+``applyInPandasWithState`` call.
 
-ORDERING CONTRACT (documented, enforced by the q145 source): each user's
-events must arrive in nondecreasing event-time order ACROSS microbatches,
-with same-microsecond rows co-batched not required — the matcher applies
-the strict-precedence rule to the carried state too, so an anchor that
-straddles a batch boundary at the same microsecond as a target still
-cannot count as "before" it. Within a microbatch, arbitrary row order is
-fine (the matcher sorts the group's Arrow batch). This is the monotone
-log-segment replay shape (Kafka per-key ordering, time-partitioned file
-drops); true out-of-order ingestion needs watermark-delayed evaluation —
-buffer events until the watermark passes, then run this same matcher over
-the released prefix — which is a composition of the session-window flush
-machinery (streaming/events.py) with this operator, not a different
-algorithm.
+The ``watermark`` argument is the only mode switch (in-order evaluation is
+watermark-triggered evaluation with nothing held back — the Dataflow
+model):
 
-Scale: state is 4 scalars per distinct user, hash-partitioned by the user
-key into the state store — the same shuffle key as the batch window pass,
-so skew reasoning carries over; a hot user costs one sorted scan of its
-per-batch slice, never a self-join. The matcher is vectorized numpy over
-each group's Arrow batch (prefix maxima + one searchsorted), not a Python
-row loop.
+- ``watermark=None`` — IN-ORDER. Every arriving row is released at once,
+  under ``NoTimeout``, and the state is the bare carry. ORDERING CONTRACT
+  (enforced by the q145/q147 source, ``read_events_stream_time_split``):
+  each user's events arrive in nondecreasing event-time order ACROSS
+  microbatches; same-µs rows need not be co-batched, because the kernels
+  apply their strict-precedence rules to the carried state too, so an
+  anchor that straddles a batch boundary at the same µs as a target still
+  cannot count as "before" it. Within a microbatch, row order is free (the
+  engine sorts the group's rows). This is the monotone log-segment replay
+  shape (Kafka per-key ordering, time-partitioned file drops).
+- ``watermark="<delay>"`` — OUT-OF-ORDER. Per-user disorder up to the
+  delay is absorbed by a buffer in the state (``pend_us``/``pend_t``);
+  only the prefix STRICTLY below the watermark is released to the kernel,
+  and an event-time timeout wakes a user whose buffer outlives its
+  arrivals. Sound because every later arrival is at or above the
+  watermark (rows later than the bound are dropped — the contract every
+  Spark watermark applies), so nothing that could anchor, veto or precede
+  a released decision can still arrive, and emissions stay final. Flushing
+  the trailing buffer of a finite replay needs the watermark to pass it
+  and ONE further microbatch to fire the timeouts — the two-sentinel
+  staging of ``events.read_events_stream_late_shifted``.
+
+Scale: state is hash-partitioned by the user key into the state store —
+the same shuffle key as the batch window pass, so skew reasoning carries
+over; a hot user costs one sorted scan of its per-batch slice, never a
+self-join. The kernels are vectorized numpy over each group's rows
+(prefix maxima + one searchsorted; per-step minima), not a Python row
+loop.
 
 Reference anchor: the reference pipeline has no streaming surface
 (SURVEY.md §2.8); this extends the engine's pattern family (q137/q138/
@@ -52,13 +65,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 _ABSENT = np.iinfo(np.int64).min
 
 SPANS_STATE = "has_first boolean, last_first bigint, has_deny boolean, last_deny bigint"
+_PENDING_STATE = ", pend_us array<bigint>, pend_t array<string>"
 
 
 def _decide_spans(us, t, first: str, then: str, deny_list: list[str], seed_first, seed_deny):
-    """The span decision core over a SORTED µs window with carried seeds —
-    ONE implementation shared by the in-order matcher and the
-    watermark-buffered out-of-order matcher (r10): returns
-    ``(hit mask, per-row last_first, new_first, new_deny)``.
+    """The span decision core over a SORTED µs window with carried seeds:
+    returns ``(hit mask, per-row last_first, new_first, new_deny)``.
 
     Prefix maxima INCLUDE row i; the strictly-before lookup rewinds to the
     last row with a smaller µs (searchsorted 'left') — the window half of
@@ -106,110 +118,11 @@ def _decide_spans(us, t, first: str, then: str, deny_list: list[str], seed_first
     return hit, last_first, new_first, new_deny
 
 
-def _make_span_matcher(first: str, then: str, deny: set[str]):
-    deny_list = sorted(deny)
-
-    def match(key, pdfs, state: GroupState):
-        if state.exists:
-            has_f, lf, has_d, ld = state.get
-            seed_first = np.int64(lf) if has_f else _ABSENT
-            seed_deny = np.int64(ld) if has_d else _ABSENT
-        else:
-            seed_first = seed_deny = _ABSENT
-        parts = [p for p in pdfs if len(p)]
-        if not parts:
-            return
-        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        # stable sort: equal-µs rows keep arrival order, but the decision
-        # rule is a SET rule over strictly-earlier µs, so their relative
-        # order cannot change any emitted span. Sorted as raw numpy (r13):
-        # pandas sort_values rebuilds a whole frame per group and this
-        # runs once per user per microbatch (guide §4 per-group cost).
-        us0 = pdf["__us"].to_numpy(dtype=np.int64)
-        order = np.argsort(us0, kind="stable")
-        us = us0[order]
-        t = pdf["__t"].to_numpy()[order]
-        hit, last_first, new_first, new_deny = _decide_spans(
-            us, t, first, then, deny_list, seed_first, seed_deny
-        )
-        state.update(
-            (
-                bool(new_first != _ABSENT),
-                int(new_first) if new_first != _ABSENT else 0,
-                bool(new_deny != _ABSENT),
-                int(new_deny) if new_deny != _ABSENT else 0,
-            )
-        )
-        if hit.any():
-            yield pd.DataFrame(
-                {
-                    "user": np.repeat(key[0], int(hit.sum())),
-                    "start_us": last_first[hit],
-                    "end_us": us[hit],
-                }
-            )
-
-    return match
-
-
-def streaming_pattern_spans(
-    events: DataFrame,
-    first: str,
-    then: str,
-    deny: list[str] | None = None,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Matched (user, start_us, end_us) spans over an event STREAM, with
-    pattern_spans' exact batch semantics: every ``then`` event pairs with
-    its latest strictly-earlier ``first`` event and survives only if no
-    ``deny`` event falls strictly inside the open µs interval. NULL
-    users/timestamps are excluded at intake (the batch operator's
-    contract). Emits one row per matching ``then`` event — duplicates
-    when several targets share a span, exactly like the batch window
-    pass.
-
-    State per user is (latest anchor µs, latest deny µs) — 4 scalars, no
-    event buffering — under the module-level ordering contract
-    (per-user nondecreasing event time across microbatches)."""
-    deny = deny or []
-    types = {first, then, *deny}
-    user_field = next(f for f in events.schema.fields if f.name == user_col)
-    ev = (
-        events.filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
-        .filter(F.col(type_col).isin(*types))
-        .select(
-            F.col(user_col).alias("user"),
-            F.col(type_col).alias("__t"),
-            F.unix_micros(F.col(ts_col)).alias("__us"),
-        )
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("user", user_field.dataType),
-            T.StructField("start_us", T.LongType()),
-            T.StructField("end_us", T.LongType()),
-        ]
-    )
-    out = ev.groupBy("user").applyInPandasWithState(
-        _make_span_matcher(first, then, set(deny)),
-        outputStructType=out_schema,
-        stateStructType=SPANS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return out.select(F.col("user").alias(user_col), "start_us", "end_us")
-
-
 def _advance_funnel(us, ty, t: list, steps: list[str]) -> list:
     """The funnel advance core over ONE event window with carried
     first-touch µs — sequential per-step minima, each vectorized: t_i is
     fixed before t_{i+1} is derived, so a window containing several
-    consecutive steps' events advances through all of them in one pass.
-    Shared by the in-order matcher (whole batch = the window, exhaustive
-    under the module ordering contract) and the watermark-buffered
-    out-of-order matcher (window = the released prefix — r10)."""
+    consecutive steps' events advances through all of them in one pass."""
     k = len(steps)
     for i in range(k):
         if t[i] != _ABSENT:
@@ -224,34 +137,185 @@ def _advance_funnel(us, ty, t: list, steps: list[str]) -> list:
     return t
 
 
-def _make_funnel_matcher(steps: list[str]):
-    k = len(steps)
+class _Spans:
+    """Span kernel: carry (latest anchor µs, latest deny µs); emits one
+    (start_us, end_us) row per matching target, append-only."""
+
+    mode = "append"
+    state = SPANS_STATE
+    fields = [("start_us", T.LongType()), ("end_us", T.LongType())]
+
+    def __init__(self, first: str, then: str, deny: list[str]):
+        self.first, self.then, self.deny = first, then, sorted(set(deny))
+        self.types = sorted({first, then, *deny})
+
+    def load(self, stored):
+        if stored is None:
+            return _ABSENT, _ABSENT
+        has_f, lf, has_d, ld = stored[:4]
+        return (np.int64(lf) if has_f else _ABSENT), (np.int64(ld) if has_d else _ABSENT)
+
+    def dump(self, carry) -> tuple:
+        f, d = carry
+        return (bool(f != _ABSENT), int(f) if f != _ABSENT else 0,
+                bool(d != _ABSENT), int(d) if d != _ABSENT else 0)
+
+    def advance(self, us, t, carry):
+        hit, last_first, f, d = _decide_spans(us, t, self.first, self.then, self.deny, *carry)
+        out = {"start_us": last_first[hit], "end_us": us[hit]} if hit.any() else None
+        return (f, d), out
+
+
+class _Funnel:
+    """Funnel kernel: carry the k first-touch µs; emits (reached, us1..usk)
+    whenever a window advanced the user ≥1 step (update mode)."""
+
+    mode = "update"
+
+    def __init__(self, steps: list[str]):
+        if not steps:
+            raise ValueError("streaming_funnel_trajectories: empty step list")
+        self.types = self.steps = list(steps)
+        n = range(1, len(steps) + 1)
+        self.state = ", ".join(f"t{i} bigint" for i in n)
+        self.fields = [("reached", T.IntegerType()), *[(f"us{i}", T.LongType()) for i in n]]
+
+    def load(self, stored) -> list:
+        if stored is None:
+            return [int(_ABSENT)] * len(self.steps)
+        return [int(x) for x in stored[: len(self.steps)]]
+
+    def dump(self, carry) -> tuple:
+        return tuple(carry)
+
+    def advance(self, us, t, carry):
+        before = sum(x != _ABSENT for x in carry)
+        carry = _advance_funnel(us, t, carry, self.steps)
+        after = sum(x != _ABSENT for x in carry)
+        if after == before:
+            return carry, None
+        out = {"reached": [after]}
+        for i, x in enumerate(carry):
+            out[f"us{i + 1}"] = [x if x != _ABSENT else None]
+        return carry, out
+
+
+def _match_stream(
+    events: DataFrame,
+    kernel,
+    watermark: str | None,
+    user_col: str,
+    ts_col: str,
+    type_col: str,
+) -> DataFrame:
+    """Run ``kernel`` per user over ``events`` (module docstring: the two
+    modes). NULL users/timestamps are excluded at intake — the batch
+    operators' contract."""
+    buffered = watermark is not None
+    user_type = events.schema[user_col].dataType
+    cols = [
+        F.col(user_col).alias("user"),
+        F.col(type_col).alias("__t"),
+        F.unix_micros(F.col(ts_col)).alias("__us"),
+    ]
+    if buffered:
+        events = events.withWatermark(ts_col, watermark)
+        # the watermark-tagged TIMESTAMP column must survive the projection:
+        # the event-time timeout resolves its delay through it (decisions
+        # are on the integer µs)
+        cols.append(F.col(ts_col).alias("__ts"))
+    ev = (
+        events.filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
+        .filter(F.col(type_col).isin(*kernel.types))
+        .select(*cols)
+    )
 
     def match(key, pdfs, state: GroupState):
-        t = list(state.get) if state.exists else [int(_ABSENT)] * k
-        before = sum(1 for x in t if x != _ABSENT)
+        stored = state.get if state.exists else None
+        carry = kernel.load(stored)
         parts = [p for p in pdfs if len(p)]
-        if not parts:
+        us = [p["__us"].to_numpy(dtype=np.int64) for p in parts]
+        t = [p["__t"].to_numpy(dtype=object) for p in parts]
+        if buffered and stored is not None and stored[-2]:
+            us.insert(0, np.asarray(stored[-2], dtype=np.int64))
+            t.insert(0, np.asarray(stored[-1], dtype=object))
+        if not us:
             return
-        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        us = pdf["__us"].to_numpy(dtype=np.int64)
-        ty = pdf["__t"].to_numpy()
-        t = _advance_funnel(us, ty, t, steps)
-        after = sum(1 for x in t if x != _ABSENT)
-        state.update(tuple(t))
-        if after > before:
-            yield pd.DataFrame(
-                {
-                    "user": [key[0]],
-                    "reached": [after],
-                    **{
-                        f"us{i + 1}": [t[i] if t[i] != _ABSENT else None]
-                        for i in range(k)
-                    },
-                }
-            )
+        us = us[0] if len(us) == 1 else np.concatenate(us)
+        t = t[0] if len(t) == 1 else np.concatenate(t)
+        # stable sort: equal-µs rows keep arrival order, but both kernels'
+        # rules are SET rules over strictly-earlier µs, so their relative
+        # order cannot change any emission. Sorted as raw numpy (r13):
+        # pandas sort_values rebuilds a whole frame per group and this
+        # runs once per user per microbatch (guide §4 per-group cost).
+        order = np.argsort(us, kind="stable")
+        us, t = us[order], t[order]
+        cut = len(us)
+        if buffered:
+            # released prefix: strictly below the watermark (future arrivals
+            # are ≥ wm, so strictness keeps the no-retraction guarantee even
+            # for a future event AT the watermark)
+            wm_ms = state.getCurrentWatermarkMs()
+            cut = int(np.searchsorted(us, np.int64(wm_ms) * 1000, side="left"))
+        out = None
+        if cut:
+            carry, out = kernel.advance(us[:cut], t[:cut], carry)
+        row = kernel.dump(carry)
+        if buffered:
+            # tolist() converts in C (r13): per-element Python loops
+            # dominated the no-pending path's state write
+            row += (us[cut:].tolist(), [str(x) for x in t[cut:]])
+            if cut < len(us):
+                # wake this key when the watermark passes its oldest pending
+                # event, even if no new rows arrive for it (ms floor: wm > ts
+                # in ms implies wm_us > pend_us — strict release preserved)
+                state.setTimeoutTimestamp(max(int(us[cut] // 1000), wm_ms + 1))
+        state.update(row)
+        if out is not None:
+            n = len(next(iter(out.values())))
+            yield pd.DataFrame({"user": np.repeat(key[0], n), **out})
 
-    return match
+    names = [name for name, _ in kernel.fields]
+    out_schema = T.StructType(
+        [T.StructField("user", user_type)]
+        + [T.StructField(name, dtype) for name, dtype in kernel.fields]
+    )
+    out = ev.groupBy("user").applyInPandasWithState(
+        match,
+        outputStructType=out_schema,
+        stateStructType=kernel.state + (_PENDING_STATE if buffered else ""),
+        outputMode=kernel.mode,
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout if buffered else GroupStateTimeout.NoTimeout
+        ),
+    )
+    return out.select(F.col("user").alias(user_col), *names)
+
+
+def streaming_pattern_spans(
+    events: DataFrame,
+    first: str,
+    then: str,
+    deny: list[str] | None = None,
+    user_col: str = "user_id",
+    ts_col: str = "ts",
+    type_col: str = "event_type",
+    watermark: str | None = None,
+) -> DataFrame:
+    """Matched (user, start_us, end_us) spans over an event STREAM, with
+    pattern_spans' exact batch semantics: every ``then`` event pairs with
+    its latest strictly-earlier ``first`` event and survives only if no
+    ``deny`` event falls strictly inside the open µs interval. Emits one
+    row per matching ``then`` event, append-only — duplicates when
+    several targets share a span, exactly like the batch window pass.
+
+    ``watermark=None`` needs the module's ordering contract and keeps 4
+    scalars of state per user; a delay (e.g. ``"3 hours"``) absorbs
+    per-user disorder up to it in a state buffer and drops rows later than
+    the bound. Either way the decisions are q137's, including
+    strict-precedence µs ties across batch and release boundaries."""
+    kernel = _Spans(first, then, deny or [])
+    return _match_stream(events, kernel, watermark, user_col, ts_col, type_col)
 
 
 def streaming_funnel_trajectories(
@@ -260,307 +324,20 @@ def streaming_funnel_trajectories(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
+    watermark: str | None = None,
 ) -> DataFrame:
     """First-touch funnel trajectories over an event STREAM — the stream
-    form of ``operators/funnel.py::funnel_trajectories`` under this
-    module's ordering contract: per user the state is the k first-touch
-    completion µs (k scalars — never buffered events), and step i+1
+    form of ``operators/funnel.py::funnel_trajectories``: step i+1
     completes when an event of its type lands STRICTLY after the carried
     t_i. Emits in UPDATE mode: one row per user per microbatch in which
     the user advanced ≥1 step — (user, reached, us1..usk). ``reached`` is
-    monotone and us_j never changes once set (first touch = earliest), so
-    the latest row per user (max ``reached``) is the final trajectory;
-    aggregate those for the funnel report.
+    monotone and us_j never changes once set (first touch = earliest,
+    since releases happen in event-time order), so the latest row per
+    user (max ``reached``) is the final trajectory; aggregate those for
+    the funnel report.
 
-    NULL users/timestamps are excluded at intake (the batch operator's
-    contract). Scale: state is k bigints per user in the state store,
-    hash-partitioned on the user key — the same shuffle as every step of
-    the batch funnel chain."""
-    if not steps:
-        raise ValueError("streaming_funnel_trajectories: empty step list")
-    user_field = next(f for f in events.schema.fields if f.name == user_col)
-    ev = (
-        events.filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
-        .filter(F.col(type_col).isin(*steps))
-        .select(
-            F.col(user_col).alias("user"),
-            F.col(type_col).alias("__t"),
-            F.unix_micros(F.col(ts_col)).alias("__us"),
-        )
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("user", user_field.dataType),
-            T.StructField("reached", T.IntegerType()),
-            *[T.StructField(f"us{i + 1}", T.LongType()) for i in range(len(steps))],
-        ]
-    )
-    state_schema = ", ".join(f"t{i + 1} bigint" for i in range(len(steps)))
-    out = ev.groupBy("user").applyInPandasWithState(
-        _make_funnel_matcher(list(steps)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return out.select(
-        F.col("user").alias(user_col), "reached", *[f"us{i + 1}" for i in range(len(steps))]
-    )
-
-
-# ---------------------------------------------------------------------------
-# Out-of-order streaming pattern spans (r10 — VERDICT r09 Next #4): the
-# module ordering contract, PRODUCED instead of assumed. Events buffer in
-# per-user state until the WATERMARK passes them; the released prefix —
-# now guaranteed complete and re-sorted — runs through the SAME decision
-# core as the in-order matcher (_decide_spans), carrying the same 4-scalar
-# seeds across releases. Soundness: an event is released only when
-# strictly below the watermark, and every future arrival is at-or-above
-# it (later rows are late beyond the declared bound and dropped, exactly
-# the watermark contract every Spark aggregation applies) — so nothing
-# that could anchor or veto a released decision can arrive afterwards,
-# and append-mode emission stays final. State per user is the 4 scalars
-# plus ONLY the inside-the-disorder-window buffer (watermark-bounded, the
-# session-window flush discipline of streaming/events.py), never full
-# history. Flushing the trailing buffer on a finite replay needs the
-# watermark to advance past it and ONE further microbatch to fire the
-# event-time timeouts — the two-sentinel staging in
-# events.read_events_stream_late_shifted.
-# ---------------------------------------------------------------------------
-
-BUFFERED_SPANS_STATE = (
-    SPANS_STATE + ", pend_us array<bigint>, pend_t array<string>"
-)
-
-
-def _make_buffered_span_matcher(first: str, then: str, deny: set[str]):
-    deny_list = sorted(deny)
-
-    def match(key, pdfs, state: GroupState):
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = np.int64(wm_ms) * 1000
-        if state.exists:
-            has_f, lf, has_d, ld, pus, pt = state.get
-            seed_first = np.int64(lf) if has_f else _ABSENT
-            seed_deny = np.int64(ld) if has_d else _ABSENT
-            # no list() copy before asarray (r13): the state tuple already
-            # holds sequences, and this runs once per user per microbatch
-            pend_us = np.asarray(pus if pus is not None else (), dtype=np.int64)
-            pend_t = np.asarray(pt if pt is not None else (), dtype=object)
-        else:
-            seed_first = seed_deny = _ABSENT
-            pend_us = np.empty(0, dtype=np.int64)
-            pend_t = np.empty(0, dtype=object)
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-            if len(pend_us):
-                us_all = np.concatenate([pend_us, pdf["__us"].to_numpy(dtype=np.int64)])
-                t_all = np.concatenate([pend_t, pdf["__t"].to_numpy(dtype=object)])
-            else:  # empty buffer (the common case): no concat copies
-                us_all = pdf["__us"].to_numpy(dtype=np.int64)
-                t_all = pdf["__t"].to_numpy(dtype=object)
-        else:  # timeout invocation: release from the buffer alone
-            us_all, t_all = pend_us, pend_t
-        order = np.argsort(us_all, kind="stable")
-        us_all, t_all = us_all[order], t_all[order]
-        # released prefix: strictly below the watermark (future arrivals
-        # are ≥ wm, so strictness keeps the no-retraction guarantee even
-        # for a future event AT the watermark)
-        cut = int(np.searchsorted(us_all, wm_us, side="left"))
-        ready_us, ready_t = us_all[:cut], t_all[:cut]
-        rest_us, rest_t = us_all[cut:], t_all[cut:]
-        hit = None
-        if len(ready_us):
-            hit, last_first, seed_first, seed_deny = _decide_spans(
-                ready_us, ready_t, first, then, deny_list, seed_first, seed_deny
-            )
-        state.update(
-            (
-                bool(seed_first != _ABSENT),
-                int(seed_first) if seed_first != _ABSENT else 0,
-                bool(seed_deny != _ABSENT),
-                int(seed_deny) if seed_deny != _ABSENT else 0,
-                # tolist() converts in C (r13): the per-element Python
-                # loops dominated the no-pending path's state write
-                rest_us.tolist(),
-                [str(x) for x in rest_t],
-            )
-        )
-        if len(rest_us):
-            # wake this key when the watermark passes its oldest pending
-            # event, even if no new rows arrive for it (ms floor: wm > ts
-            # in ms implies wm_us > pend_us — strict release preserved)
-            state.setTimeoutTimestamp(max(int(rest_us.min() // 1000), wm_ms + 1))
-        if hit is not None and hit.any():
-            yield pd.DataFrame(
-                {
-                    "user": np.repeat(key[0], int(hit.sum())),
-                    "start_us": last_first[hit],
-                    "end_us": ready_us[hit],
-                }
-            )
-
-    return match
-
-
-def streaming_pattern_spans_ooo(
-    events: DataFrame,
-    first: str,
-    then: str,
-    deny: list[str] | None = None,
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """``streaming_pattern_spans`` for OUT-OF-ORDER arrival: per-user
-    event-time disorder up to ``watermark`` is absorbed by a state buffer
-    and decisions are made only over the watermark-released prefix —
-    semantics remain EXACTLY the batch window pass (q137's SQL), including
-    strict-precedence µs ties across release boundaries. Rows later than
-    the watermark bound are dropped (the standard contract); state per
-    user is 4 scalars + the inside-the-bound buffer. Emission stays
-    append-mode final. NULL users/timestamps are excluded at intake."""
-    deny = deny or []
-    types = {first, then, *deny}
-    user_field = next(f for f in events.schema.fields if f.name == user_col)
-    ev = (
-        events.withWatermark(ts_col, watermark)
-        .filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
-        .filter(F.col(type_col).isin(*types))
-        .select(
-            F.col(user_col).alias("user"),
-            F.col(type_col).alias("__t"),
-            F.unix_micros(F.col(ts_col)).alias("__us"),
-            # the watermark-tagged TIMESTAMP column must survive the
-            # projection — event-time timeout resolves its delay through
-            # this attribute; the matcher ignores it (decisions are on the
-            # integer µs)
-            F.col(ts_col).alias("__ts"),
-        )
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("user", user_field.dataType),
-            T.StructField("start_us", T.LongType()),
-            T.StructField("end_us", T.LongType()),
-        ]
-    )
-    out = ev.groupBy("user").applyInPandasWithState(
-        _make_buffered_span_matcher(first, then, set(deny)),
-        outputStructType=out_schema,
-        stateStructType=BUFFERED_SPANS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return out.select(F.col("user").alias(user_col), "start_us", "end_us")
-
-
-def _make_buffered_funnel_matcher(steps: list[str]):
-    k = len(steps)
-
-    def match(key, pdfs, state: GroupState):
-        wm_ms = state.getCurrentWatermarkMs()
-        wm_us = np.int64(wm_ms) * 1000
-        if state.exists:
-            stored = state.get
-            t = [int(x) for x in stored[:k]]
-            pus, pt = stored[k], stored[k + 1]
-            pend_us = np.asarray(pus if pus is not None else (), dtype=np.int64)
-            pend_t = np.asarray(pt if pt is not None else (), dtype=object)
-        else:
-            t = [int(_ABSENT)] * k
-            pend_us = np.empty(0, dtype=np.int64)
-            pend_t = np.empty(0, dtype=object)
-        before = sum(1 for x in t if x != _ABSENT)
-        parts = [p for p in pdfs if len(p)]
-        if parts:
-            pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-            us_all = np.concatenate([pend_us, pdf["__us"].to_numpy(dtype=np.int64)])
-            t_all = np.concatenate([pend_t, pdf["__t"].to_numpy(dtype=object)])
-        else:  # timeout invocation
-            us_all, t_all = pend_us, pend_t
-        order = np.argsort(us_all, kind="stable")
-        us_all, t_all = us_all[order], t_all[order]
-        cut = int(np.searchsorted(us_all, wm_us, side="left"))
-        if cut:
-            t = _advance_funnel(us_all[:cut], t_all[:cut], t, steps)
-        rest_us, rest_t = us_all[cut:], t_all[cut:]
-        after = sum(1 for x in t if x != _ABSENT)
-        state.update(
-            tuple(t) + (rest_us.tolist(), [str(x) for x in rest_t])
-        )
-        if len(rest_us):
-            state.setTimeoutTimestamp(max(int(rest_us.min() // 1000), wm_ms + 1))
-        if after > before:
-            yield pd.DataFrame(
-                {
-                    "user": [key[0]],
-                    "reached": [after],
-                    **{
-                        f"us{i + 1}": [t[i] if t[i] != _ABSENT else None]
-                        for i in range(k)
-                    },
-                }
-            )
-
-    return match
-
-
-def streaming_funnel_trajectories_ooo(
-    events: DataFrame,
-    steps: list[str],
-    watermark: str = "1 hour",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """``streaming_funnel_trajectories`` for OUT-OF-ORDER arrival — the
-    same watermark-buffer machinery as ``streaming_pattern_spans_ooo``:
-    per-user events buffer inside the watermark bound, the released
-    prefix advances the carried first-touch vector through the SAME core
-    as the in-order matcher (``_advance_funnel``), and event-time
-    timeouts wake users whose buffers outlive their arrivals. Emission
-    stays UPDATE-mode with the same finality argument: releases happen in
-    event-time order, so a us_j, once set from a released prefix, is the
-    true first touch (no earlier qualifying event can still arrive inside
-    the declared bound). Rows later than the bound are dropped — the
-    standard watermark contract."""
-    if not steps:
-        raise ValueError("streaming_funnel_trajectories_ooo: empty step list")
-    user_field = next(f for f in events.schema.fields if f.name == user_col)
-    ev = (
-        events.withWatermark(ts_col, watermark)
-        .filter(F.col(ts_col).isNotNull() & F.col(user_col).isNotNull())
-        .filter(F.col(type_col).isin(*steps))
-        .select(
-            F.col(user_col).alias("user"),
-            F.col(type_col).alias("__t"),
-            F.unix_micros(F.col(ts_col)).alias("__us"),
-            # the watermark-tagged timestamp must survive the projection
-            # (event-time timeout resolves its delay through it)
-            F.col(ts_col).alias("__ts"),
-        )
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("user", user_field.dataType),
-            T.StructField("reached", T.IntegerType()),
-            *[T.StructField(f"us{i + 1}", T.LongType()) for i in range(len(steps))],
-        ]
-    )
-    state_schema = (
-        ", ".join(f"t{i + 1} bigint" for i in range(len(steps)))
-        + ", pend_us array<bigint>, pend_t array<string>"
-    )
-    out = ev.groupBy("user").applyInPandasWithState(
-        _make_buffered_funnel_matcher(list(steps)),
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return out.select(
-        F.col("user").alias(user_col), "reached", *[f"us{i + 1}" for i in range(len(steps))]
-    )
+    ``watermark`` as in ``streaming_pattern_spans``: None keeps k bigints
+    of state per user under the ordering contract, a delay buffers the
+    disorder inside the bound. An empty ``steps`` raises ``ValueError``."""
+    kernel = _Funnel(steps)
+    return _match_stream(events, kernel, watermark, user_col, ts_col, type_col)

@@ -28,6 +28,12 @@ identical commit discipline; the layout and its guarantees are unchanged:
 All paths go through the Hadoop FileSystem API, so behavior is identical
 on local/HDFS/S3 (an ``os.path`` probe is always false remotely and would
 silently reset the store).
+
+The CLI's keyed load (``sources/sinks.py::keyed_parquet_upsert``) stays a
+separate path on purpose: it must publish plain ``<study>/<target>/``
+parquet tables that any reader opens without resolving markers, and a
+one-shot batch load has no replayed epochs to guard. This store's
+versions and markers serve the streaming sinks' contract instead.
 """
 
 from __future__ import annotations

@@ -294,7 +294,7 @@ def test_apply_components_delta_insert_only_and_delete_to_singletons(spark):
 
 # ---------------------------------------------------------------------------
 # out-of-order streaming pattern spans (streaming/patterns.py::
-# streaming_pattern_spans_ooo)
+# streaming_pattern_spans with a watermark)
 # ---------------------------------------------------------------------------
 
 
@@ -314,7 +314,7 @@ def test_ooo_spans_late_anchor_and_late_deny_change_decisions(spark, tmp_path):
     import time as _time
 
     from kf_task_fhir_etl_spark.streaming.events import run_stream_to_memory
-    from kf_task_fhir_etl_spark.streaming.patterns import streaming_pattern_spans_ooo
+    from kf_task_fhir_etl_spark.streaming.patterns import streaming_pattern_spans
 
     schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
     b1 = [
@@ -342,7 +342,7 @@ def test_ooo_spans_late_anchor_and_late_deny_change_decisions(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    spans = streaming_pattern_spans_ooo(
+    spans = streaming_pattern_spans(
         stream, "view", "purchase", ["error"], watermark="3 hours"
     )
     run_stream_to_memory(spans, "ooo_unit_mem", output_mode="append")
@@ -869,7 +869,7 @@ def test_ooo_funnel_late_earlier_step_still_advances(spark, tmp_path):
     import time as _time
 
     from kf_task_fhir_etl_spark.streaming.events import run_stream_to_memory
-    from kf_task_fhir_etl_spark.streaming.patterns import streaming_funnel_trajectories_ooo
+    from kf_task_fhir_etl_spark.streaming.patterns import streaming_funnel_trajectories
 
     schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
     b1 = [
@@ -892,7 +892,7 @@ def test_ooo_funnel_late_earlier_step_still_advances(spark, tmp_path):
     stream = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    traj = streaming_funnel_trajectories_ooo(
+    traj = streaming_funnel_trajectories(
         stream, ["view", "click", "purchase"], watermark="3 hours"
     )
     run_stream_to_memory(traj, "ooof_unit_mem", output_mode="update")

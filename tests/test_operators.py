@@ -343,7 +343,9 @@ def test_fixpoint_operators_job_shape(spark):
     On a path of n nodes from node 0, sssp_distances, then
     apply_sssp_inserts with a shortcut onto node 1, then
     connected_components each take n rounds (n - 1 productive + the
-    confirmation round), so one more node adds one round to each call.
+    confirmation round); k_core (k=2) of the path closed into a triangle
+    at 0-1-2 peels one chain node a round. So one more node adds one
+    round to each call.
     Jobs are counted over one job group. Inside the static scope a round
     is ONE job; adaptive execution would submit every shuffle-map and
     broadcast stage as a job of its own (6 per shortest-path round, 7
@@ -356,6 +358,7 @@ def test_fixpoint_operators_job_shape(spark):
     sc = spark.sparkContext
     source = spark.createDataFrame([(0,)], "node bigint")
     shortcut = spark.createDataFrame([(0, 1, 1)], "src bigint, dst bigint, w bigint")
+    triangle = spark.createDataFrame([(0, 2)], "id_a bigint, id_b bigint")
 
     def jobs(n: int) -> int:
         heavy = spark.createDataFrame(
@@ -369,20 +372,25 @@ def test_fixpoint_operators_job_shape(spark):
             dist = graph.sssp_distances(heavy, source)
             dist = graph_delta.apply_sssp_inserts(dist, heavy.unionByName(shortcut), shortcut)
             comps = connected_components(nodes, pairs)
+            core = graph.k_core(pairs.unionByName(triangle), 2, "id_a", "id_b")
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert {r["node"]: r["dist"] for r in dist.collect()} == {
             i: 1 + 100 * (i - 1) if i else 0 for i in range(n)
         }
         assert {r["component"] for r in comps.collect()} == {0}
+        assert {(r["node"], r["deg"]) for r in core.collect()} == {(0, 2), (1, 2), (2, 2)}
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     five, six = jobs(5), jobs(6)
-    assert six - five == 1 + 1 + 1
+    assert six - five == 1 + 1 + 1 + 1
     # sssp: 5 rounds + the source state's distinct, planned adaptively
     # before the scope opens; apply: 5 rounds + the broadcast of the
-    # inserted edges in its seed round; components: 5 rounds
-    assert five == 6 + 6 + 5
+    # inserted edges in its seed round; components: 5 rounds; k_core: 3
+    # rounds (2 peels + the confirmation) + the edge normalization's
+    # distinct, planned adaptively before the scope opens, + the count of
+    # the normalized edges
+    assert five == 6 + 6 + 5 + 5
 
 
 def _session_plan_settings(spark) -> tuple[str, str]:

@@ -45,12 +45,16 @@ EXTRA_SCOPE = ["__spark_entry__.py"]
 # empty), and test_waivers_reference_real_out_of_window_entries FAILS on the
 # leftover dict until it is re-justified or cleared — a stale waiver can
 # neither mask a later change to the waived entry nor linger silently.
-WAIVER_ROUND = "round 12:"
-# r13: EMPTY (VERDICT r12 What's-wrong #1 / Next #1) — every r12 waiver is
-# retired through the window instead: the twelve waived entries lead the
-# r13 _CHECK_FIRST, and every entry this round's optimization touches is
-# rotated into the window rather than waived.
-WAIVERS: dict[str, str] = {}
+WAIVER_ROUND = "round 13:"
+# One waiver: the streaming-matcher collapse dirties q145/q147/q153/q158, and
+# the window has room for three of them beside the 47 earlier dirty entries.
+WAIVERS: dict[str, str] = {
+    "q145_streaming_pattern_spans": (
+        "the benchmark's graph_stream_dedup workload checks q145 against its "
+        "DuckDB oracle on every pass, and the in-window q153 runs the same "
+        "engine and span kernel over a disordered replay of the same events"
+    ),
+}
 
 # Names resolved dynamically at runtime that static analysis cannot follow:
 # referencing the name makes the symbol depend on EVERY symbol in the mapped

@@ -380,3 +380,36 @@ def test_cdc_stream_rejects_reserved_column_names(spark, tmp_path):
             stream.withColumnRenamed("seq", "__op"),
             str(tmp_path / "s"), ["k"], order_col="k", op_col="op",
         )
+
+
+@pytest.mark.parametrize("watermark", [None, "1 hour"])
+def test_pattern_matchers_state_shape_per_mode(spark, tmp_path, watermark):
+    """The watermark is the matchers' only mode switch, read off the
+    logical plan without starting a query: in order (None) the state is
+    the bare carry — 4 span scalars, k funnel bigints — under NoTimeout;
+    with a delay the pending buffer joins it under EventTimeTimeout. An
+    empty funnel raises in both modes."""
+    import re
+
+    from kf_task_fhir_etl_spark.streaming import patterns as spat
+
+    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string"
+    src = str(tmp_path / "shape_src")
+    spark.createDataFrame([], schema).write.parquet(src)
+    raw = spark.readStream.schema(schema).parquet(src)
+
+    def state_of(df):
+        plan = df._jdf.queryExecution().logical().toString()
+        line = next(ln for ln in plan.splitlines() if "FlatMapGroupsInPandasWithState" in ln)
+        return re.findall(r"StructField\((\w+),", line), line.rsplit(", ", 1)[-1]
+
+    pending = [] if watermark is None else ["pend_us", "pend_t"]
+    timeout = "NoTimeout" if watermark is None else "EventTimeTimeout"
+    spans = spat.streaming_pattern_spans(raw, "view", "purchase", ["error"], watermark=watermark)
+    assert state_of(spans) == (
+        ["has_first", "last_first", "has_deny", "last_deny", *pending], timeout
+    )
+    funnel = spat.streaming_funnel_trajectories(raw, ["view", "click"], watermark=watermark)
+    assert state_of(funnel) == (["t1", "t2", *pending], timeout)
+    with pytest.raises(ValueError, match="empty step list"):
+        spat.streaming_funnel_trajectories(raw, [], watermark=watermark)
